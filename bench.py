@@ -68,28 +68,16 @@ def main() -> None:
     # Ensure the persisted index groups exist BEFORE the sweep so (a) the
     # index-served queries genuinely answer from prebuilt artifacts and
     # (b) index_build_total below reports the real measured build+persist
-    # cost (each group manifest's build_sec) instead of silently 0. The
-    # gate checks the SAME params the consumers check — a params-stale
-    # manifest would be refused by every load, so it must be rebuilt, not
-    # reused. After persisting, drop the session caches: they were
+    # cost (each group manifest's build_sec) instead of silently 0.
+    # persist_indexes skips only groups whose manifest matches the SAME
+    # params the consumers check — a params-stale manifest would be
+    # refused by every load, so it is rebuilt, not reused. After persisting, drop the session caches: they were
     # populated by the BUILD path, and the sweep should exercise the
     # artifact-read path a warm production session actually runs.
-    from imdbmapreduce_spark import indexstore
+    from imdbmapreduce_spark import indexstore, persist_indexes
     from imdbmapreduce_spark.cache import release_shared_caches
-    from imdbmapreduce_spark.operators.dedup import _text_params, persist_text_index
-    from imdbmapreduce_spark.operators.similarity import (
-        _vector_params,
-        persist_vector_index,
-    )
 
-    from imdbmapreduce_spark.operators.dedup import _er_params, persist_er_index
-
-    if indexstore.group_manifest(sf_dir, "vector", _vector_params()) is None:
-        persist_vector_index(spark, sf_dir)
-    if indexstore.group_manifest(sf_dir, "text", _text_params()) is None:
-        persist_text_index(spark, sf_dir)
-    if indexstore.group_manifest(sf_dir, "er", _er_params()) is None:
-        persist_er_index(spark, sf_dir)
+    persist_indexes(spark, sf_dir)
     release_shared_caches()
 
     def materialize(name: str) -> None:

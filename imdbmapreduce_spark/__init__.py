@@ -26,16 +26,27 @@ def run(name: str, spark, sf_dir: str):
 
 
 def persist_indexes(spark, sf_dir: str) -> dict:
-    """Build and persist BOTH index groups (vector IVF/PQ + text dedup)
-    for a corpus; returns {group: directory}. Later sessions' ANN and
-    dedup queries then answer from the prebuilt on-disk index."""
-    from imdbmapreduce_spark.operators.dedup import persist_text_index
-    from imdbmapreduce_spark.operators.similarity import persist_vector_index
+    """Build and persist every index group (``indexstore.GROUPS``: vector
+    IVF/PQ, text dedup, ER match table) for a corpus, skipping a group
+    whose manifest is already valid under the current params; returns
+    {group: directory}. Later sessions' ANN, dedup and ER queries then
+    answer from the prebuilt on-disk index."""
+    from imdbmapreduce_spark import indexstore
+    from imdbmapreduce_spark.operators import dedup, similarity
 
-    return {
-        "vector": persist_vector_index(spark, sf_dir),
-        "text": persist_text_index(spark, sf_dir),
+    persisters = {
+        "vector": (similarity._vector_params, similarity.persist_vector_index),
+        "text": (dedup._text_params, dedup.persist_text_index),
+        "er": (dedup._er_params, dedup.persist_er_index),
     }
+    dirs = {}
+    for group in indexstore.GROUPS:
+        params, persist = persisters[group]
+        if indexstore.group_manifest(sf_dir, group, params()) is None:
+            dirs[group] = persist(spark, sf_dir)
+        else:
+            dirs[group] = indexstore._group_dir(sf_dir, group)
+    return dirs
 
 
 __all__ = [

@@ -1,13 +1,24 @@
 """Persistent index artifacts — build once, reopen in a later session.
 
-Query families here derive expensive per-corpus artifacts: the vector
-family's IVF codebook + inverted lists and PQ codebook + codes, and the
-text-dedup family's capped shingle rows, hashed shingles, Jaccard pair
-set and SimHash fingerprints. Within one session they live in the
-bounded shared cache; this module adds the real index lifecycle on top —
-write them as parquet under the warehouse dir so a LATER session answers
-queries from the prebuilt index instead of re-running the clustering/
-encoding/shingling jobs.
+Query families here derive expensive per-corpus artifacts, in three
+groups (:data:`GROUPS`): the vector family's IVF codebook + inverted
+lists, PQ codebook + codes and SemDeDup cell layout; the text-dedup
+family's capped shingle rows, hashed shingles, Jaccard pair set, SimHash
+and MinHash signatures and trained BPE tokenizer; and the ER family's
+match table and standing base entity assignment. Within one session they
+live in the bounded shared cache; this module adds the real index
+lifecycle on top — write them as parquet under the warehouse dir so a
+LATER session answers queries from the prebuilt index instead of
+re-running the clustering/encoding/shingling/closure jobs.
+
+Every artifact goes through the same two paths:
+
+- **resolve** — :func:`artifact`: shared cache, then the persisted
+  artifact (source stamp and params checked), then build. Operator
+  modules call only this; none re-implements the order.
+- **persist** — :func:`persist_group`: takes the group's build callable,
+  times it from the start (so ``build_sec`` covers every job the build
+  runs, not just the writes) and commits the manifest last.
 
 Generalizes the reference's own table persistence: the ETS tables it
 builds from the CSV are saved with ``ets:tab2file`` and restored on
@@ -25,24 +36,29 @@ Correctness hazards handled:
   (quantization scale, cell/code counts, shingle k, df cap, ...).
   Loaders pass the CURRENT module constants; any mismatch refuses the
   index — editing a tuning constant can never silently serve artifacts
-  built under the old one.
+  built under the old one. The shared-cache key is therefore just
+  (group, name, corpus): the params never need repeating there.
 - **Partial writes**: the manifest is written LAST, only after every
   artifact committed; a crashed ``persist_group`` leaves no manifest
   and the loader falls back to building.
 
 Scale: these artifacts are exactly what production systems persist
 (FAISS's IVFPQ file is the vector group's four structures; a dedup
-service's shingle/fingerprint tables are the text group's). Codebooks
-are constant-sized; lists/codes/shingle rows are o(corpus) slim rows —
-partitioned parquet, readable with pruning by any number of executors.
+service's shingle/fingerprint tables are the text group's; an MDM
+service's match table is the ER group's). Codebooks are constant-sized;
+lists/codes/shingle rows/pairs are o(corpus) slim rows — partitioned
+parquet, readable with pruning by any number of executors.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from imdbmapreduce_spark.cache import shared_cache
 
 # group -> (source parquet file used for the staleness stamp)
 GROUPS = {
@@ -58,15 +74,6 @@ GROUPS = {
 # index-served status even when the scan hides behind a shared-cache
 # InMemoryRelation. A counter, not a log: zero growth.
 load_count = 0
-# the vector group's artifact set (fixed — persist_group checks it)
-INDEX_ARTIFACTS = (
-    "ivf_codebook",
-    "ivf_lists",
-    "pq_codebook",
-    "pq_codes",
-    "dedup_codebook",
-    "dedup_cells",
-)
 _MANIFEST = "_INDEX_MANIFEST.json"
 
 
@@ -132,34 +139,53 @@ def load_group_artifact(
     return spark.read.parquet(os.path.join(_group_dir(sf_dir, group), name))
 
 
+def artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    group: str,
+    name: str,
+    params: dict,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """Session-cache one index artifact, preferring the PERSISTED copy.
+
+    Resolution order: shared cache → on-disk parquet artifact (source
+    stamp and ``params`` checked) → ``build()``. A cold session with a
+    persisted index therefore answers without re-running the build jobs —
+    the reference's save/restore lifecycle (ets:tab2file,
+    /root/reference/Code/csv_to_ets.erl:63-74) applied to every group.
+    """
+    return shared_cache(
+        spark,
+        (group, name, sf_dir),
+        lambda: load_group_artifact(spark, sf_dir, group, name, params) or build(),
+    )
+
+
 def persist_group(
     spark: SparkSession,
     sf_dir: str,
     group: str,
-    artifacts: dict[str, DataFrame],
+    build: Callable[[], dict[str, DataFrame]],
     params: dict | None = None,
-    build_t0: float | None = None,
 ) -> str:
-    """Write a group's artifacts as parquet + manifest; returns the
-    group dir. Overwrites any previous index for this (corpus, group);
-    the manifest lands last so readers never see a torn index.
+    """Build a group's artifacts and write them as parquet + manifest;
+    returns the group dir. Overwrites any previous index for this
+    (corpus, group); the manifest lands last so readers never see a torn
+    index.
 
-    ``build_t0``: monotonic timestamp at which the CALLER started
-    building the artifact frames. Artifact builds can run real jobs
-    before this function is entered (shared-cache materializations,
-    closure checkpoints), so the manifest's ``build_sec`` must cover
-    them — a persist-window-only number understates the true build cost
-    (the r12 verdict measured the ER build ~20-40 s at sf0.1 against a
-    recorded 0.9 s). Callers that construct artifacts lazily may omit
-    it; the timer then starts here, as before.
+    ``build`` returns the artifact frames. The recorded ``build_sec``
+    starts before it is called: artifact builds run real jobs before any
+    write (shared-cache materializations, closure checkpoints), and a
+    write-window-only number understates the true build cost (the r12
+    verdict measured the ER build ~20-40 s at sf0.1 against a recorded
+    0.9 s).
     """
     import shutil
     import time
 
     if group not in GROUPS:
         raise ValueError(f"unknown artifact group {group!r}")
-    if not artifacts:
-        raise ValueError("no artifacts to persist")
     # Stamp the source BEFORE materializing anything: the artifacts are
     # about to be computed from the corpus as it exists NOW, so this is
     # the stamp the manifest must carry. Re-stat after the writes and
@@ -167,7 +193,10 @@ def persist_group(
     # otherwise get the NEW stamp glued onto artifacts of the OLD data,
     # silently defeating the staleness guard.
     src = _source_stamp(sf_dir, group)
-    t0 = time.monotonic() if build_t0 is None else build_t0
+    t0 = time.monotonic()
+    artifacts = build()
+    if not artifacts:
+        raise ValueError("no artifacts to persist")
     d = _group_dir(sf_dir, group)
     os.makedirs(d, exist_ok=True)
     # STAGE-THEN-SWAP: when a re-persist's artifacts were themselves
@@ -218,23 +247,3 @@ def drop_group(sf_dir: str, group: str) -> None:
 
     shutil.rmtree(_group_dir(sf_dir, group), ignore_errors=True)
 
-
-# --- vector-group compatibility surface (operators.similarity) ------------
-
-
-def manifest(sf_dir: str) -> dict | None:
-    """The vector group's manifest (back-compat name)."""
-    m = group_manifest(sf_dir, "vector")
-    if m is not None and set(m.get("artifacts", [])) != set(INDEX_ARTIFACTS):
-        return None
-    return m
-
-
-def load_artifact(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
-    if name not in INDEX_ARTIFACTS or manifest(sf_dir) is None:
-        return None
-    return spark.read.parquet(os.path.join(_group_dir(sf_dir, "vector"), name))
-
-
-def drop(sf_dir: str) -> None:
-    drop_group(sf_dir, "vector")

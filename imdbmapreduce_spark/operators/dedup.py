@@ -25,8 +25,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 from pyspark.sql.window import Window
 
+from imdbmapreduce_spark import indexstore
 from imdbmapreduce_spark.cache import (
     shared_cache,
     stable_checkpoint,
@@ -186,28 +188,13 @@ def _text_params() -> dict:
     }
 
 
-def _text_artifact(spark: SparkSession, sf_dir: str, name: str, cache_key: tuple, build):
-    """Session-cache one text-dedup artifact, preferring the PERSISTED
-    parquet copy (imdbmapreduce_spark.indexstore, group "text") — the
-    same resolution order as the vector index: shared cache → on-disk
-    index (source-stamp + params checked) → build."""
-    from imdbmapreduce_spark import indexstore
-
-    def load_or_build() -> DataFrame:
-        loaded = indexstore.load_group_artifact(
-            spark, sf_dir, "text", name, params=_text_params()
-        )
-        return loaded if loaded is not None else build()
-
-    return shared_cache(spark, cache_key, load_or_build)
-
-
 def _shingles_capped_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _text_artifact(
+    return indexstore.artifact(
         spark,
         sf_dir,
+        "text",
         "shingles_capped",
-        ("shingles_capped", sf_dir, 3, _SHINGLE_DF_CAP),
+        _text_params(),
         lambda: _shingle_rows(spark, sf_dir)
         .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
         .filter(F.col("df") <= _SHINGLE_DF_CAP)
@@ -291,21 +278,18 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
         )
 
-    return _text_artifact(
-        spark,
-        sf_dir,
-        "jaccard_pairs",
-        ("jaccard_pairs", sf_dir, 3, _SHINGLE_DF_CAP, 0.6),
-        build_pairs,
+    return indexstore.artifact(
+        spark, sf_dir, "text", "jaccard_pairs", _text_params(), build_pairs
     )
 
 
 def _shingle_hx_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _text_artifact(
+    return indexstore.artifact(
         spark,
         sf_dir,
+        "text",
         "shingle_hx",
-        ("shingle_hx", sf_dir, 3),
+        _text_params(),
         lambda: _shingle_rows(spark, sf_dir).select(
             "doc_id", F.xxhash64("shingle").alias("hx")
         ),
@@ -313,11 +297,12 @@ def _shingle_hx_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_fp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _text_artifact(
+    return indexstore.artifact(
         spark,
         sf_dir,
+        "text",
         "simhash_fp",
-        ("simhash_fp", sf_dir),
+        _text_params(),
         lambda: simhash_fingerprints(table(spark, sf_dir, "documents")),
     )
 
@@ -327,11 +312,12 @@ def _minhash_sig_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MinHash analog of the persisted SimHash fingerprints (the 64-way
     min aggregation over every hashed shingle is the expensive part of
     the LSH pipeline; band/bucket derivation from it is cheap)."""
-    return _text_artifact(
+    return indexstore.artifact(
         spark,
         sf_dir,
+        "text",
         "minhash_sig",
-        ("minhash_sig", sf_dir, _N_PERM),
+        _text_params(),
         lambda: _shingle_hx_cached(spark, sf_dir)
         .groupBy("doc_id")
         .agg(*_minhash_agg_cols()),
@@ -402,18 +388,12 @@ def persist_text_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the text-dedup artifacts and write them as the
     on-disk "text" index group; later sessions' dedup queries then skip
     the shingling/hashing jobs entirely."""
-    import time
-
-    from imdbmapreduce_spark import indexstore
-
-    t0 = time.monotonic()  # artifact builds run jobs before persist_group
     return indexstore.persist_group(
         spark,
         sf_dir,
         "text",
-        build_text_index(spark, sf_dir),
+        lambda: build_text_index(spark, sf_dir),
         params=_text_params(),
-        build_t0=t0,
     )
 
 
@@ -1181,12 +1161,25 @@ def connected_components(
     storage) so the plan doesn't grow exponentially with iterations; the
     driver holds only a scalar convergence statistic (the exact decimal
     label sum), never row data.
+
+    Node ids must be integral: the label sum is null for any other type,
+    which would end the loop after one round with labels only partly
+    propagated, so other types raise ``TypeError`` (a schema check — no
+    job runs).
     """
     sym = edges.select(
         F.col("src").alias("node"), F.col("dst").alias("nbr")
     ).unionByName(
         edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
     )
+    for frame in (sym, nodes):
+        if frame is not None and not isinstance(
+            frame.schema["node"].dataType, IntegralType
+        ):
+            raise TypeError(
+                "connected_components needs integral node ids, got "
+                f"{frame.schema['node'].dataType.simpleString()}"
+            )
     if not edges_unique:
         sym = sym.distinct()
     sym = stable_checkpoint(sym)
@@ -3815,14 +3808,7 @@ def _er_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the blocking is COMPLETE, so the base restriction of the
     full match set equals matching the base alone)."""
 
-    from imdbmapreduce_spark import indexstore
-
     def build() -> DataFrame:
-        loaded = indexstore.load_group_artifact(
-            spark, sf_dir, "er", "er_match_pairs", params=_er_params()
-        )
-        if loaded is not None:
-            return loaded
         cust = _link_postings(table(spark, sf_dir, "customer"))
         return (
             _blocked_fuzzy_pairs(cust, cust)
@@ -3831,7 +3817,9 @@ def _er_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("custkey_a", "custkey_b", "lev_dist")
         )
 
-    return shared_cache(spark, ("er_match_pairs", sf_dir), build)
+    return indexstore.artifact(
+        spark, sf_dir, "er", "er_match_pairs", _er_params(), build
+    )
 
 
 def _link_postings(cust: DataFrame) -> DataFrame:
@@ -4096,17 +4084,11 @@ def _customer_base_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the artifact an MDM deployment persists between deliveries. Both
     the batch arrival gate and its streaming twin resolve against this
     one frame, so micro-batches never recompute (or drift from) the
-    standing identities. Resolution order mirrors the text/vector
-    artifacts (round 12): shared cache → persisted "er" index group
-    (source-stamp + params checked) → build."""
-    from imdbmapreduce_spark import indexstore
+    standing identities. Resolved like every index artifact by
+    :func:`indexstore.artifact`: shared cache → persisted "er" index
+    group (source-stamp + params checked) → build."""
 
     def build() -> DataFrame:
-        loaded = indexstore.load_group_artifact(
-            spark, sf_dir, "er", "er_base_entities", params=_er_params()
-        )
-        if loaded is not None:
-            return loaded
         is_base = lambda c: (F.col(c) % _CUST_SHARD_MOD) != _CUST_SHARD_RESIDUE  # noqa: E731
         # base-base restriction of the shared match artifact — equal to
         # matching the base alone because the blocking is complete
@@ -4126,7 +4108,9 @@ def _customer_base_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges_unique=True,
         )
 
-    return shared_cache(spark, ("customer_base_entities", sf_dir), build)
+    return indexstore.artifact(
+        spark, sf_dir, "er", "er_base_entities", _er_params(), build
+    )
 
 
 def _er_params() -> dict:
@@ -4162,22 +4146,12 @@ def persist_er_index(spark: SparkSession, sf_dir: str) -> str:
     join and the base closure entirely — the `ets:tab2file` analog
     (/root/reference/Code/csv_to_ets.erl:63-74) for approximate
     identity, same lifecycle as :func:`persist_text_index`."""
-    import time
-
-    from imdbmapreduce_spark import indexstore
-
-    # The match-table and base-closure builds run their jobs (posting
-    # checkpoints, the iterative closure) INSIDE build_er_index, before
-    # persist_group ever sees a frame — start the recorded build timer
-    # here so index_build.er reports the true cost (r13 verdict task 5).
-    t0 = time.monotonic()
     return indexstore.persist_group(
         spark,
         sf_dir,
         "er",
-        build_er_index(spark, sf_dir),
+        lambda: build_er_index(spark, sf_dir),
         params=_er_params(),
-        build_t0=t0,
     )
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imdbmapreduce_spark import indexstore
 from imdbmapreduce_spark.cache import (
     shared_cache,
     stable_checkpoint,
@@ -811,105 +812,87 @@ def _vector_params() -> dict:
     }
 
 
-def _vector_artifact(spark: SparkSession, sf_dir: str, name: str, build):
-    """Session-cache one index artifact, preferring the PERSISTED copy.
-
-    Resolution order: session shared cache → on-disk parquet index
-    (imdbmapreduce_spark.indexstore, with source-staleness AND build-
-    params checking) → build from scratch. A cold session with a
-    persisted index therefore answers ANN queries without re-running the
-    clustering/encoding jobs — the reference's own save/restore
-    lifecycle (ets:tab2file, /root/reference/Code/csv_to_ets.erl:63-74)
-    applied to vector indexes.
-    """
-    from imdbmapreduce_spark import indexstore
-
-    def load_or_build() -> DataFrame:
-        loaded = indexstore.load_group_artifact(
-            spark, sf_dir, "vector", name, params=_vector_params()
-        )
-        return loaded if loaded is not None else build()
-
-    return shared_cache(spark, (name, sf_dir), load_or_build)
-
-
 def _ivf_codebook_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _vector_artifact(
-        spark, sf_dir, "ivf_codebook", lambda: _ivf_codebook(spark, sf_dir)
+    return indexstore.artifact(
+        spark,
+        sf_dir,
+        "vector",
+        "ivf_codebook",
+        _vector_params(),
+        lambda: _ivf_codebook(spark, sf_dir),
     )
 
 
 def _ivf_lists_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = _shared_components(spark, sf_dir)
     cents = _ivf_codebook_cached(spark, sf_dir)
-    return _vector_artifact(
+    return indexstore.artifact(
         spark,
         sf_dir,
+        "vector",
         "ivf_lists",
+        _vector_params(),
         lambda: _cell_assignment(ex.filter(F.col("vec_id") >= _N_PROBES), cents)
         .filter(F.col("cr") == 1)
         .select("vec_id", "cell"),
     )
 
 
-def _dedup_codebook_cached(
-    spark: SparkSession, sf_dir: str, n_cells: int | None = None
-) -> DataFrame:
+def _dedup_codebook_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adaptive-C codebook for the SemDeDup layout, built over ALL
-    vectors (dedup has no probe/corpus split). ``n_cells`` pins a fixed
-    C for tests; the default resolves :func:`_dedup_cell_count` from the
-    corpus count. The fixed-C path is session-cached only (never
-    persisted) so a test pin can't poison the on-disk index."""
+    vectors (dedup has no probe/corpus split); C resolves
+    :func:`_dedup_cell_count` from the corpus count."""
     ex = _shared_components(spark, sf_dir)
-    if n_cells is not None:
-        return shared_cache(
-            spark,
-            ("dedup_codebook_fixed", sf_dir, n_cells),
-            lambda: _lloyd_codebook(ex, n_cells),
-        )
-    return _vector_artifact(
+    return indexstore.artifact(
         spark,
         sf_dir,
+        "vector",
         "dedup_codebook",
+        _vector_params(),
         lambda: _lloyd_codebook(
             ex, _dedup_cell_count(table(spark, sf_dir, "embeddings").count())
         ),
     )
 
 
-def _dedup_cells_cached(
-    spark: SparkSession, sf_dir: str, n_cells: int | None = None
-) -> DataFrame:
+def _dedup_cells_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cell) for EVERY vector under the adaptive dedup codebook
     — the persisted cell layout :func:`neardup_embedding_cells` grams
     within."""
     ex = _shared_components(spark, sf_dir)
-    cents = _dedup_codebook_cached(spark, sf_dir, n_cells)
-    build = (
+    cents = _dedup_codebook_cached(spark, sf_dir)
+    return indexstore.artifact(
+        spark,
+        sf_dir,
+        "vector",
+        "dedup_cells",
+        _vector_params(),
         lambda: _cell_assignment(ex, cents)
         .filter(F.col("cr") == 1)
-        .select("vec_id", "cell")
+        .select("vec_id", "cell"),
     )
-    if n_cells is not None:
-        return shared_cache(
-            spark, ("dedup_cells_fixed", sf_dir, n_cells), build
-        )
-    return _vector_artifact(spark, sf_dir, "dedup_cells", build)
 
 
 def _pq_codebook_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _vector_artifact(
-        spark, sf_dir, "pq_codebook", lambda: _pq_codebook(spark, sf_dir)
+    return indexstore.artifact(
+        spark,
+        sf_dir,
+        "vector",
+        "pq_codebook",
+        _vector_params(),
+        lambda: _pq_codebook(spark, sf_dir),
     )
 
 
 def _pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = _shared_components(spark, sf_dir)
     cents = _pq_codebook_cached(spark, sf_dir)
-    return _vector_artifact(
+    return indexstore.artifact(
         spark,
         sf_dir,
+        "vector",
         "pq_codes",
+        _vector_params(),
         lambda: _pq_assign(ex.filter(F.col("vec_id") >= _N_PROBES), cents),
     )
 
@@ -932,17 +915,12 @@ def persist_vector_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the six index artifacts and write them as the
     on-disk index; returns the index directory. Later sessions' ann_*
     queries then answer from the prebuilt index."""
-    import time
-
-    from imdbmapreduce_spark import indexstore
-
-    t0 = time.monotonic()  # artifact builds run jobs before persist_group
-    artifacts = build_vector_index(spark, sf_dir)
-    missing = set(indexstore.INDEX_ARTIFACTS) - set(artifacts)
-    if missing:
-        raise ValueError(f"missing index artifacts: {sorted(missing)}")
     return indexstore.persist_group(
-        spark, sf_dir, "vector", artifacts, params=_vector_params(), build_t0=t0
+        spark,
+        sf_dir,
+        "vector",
+        lambda: build_vector_index(spark, sf_dir),
+        params=_vector_params(),
     )
 
 

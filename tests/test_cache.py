@@ -106,7 +106,7 @@ def test_sweep_does_not_accumulate_storage(spark, sf_dir):
 
 def test_package_facade_runs_queries_and_persists_indexes(spark, sf_dir, tmp_path, monkeypatch):
     """The public API surface: queries()/run() reach the registry, and
-    persist_indexes writes both index groups with valid manifests."""
+    persist_indexes writes every index group with a valid manifest."""
     import imdbmapreduce_spark as eng
     from imdbmapreduce_spark import indexstore
     from imdbmapreduce_spark.cache import release_shared_caches
@@ -118,12 +118,12 @@ def test_package_facade_runs_queries_and_persists_indexes(spark, sf_dir, tmp_pat
     release_shared_caches()
     try:
         dirs = eng.persist_indexes(spark, sf_dir)
-        assert set(dirs) == {"vector", "text"}
-        assert indexstore.manifest(sf_dir) is not None
-        assert indexstore.group_manifest(sf_dir, "text") is not None
+        assert set(dirs) == set(indexstore.GROUPS)
+        for group in indexstore.GROUPS:
+            assert indexstore.group_manifest(sf_dir, group) is not None, group
     finally:
-        indexstore.drop_group(sf_dir, "vector")
-        indexstore.drop_group(sf_dir, "text")
+        for group in indexstore.GROUPS:
+            indexstore.drop_group(sf_dir, group)
         release_shared_caches()
 
 
@@ -152,7 +152,7 @@ def test_torn_persist_leaves_no_manifest(spark, sf_dir, tmp_path, monkeypatch):
         artifacts = dict(artifacts, shingle_hx=bad)
         with pytest.raises(Exception, match="torn-write"):
             indexstore.persist_group(
-                spark, sf_dir, "text", artifacts, params=_text_params()
+                spark, sf_dir, "text", lambda: artifacts, params=_text_params()
             )
         assert indexstore.group_manifest(sf_dir, "text") is None
         assert (
@@ -164,7 +164,11 @@ def test_torn_persist_leaves_no_manifest(spark, sf_dir, tmp_path, monkeypatch):
         # and a subsequent CLEAN persist fully recovers
         release_shared_caches()
         indexstore.persist_group(
-            spark, sf_dir, "text", build_text_index(spark, sf_dir), params=_text_params()
+            spark,
+            sf_dir,
+            "text",
+            lambda: build_text_index(spark, sf_dir),
+            params=_text_params(),
         )
         assert indexstore.group_manifest(sf_dir, "text", _text_params()) is not None
     finally:
@@ -172,10 +176,10 @@ def test_torn_persist_leaves_no_manifest(spark, sf_dir, tmp_path, monkeypatch):
         release_shared_caches()
 
 
-def test_persist_group_build_t0_covers_prebuild_work(spark, sf_dir, tmp_path, monkeypatch):
-    """``build_sec`` must cover work done BEFORE persist_group is entered
-    when the caller passes ``build_t0`` (r13 verdict task 5: the ER
-    artifacts materialize during build_er_index, so a persist-window-only
+def test_persist_group_build_sec_covers_artifact_build(spark, sf_dir, tmp_path, monkeypatch):
+    """``build_sec`` must cover the work the build callable does before
+    any artifact is written (r13 verdict task 5: the ER artifacts
+    materialize while build_er_index runs, so a persist-window-only
     timer understated the true build cost by ~30x)."""
     import time
 
@@ -187,18 +191,53 @@ def test_persist_group_build_t0_covers_prebuild_work(spark, sf_dir, tmp_path, mo
     release_shared_caches()
     try:
         artifacts = build_text_index(spark, sf_dir)
-        # a build that "started" 5 s before persist_group was entered:
-        # the manifest must record the full window, not the write window
-        t0 = time.monotonic() - 5.0
+
+        # a build that spends 1 s before handing over its frames: the
+        # manifest must record the full window, not the write window
+        def slow_build():
+            time.sleep(1.0)
+            return artifacts
+
         indexstore.persist_group(
-            spark, sf_dir, "text", artifacts, params=_text_params(), build_t0=t0
+            spark, sf_dir, "text", slow_build, params=_text_params()
         )
         m = indexstore.group_manifest(sf_dir, "text", _text_params())
         assert m is not None
-        assert m["build_sec"] >= 5.0
+        assert m["build_sec"] >= 1.0
     finally:
         indexstore.drop_group(sf_dir, "text")
         release_shared_caches()
+
+
+def test_persisted_artifacts_resolve_only_through_indexstore():
+    """One resolution order (shared cache → persisted artifact → build)
+    lives in ``indexstore.artifact``; operator modules must not re-inline
+    it. Spark-free source scan: ``load_group_artifact`` may be referenced
+    only in indexstore.py and in lm's BPE loader (which keeps its own
+    memo of the collected merge rows)."""
+    import ast
+    import pathlib
+
+    def refs(node, fn, out):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                refs(child, child.name, out)
+                continue
+            for field in ("id", "attr", "name"):
+                if getattr(child, field, None) == "load_group_artifact":
+                    out.add(fn)
+            refs(child, fn, out)
+        return out
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "imdbmapreduce_spark"
+    found = {}
+    for path in sorted(pkg.rglob("*.py")):
+        fns = refs(ast.parse(path.read_text(encoding="utf-8")), None, set())
+        if fns:
+            found[path.relative_to(pkg).as_posix()] = fns
+    assert "indexstore.py" in found, "the scan must see indexstore's own use"
+    found.pop("indexstore.py")
+    assert found == {"operators/lm.py": {"_bpe_load_persisted"}}, found
 
 
 def test_stable_checkpoint_durable_mode_is_bit_identical(spark, tmp_path):

@@ -256,6 +256,24 @@ def test_connected_components_chain_converges_fast(spark):
     assert {r.cluster_id for r in out} == {0}
 
 
+def test_connected_components_rejects_non_integral_ids(spark):
+    """String ids would null the decimal label sum and stop the loop
+    after one round with labels only partly propagated — refused up
+    front instead, from the schema alone, for both the edge list and an
+    explicit node universe."""
+    import pytest
+
+    from imdbmapreduce_spark.operators.dedup import connected_components
+
+    str_edges = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+    with pytest.raises(TypeError, match="integral"):
+        connected_components(None, str_edges)
+    long_edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    str_nodes = spark.createDataFrame([("1",), ("2",), ("3",)], "node string")
+    with pytest.raises(TypeError, match="integral"):
+        connected_components(str_nodes, long_edges)
+
+
 def test_persisted_text_index_cold_session_roundtrip(spark, sf_dir, tmp_path, monkeypatch):
     """Text-index lifecycle (mirrors the vector group's test): persist
     the shingle/pair/fingerprint artifacts, empty the session cache, and

@@ -217,7 +217,10 @@ def test_persisted_index_cold_session_roundtrip(spark, sf_dir, tmp_path, monkeyp
 
     from imdbmapreduce_spark import indexstore
     from imdbmapreduce_spark.cache import release_shared_caches
-    from imdbmapreduce_spark.operators.similarity import persist_vector_index
+    from imdbmapreduce_spark.operators.similarity import (
+        _vector_params,
+        persist_vector_index,
+    )
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
     release_shared_caches()
@@ -227,10 +230,12 @@ def test_persisted_index_cold_session_roundtrip(spark, sf_dir, tmp_path, monkeyp
             for r in registry.get("ann_ivfpq_topk").fn(spark, sf_dir).collect()
         )
         idx_dir = persist_vector_index(spark, sf_dir)
-        assert indexstore.manifest(sf_dir) is not None
+        assert indexstore.group_manifest(sf_dir, "vector", _vector_params()) is not None
 
         release_shared_caches()  # cold: nothing cached in-session
-        files = indexstore.load_artifact(spark, sf_dir, "ivf_lists").inputFiles()
+        files = indexstore.load_group_artifact(
+            spark, sf_dir, "vector", "ivf_lists", _vector_params()
+        ).inputFiles()
         assert files and all(str(tmp_path) in f for f in files), files
 
         # provenance proof: poison every index BUILD function — if the
@@ -258,11 +263,16 @@ def test_persisted_index_cold_session_roundtrip(spark, sf_dir, tmp_path, monkeyp
         m["source"]["size"] += 1
         with open(mpath, "w") as f:
             json.dump(m, f)
-        assert indexstore.manifest(sf_dir) is None
-        assert indexstore.load_artifact(spark, sf_dir, "ivf_lists") is None
+        assert indexstore.group_manifest(sf_dir, "vector", _vector_params()) is None
+        assert (
+            indexstore.load_group_artifact(
+                spark, sf_dir, "vector", "ivf_lists", _vector_params()
+            )
+            is None
+        )
 
-        indexstore.drop(sf_dir)
-        assert indexstore.manifest(sf_dir) is None
+        indexstore.drop_group(sf_dir, "vector")
+        assert indexstore.group_manifest(sf_dir, "vector") is None
     finally:
         release_shared_caches()
 
@@ -303,9 +313,9 @@ def test_dedup_cell_count_is_sqrt_adaptive(spark, sf_dir):
     that keeps assignment and in-cell gram work balanced at O(n^1.5·d) —
     and the persisted cell layout actually uses it: distinct cells <= C
     (Lloyd can empty a cell, never add one) and every vector is assigned
-    exactly once. The fixed-C override (tests' knob) is honored and, at
-    C=1, reproduces the all-pairs reachable set: one cell holding the
-    whole corpus."""
+    exactly once. A C=1 layout built from the same codebook and
+    assignment steps reproduces the all-pairs reachable set: one cell
+    holding the whole corpus."""
     import math
 
     from imdbmapreduce_spark.cache import release_shared_caches
@@ -326,7 +336,12 @@ def test_dedup_cell_count_is_sqrt_adaptive(spark, sf_dir):
         n_cells = cells.select("cell").distinct().count()
         assert 1 < n_cells <= want_c
 
-        one = S._dedup_cells_cached(spark, sf_dir, n_cells=1)
+        ex = S._shared_components(spark, sf_dir)
+        one = (
+            S._cell_assignment(ex, S._lloyd_codebook(ex, 1))
+            .filter(F.col("cr") == 1)
+            .select("vec_id", "cell")
+        )
         assert one.select("cell").distinct().count() == 1
         assert one.count() == n
     finally:

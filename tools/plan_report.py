@@ -76,23 +76,15 @@ def main() -> None:
     spark = get_spark(app_name="plan-report")
     jvm = spark._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    from imdbmapreduce_spark import cache, indexstore
-    from imdbmapreduce_spark.operators.dedup import persist_text_index
-    from imdbmapreduce_spark.operators.similarity import persist_vector_index
+    from imdbmapreduce_spark import cache, indexstore, persist_indexes
 
-    # Persist both index groups first (cheap at sf0.001) so index-served
+    # Persist every index group first (cheap at sf0.001) so index-served
     # queries exercise their warm path — the lifecycle bench.py models.
     # Then drop the session caches: they were populated by the BUILD
     # path (no index existed yet), and the point of the census flag is
     # the cold-session-with-index resolution order (disk artifact →
     # cache), so consumers must re-resolve through the index.
-    from imdbmapreduce_spark.operators.dedup import _text_params
-    from imdbmapreduce_spark.operators.similarity import _vector_params
-
-    if indexstore.group_manifest(sf_dir, "vector", _vector_params()) is None:
-        persist_vector_index(spark, sf_dir)
-    if indexstore.group_manifest(sf_dir, "text", _text_params()) is None:
-        persist_text_index(spark, sf_dir)
+    persist_indexes(spark, sf_dir)
     cache.release_shared_caches()
 
     iroot = os.path.abspath(indexstore.index_root())
