@@ -8,8 +8,13 @@ the 100 TB path is identical, just with a bigger directory.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from imdbmapreduce_spark.cache import register_release_hook
 
 TABLES = (
     "region",
@@ -31,7 +36,50 @@ __all__ = [
     "register_views",
     "parallelize_scan",
     "normalize_events_ts",
+    "path_stamp",
 ]
+
+# Inferred parquet schemas, keyed by (applicationId, path, size,
+# mtime_ns, inference confs). Without a schema every
+# ``spark.read.parquet`` runs a Spark job to read a footer; with the memo
+# only a table's first read in a session does. A rewritten file gets a
+# new stamp and is re-inferred; the memo empties with the shared cache.
+_SCHEMAS: dict[tuple, StructType] = {}
+register_release_hook(_SCHEMAS.clear)
+
+# Session confs that change the inferred schema of a timestamp column
+# (see normalize_events_ts).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def path_stamp(path: str) -> dict:
+    """``{path, size, mtime_ns}`` of a file or directory — the staleness
+    stamp of the schema memo and of persisted index manifests."""
+    st = os.stat(path)
+    return {"path": path, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    stamp (see :data:`_SCHEMAS`)."""
+    try:
+        stamp = path_stamp(path)
+    except OSError:
+        return spark.read.parquet(path)  # not a local path: Spark decides
+    key = (
+        spark.sparkContext.applicationId,
+        *stamp.values(),
+        *(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def parallelize_scan(df: DataFrame) -> DataFrame:
@@ -119,8 +167,8 @@ def table(
         # See normalize_events_ts for the layout variants this absorbs.
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_events_ts(_read_parquet(spark, f"{sf_dir}/{name}.parquet"))
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -146,8 +194,6 @@ def parquet_column_minmax(sf_dir: str, name: str, col: str):
     present. Any row group with nulls still carries min/max of its
     non-null values, matching what F.min/F.max aggregate.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")

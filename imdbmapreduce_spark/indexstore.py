@@ -59,6 +59,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from imdbmapreduce_spark.cache import shared_cache
+from imdbmapreduce_spark.catalog import path_stamp
 
 # group -> (source parquet file used for the staleness stamp)
 GROUPS = {
@@ -93,9 +94,7 @@ def _group_dir(sf_dir: str, group: str) -> str:
 
 
 def _source_stamp(sf_dir: str, group: str) -> dict:
-    p = os.path.join(sf_dir, GROUPS[group])
-    st = os.stat(p)
-    return {"path": p, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
+    return path_stamp(os.path.join(sf_dir, GROUPS[group]))
 
 
 def group_manifest(sf_dir: str, group: str, params: dict | None = None) -> dict | None:

@@ -20,8 +20,9 @@ Two layers here:
    Co-member counting is a self-semi-join + hash agg: one shuffle, no
    arrays materialized.
 2. A movies-schema API (``array<string>`` casts) matching the reference's
-   data model 1:1 — map-only plans using a driver-side probe lookup +
-   ``array_intersect`` (no shuffle at all for the title query).
+   data model 1:1 — a driver-side probe lookup + ``array_intersect`` in
+   one scan for the title query, whose only exchange gathers its result
+   rows onto one partition for the presentation sort.
 
 Registry queries map the semantics onto the driver's testdata: orders are
 "movies", parts are "actors" (lineitem is the exploded membership table).
@@ -148,18 +149,26 @@ def title_query(movies: DataFrame, title: str) -> DataFrame:
     R7 array_intersect count → R8 level (R9 priority dedup is implicit) →
     R14 sort by (level, title).
 
-    Scale: the probe cast becomes a plan literal (the broadcast of
-    `master.erl:157,194-203`); the plan is then **map-only** — a single
-    codegen'd scan with no shuffle until the (optional) presentation sort.
+    Scale: the probe cast is fetched in ONE job — a ``collect`` of the
+    title-filtered ``actors`` column, keeping the first row in partition
+    order (the row ``head(1)`` would return, without its scan-one-
+    partition-then-scale-up retries). It becomes a plan literal (the
+    broadcast of `master.erl:157,194-203`), so the result is a single
+    codegen'd scan of the table feeding one exchange to a single
+    partition, sorted there with ``sortWithinPartitions`` — the
+    reference's master-side merge and sort (`master.erl:339-354`). A
+    global ``orderBy`` would instead add a range-partitioner sampling job
+    that re-evaluates the whole scan and ``array_intersect``. The single
+    partition is bounded: it holds exactly the rows the caller receives
+    (movies sharing at least one actor with the probe), and Spark's sort
+    spills to disk, so it is memory-bounded too.
     """
-    row = movies.filter(F.col("title") == F.lit(title)).select("actors").head(1)
-    if not row:  # unknown title → empty result, schema preserved
-        base = movies.filter(F.lit(False))
-    else:
-        base = movies
+    rows = movies.filter(F.col("title") == F.lit(title)).select("actors").collect()
+    # unknown title → empty result, schema preserved
+    base = movies if rows else movies.filter(F.lit(False))
     # cast the literal probe to the actors column's element type so the
     # plan works for any member type (string casts, bigint partkeys, ...)
-    probe = F.array(*[F.lit(a) for a in (row[0]["actors"] if row else [])]).cast(
+    probe = F.array(*[F.lit(a) for a in (rows[0]["actors"] if rows else [])]).cast(
         movies.schema["actors"].dataType
     )
     return (
@@ -168,7 +177,8 @@ def title_query(movies: DataFrame, title: str) -> DataFrame:
         .filter(F.col("n_shared") >= 1)
         .withColumn("level", level_of("n_shared"))  # R8 (R9 free)
         .select("movie_id", "title", "n_shared", "level")  # R15
-        .orderBy("level", "title")  # R14 (title path only)
+        .repartition(1)  # the master-side merge (master.erl:339-354)
+        .sortWithinPartitions("level", "title")  # R14 (title path only)
     )
 
 

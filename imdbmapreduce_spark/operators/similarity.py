@@ -1919,13 +1919,13 @@ def _pca_oracle_sql(rounds: int = _PCA_ROUNDS) -> str:
     steps = []
     for t in range(1, rounds + 1):
         steps.append(
-            f"""y{t} AS (
+            f"""y{t} AS MATERIALIZED (
       SELECT m.i AS pos, CAST(SUM(m.mn * x.xq) AS BIGINT) AS y
       FROM mn m JOIN x{t - 1} x ON m.j = x.pos GROUP BY m.i
-    ), d{t} AS (
+    ), d{t} AS MATERIALIZED (
       SELECT GREATEST((MAX(ABS(y)) + {_PCA_S} - 1) // {_PCA_S}, 1) AS dv
       FROM y{t}
-    ), x{t} AS (
+    ), x{t} AS MATERIALIZED (
       SELECT pos, CAST(y // (SELECT dv FROM d{t}) AS BIGINT) AS xq FROM y{t}
     )"""
         )

@@ -276,3 +276,51 @@ def test_stable_checkpoint_durable_mode_is_bit_identical(spark, tmp_path):
         os.path.join(dp, f) for dp, _, fs in os.walk(ckdir) for f in fs
     ]
     assert found, "durable checkpoint wrote no files"
+
+
+def test_catalog_schema_memo_skips_inference_job_and_tracks_rewrites(spark, tmp_path):
+    """``catalog.table`` infers a table's parquet schema once per file
+    stamp: a second read of the same file fires NO Spark job (no footer
+    job), a rewritten file (new size and mtime) is re-inferred, and
+    releasing the shared caches empties the memo."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from imdbmapreduce_spark import catalog
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    sc = spark.sparkContext
+
+    def read(group):
+        sc.setJobGroup(group, "catalog.table schema memo test")
+        try:
+            df = catalog.table(spark, str(tmp_path), "region")
+        finally:
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            sc.setJobGroup(None, None)
+        return df, len(jobs)
+
+    first, n_first = read("schema-memo-first")
+    again, n_again = read("schema-memo-again")
+    assert n_first == 1, "the first read infers the schema in one job"
+    assert n_again == 0, "a memoized schema must not run a footer job"
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1, 2], "r_name": ["A", "B", "C"], "r_x": [1.0, 2.0, 3.0]}),
+        path,
+    )
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    rewritten, n_rewritten = read("schema-memo-rewritten")
+    assert n_rewritten == 1, "a rewritten file must be re-inferred"
+    assert rewritten.columns == ["r_regionkey", "r_name", "r_x"]
+    assert rewritten.count() == 3
+
+    release_shared_caches()
+    _, n_released = read("schema-memo-released")
+    assert n_released == 1, "release_shared_caches must empty the memo"

@@ -79,6 +79,51 @@ def test_title_query_case_sensitive_probe(spark, movies):
     assert {r["title"] for r in rows} == {"No Overlap"}
 
 
+def _plan_edges(df):
+    """``(parent, node)`` pairs of a DataFrame's physical plan before
+    execution (the AQE wrapper's initial plan), root's parent None."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    edges, stack = [], [(None, root)]
+    while stack:
+        parent, node = stack.pop()
+        edges.append((parent, node))
+        kids = node.children()
+        stack.extend((node, kids.apply(i)) for i in range(kids.size()))
+    return edges
+
+
+def test_title_query_job_and_plan_budget(spark, movies):
+    """A Title lookup fetches its probe cast in exactly ONE job while its
+    plan is built, and the result plan gathers onto one partition only
+    directly under the final (non-global) sort: no range-partitioner
+    sampling pass, and no other collapse onto a single partition."""
+    sc = spark.sparkContext
+    sc.setJobGroup("title-plan-build", "title_query plan build")
+    try:
+        # the fixture's LAST row: a first-partition-then-scale-up fetch
+        # would need a second job to reach it
+        res = title_query(movies, "Ann Solo")
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup("title-plan-build")
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 1, f"expected ONE probe-fetch job, saw {list(jobs)}"
+    edges = _plan_edges(res)
+    parts = [
+        (parent, node.outputPartitioning().toString())
+        for parent, node in edges
+        if node.nodeName() == "Exchange"
+    ]
+    assert not [p for _, p in parts if "rangepartitioning" in p], parts
+    single = [parent for parent, p in parts if p == "SinglePartition"]
+    assert len(single) == 1, parts
+    root = edges[0][1]
+    assert single[0].equals(root) and root.nodeName() == "Sort"
+    # SortExec.global is false: the sort runs within the one partition
+    assert not getattr(root, "global")()
+
+
 def test_coactor_query_counts(spark, movies):
     rows = coactor_query(movies, "Ann").collect()
     got = {r["actor"]: (r["cnt"], r["level"]) for r in rows}
