@@ -28,7 +28,7 @@ from imdbmapreduce_spark.cache import (
     stable_checkpoint_lazy,
 )
 from imdbmapreduce_spark.catalog import table
-from imdbmapreduce_spark.registry import query
+from imdbmapreduce_spark.registry import query, unrolled_cte
 
 # Fixed-point scale: total rank mass = 1e12 units. With <=1e7 nodes the
 # teleport term stays >= 1e4 units — plenty of resolution; int64 headroom
@@ -203,8 +203,24 @@ def cosupplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle_sql(iters: int = COSUPPLIER_ITERS) -> str:
-    """Unroll the exact fixed-point recurrence as chained DuckDB CTEs.
+# The co-supplier graph in DuckDB SQL — the base CTEs of every graph
+# oracle unrolled over it (:func:`cosupplier_edges`' edge rule).
+_COSUPPLIER_CTES = """ds AS (
+      SELECT DISTINCT l_orderkey AS k, l_suppkey AS s FROM lineitem
+    ), edges AS MATERIALIZED (
+      SELECT DISTINCT a.s AS src, b.s AS dst
+      FROM ds a JOIN ds b ON a.k = b.k WHERE a.s <> b.s
+    ), nodes AS (
+      SELECT s_suppkey AS node FROM supplier
+    )"""
+
+
+def _ppr_chain_sql(seeds: str, iters: int, select: str) -> str:
+    """Unroll the exact fixed-point PageRank recurrence as chained DuckDB
+    CTEs, teleport mass concentrated on the ``seeds`` rows (SQL yielding
+    ``node``): seed rows get base = 0.15·mass/|seeds| per round and
+    mass/|seeds| initially, others 0. Every node as a seed is plain
+    PageRank.
 
     Possible only BECAUSE of the determinism contract (module docstring):
     every per-round operation is an int64 truncating division, an
@@ -213,43 +229,48 @@ def _pagerank_oracle_sql(iters: int = COSUPPLIER_ITERS) -> str:
     truncates toward zero like Spark's ``div`` (verified: -7//2 = -3),
     and its HUGEINT SUM is exact, cast back to BIGINT at each round.
     """
-    rounds = []
-    for t in range(1, iters + 1):
-        rounds.append(
-            f"""c{t} AS (
-      SELECT e.dst AS node, SUM(r.rank_fp // e.out_deg) AS inbound
-      FROM ed e JOIN r{t - 1} r ON e.src = r.node GROUP BY e.dst
-    ), r{t} AS (
-      SELECT nd.node,
-             CAST((SELECT base FROM params)
-                  + ({PR_DAMP_NUM} * COALESCE(c.inbound, 0)) // {PR_DAMP_DEN}
-                  AS BIGINT) AS rank_fp
-      FROM nodes nd LEFT JOIN c{t} c ON nd.node = c.node
-    )"""
-        )
-    chain = ",\n    ".join(rounds)
     teleport = PR_DAMP_DEN - PR_DAMP_NUM
-    return f"""
-    WITH ds AS (
-      SELECT DISTINCT l_orderkey AS k, l_suppkey AS s FROM lineitem
-    ), edges AS (
-      SELECT DISTINCT a.s AS src, b.s AS dst
-      FROM ds a JOIN ds b ON a.k = b.k WHERE a.s <> b.s
-    ), ed AS (
+    base = f"""{_COSUPPLIER_CTES}, ed AS MATERIALIZED (
       SELECT src, dst, COUNT(*) OVER (PARTITION BY src) AS out_deg FROM edges
-    ), nodes AS (
-      SELECT s_suppkey AS node FROM supplier
-    ), params AS (
+    ), seeds AS ({seeds}), params AS (
       SELECT ({teleport} * {PR_SCALE} // {PR_DAMP_DEN}) // COUNT(*) AS base,
              {PR_SCALE} // COUNT(*) AS r_init
-      FROM nodes
+      FROM seeds
     ), r0 AS (
-      SELECT node, CAST((SELECT r_init FROM params) AS BIGINT) AS rank_fp
-      FROM nodes
-    ),
-    {chain}
-    SELECT node, rank_fp FROM r{iters}
-    """
+      SELECT nd.node,
+             CAST(CASE WHEN s.node IS NULL THEN 0
+                       ELSE (SELECT r_init FROM params) END AS BIGINT)
+               AS rank_fp
+      FROM nodes nd LEFT JOIN seeds s ON nd.node = s.node
+    )"""
+
+    def step(t: int) -> list[tuple[str, str]]:
+        return [
+            (f"c{t}", f"""
+      SELECT e.dst AS node, SUM(r.rank_fp // e.out_deg) AS inbound
+      FROM ed e JOIN r{t - 1} r ON e.src = r.node GROUP BY e.dst
+    """),
+            (f"r{t}", f"""
+      SELECT nd.node,
+             CAST(CASE WHEN s.node IS NULL THEN 0
+                       ELSE (SELECT base FROM params) END
+                  + ({PR_DAMP_NUM} * COALESCE(c.inbound, 0)) // {PR_DAMP_DEN}
+                  AS BIGINT) AS rank_fp
+      FROM nodes nd
+      LEFT JOIN c{t} c ON nd.node = c.node
+      LEFT JOIN seeds s ON nd.node = s.node
+    """),
+        ]
+
+    return unrolled_cte(base, step, iters, select)
+
+
+def _pagerank_oracle_sql() -> str:
+    return _ppr_chain_sql(
+        "SELECT node FROM nodes",
+        COSUPPLIER_ITERS,
+        f"SELECT node, rank_fp FROM r{COSUPPLIER_ITERS}",
+    )
 
 
 @query("pagerank_cosuppliers", oracle=_pagerank_oracle_sql(), bench=True)
@@ -297,58 +318,18 @@ PPR_ITERS = 6
 # and non-empty at every scale factor (nation 0 is absent at sf0.001).
 
 
-def _ppr_oracle_sql(iters: int = PPR_ITERS) -> str:
-    """Unrolled exact fixed-point recurrence for
-    :func:`ppr_supplier_neighborhood` — :func:`_pagerank_oracle_sql`
-    with the teleport mass concentrated on the seed set (seed rows get
-    base = 0.15·mass/|seeds|, others 0; initial mass likewise)."""
-    rounds = []
-    for t in range(1, iters + 1):
-        rounds.append(
-            f"""c{t} AS (
-      SELECT e.dst AS node, SUM(r.rank_fp // e.out_deg) AS inbound
-      FROM ed e JOIN r{t - 1} r ON e.src = r.node GROUP BY e.dst
-    ), r{t} AS (
-      SELECT nd.node,
-             CAST(CASE WHEN s.node IS NULL THEN 0
-                       ELSE (SELECT base FROM params) END
-                  + ({PR_DAMP_NUM} * COALESCE(c.inbound, 0)) // {PR_DAMP_DEN}
-                  AS BIGINT) AS rank_fp
-      FROM nodes nd
-      LEFT JOIN c{t} c ON nd.node = c.node
-      LEFT JOIN seeds s ON nd.node = s.node
-    )"""
-        )
-    chain = ",\n    ".join(rounds)
-    teleport = PR_DAMP_DEN - PR_DAMP_NUM
-    return f"""
-    WITH ds AS (
-      SELECT DISTINCT l_orderkey AS k, l_suppkey AS s FROM lineitem
-    ), edges AS (
-      SELECT DISTINCT a.s AS src, b.s AS dst
-      FROM ds a JOIN ds b ON a.k = b.k WHERE a.s <> b.s
-    ), ed AS (
-      SELECT src, dst, COUNT(*) OVER (PARTITION BY src) AS out_deg FROM edges
-    ), nodes AS (
-      SELECT s_suppkey AS node FROM supplier
-    ), seeds AS (
+def _ppr_oracle_sql() -> str:
+    """Oracle for :func:`ppr_supplier_neighborhood`: the PageRank chain
+    seeded on the minimum-nation suppliers."""
+    return _ppr_chain_sql(
+        """
       SELECT s_suppkey AS node FROM supplier
       WHERE s_nationkey = (SELECT MIN(s_nationkey) FROM supplier)
-    ), params AS (
-      SELECT ({teleport} * {PR_SCALE} // {PR_DAMP_DEN}) // COUNT(*) AS base,
-             {PR_SCALE} // COUNT(*) AS r_init
-      FROM seeds
-    ), r0 AS (
-      SELECT nd.node,
-             CAST(CASE WHEN s.node IS NULL THEN 0
-                       ELSE (SELECT r_init FROM params) END AS BIGINT)
-               AS rank_fp
-      FROM nodes nd LEFT JOIN seeds s ON nd.node = s.node
-    ),
-    {chain}
-    SELECT r.node, r.rank_fp, s.node IS NOT NULL AS is_seed
-    FROM r{iters} r LEFT JOIN seeds s ON r.node = s.node
-    """
+    """,
+        PPR_ITERS,
+        f"""SELECT r.node, r.rank_fp, s.node IS NOT NULL AS is_seed
+    FROM r{PPR_ITERS} r LEFT JOIN seeds s ON r.node = s.node""",
+    )
 
 
 @query("ppr_supplier_neighborhood", oracle=_ppr_oracle_sql())
@@ -445,52 +426,45 @@ def ppr_supplier_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_ROUNDS = 8
 
 
-def _kcore_oracle_sql(rounds: int = KCORE_ROUNDS) -> str:
+def _kcore_oracle_sql() -> str:
     """Unrolled peel recurrence: per round, recompute each survivor's
     degree WITHIN the surviving subgraph and drop nodes below k. k is
     data-defined (directed |edges| // |nodes| + 1 — just above the mean
     degree) so the query is meaningful at every scale factor."""
-    steps = []
-    for t in range(1, rounds + 1):
-        steps.append(
-            f""", d{t} AS (
+    base = f"""{_COSUPPLIER_CTES}, params AS (
+      SELECT (SELECT COUNT(*) FROM edges) // (SELECT COUNT(*) FROM nodes) + 1
+               AS k
+    ), s0 AS MATERIALIZED (
+      SELECT node FROM nodes
+    )"""
+
+    def step(t: int) -> list[tuple[str, str]]:
+        return [
+            (f"d{t}", f"""
       SELECT e.src AS node, CAST(COUNT(*) AS BIGINT) AS deg
       FROM edges e
       JOIN s{t - 1} a ON e.src = a.node
       JOIN s{t - 1} b ON e.dst = b.node
       GROUP BY e.src
-    ), s{t} AS MATERIALIZED (
+    """),
+            (f"s{t}", f"""
       SELECT node FROM d{t} WHERE deg >= (SELECT k FROM params)
-    )"""
-        )
-    return f"""
-    WITH ds AS (
-      SELECT DISTINCT l_orderkey AS kk, l_suppkey AS s FROM lineitem
-    ), edges AS MATERIALIZED (
-      SELECT DISTINCT a.s AS src, b.s AS dst
-      FROM ds a JOIN ds b ON a.kk = b.kk WHERE a.s <> b.s
-    ), nodes AS (
-      SELECT s_suppkey AS node FROM supplier
-    ), params AS (
-      SELECT (SELECT COUNT(*) FROM edges) // (SELECT COUNT(*) FROM nodes) + 1
-               AS k
-    ), s0 AS MATERIALIZED (
-      SELECT node FROM nodes
-    ){"".join(steps)}
-    SELECT n.node,
+    """),
+        ]
+
+    return unrolled_cte(base, step, KCORE_ROUNDS, f"""SELECT n.node,
            s.node IS NOT NULL AS in_core,
            COALESCE(d.deg, 0) AS core_deg,
            (SELECT k FROM params) AS k
     FROM nodes n
-    LEFT JOIN s{rounds} s ON n.node = s.node
+    LEFT JOIN s{KCORE_ROUNDS} s ON n.node = s.node
     LEFT JOIN (
       SELECT e.src AS node, CAST(COUNT(*) AS BIGINT) AS deg
       FROM edges e
-      JOIN s{rounds} a ON e.src = a.node
-      JOIN s{rounds} b ON e.dst = b.node
+      JOIN s{KCORE_ROUNDS} a ON e.src = a.node
+      JOIN s{KCORE_ROUNDS} b ON e.dst = b.node
       GROUP BY e.src
-    ) d ON n.node = d.node
-    """
+    ) d ON n.node = d.node""")
 
 
 @query("kcore_suppliers", oracle=_kcore_oracle_sql())
@@ -802,65 +776,55 @@ LPA_ROUNDS = 4
 # bit-reproducible — no convergence luck involved.
 
 
-def _lpa_oracle_sql(rounds: int = LPA_ROUNDS) -> str:
+def _lpa_oracle_sql() -> str:
     """Unroll the synchronous label-propagation recurrence as chained
     CTEs — possible because every round is integer counting plus a
     total-ordered argmax (count DESC, label ASC), both engines replay it
     exactly."""
-    steps = []
-    for t in range(1, rounds + 1):
-        steps.append(
-            f"""n{t} AS (
+
+    def step(t: int) -> list[tuple[str, str]]:
+        return [
+            (f"n{t}", f"""
       SELECT e.dst AS node, l.lbl, COUNT(*) AS cnt
       FROM edges e JOIN l{t - 1} l ON e.src = l.node GROUP BY 1, 2
-    ), b{t} AS (
+    """),
+            (f"b{t}", f"""
       SELECT node, lbl FROM (
         SELECT node, lbl,
                row_number() OVER (PARTITION BY node
                                   ORDER BY cnt DESC, lbl ASC) AS rn
         FROM n{t}
       ) WHERE rn = 1
-    ), l{t} AS (
+    """),
+            (f"l{t}", f"""
       SELECT nd.node, COALESCE(b.lbl, p.lbl) AS lbl
       FROM nodes nd
       LEFT JOIN b{t} b ON nd.node = b.node
       JOIN l{t - 1} p ON nd.node = p.node
-    )"""
-        )
-    chain = ",\n    ".join(steps)
+    """),
+        ]
+
     # rounds_run reproduces the Spark side's convergence early-exit: the
     # first round t whose labels equal round t-1's (the round Spark
     # still executes, observes zero moves, and stops after), else the
     # cap. At a fixpoint every later l{t} is identical, so the final
-    # labels are unconditionally l{rounds}.
-    moved = "\n      UNION ALL\n      ".join(
+    # labels are unconditionally l{LPA_ROUNDS}.
+    moved = "\n        UNION ALL\n        ".join(
         f"SELECT {t} AS t, (SELECT COUNT(*) FROM l{t} a JOIN l{t - 1} b"
         f" ON a.node = b.node AND a.lbl <> b.lbl) AS n_moved"
-        for t in range(1, rounds + 1)
+        for t in range(1, LPA_ROUNDS + 1)
     )
-    return f"""
-    WITH ds AS (
-      SELECT DISTINCT l_orderkey AS k, l_suppkey AS s FROM lineitem
-    ), edges AS (
-      SELECT DISTINCT a.s AS src, b.s AS dst
-      FROM ds a JOIN ds b ON a.k = b.k WHERE a.s <> b.s
-    ), nodes AS (
-      SELECT s_suppkey AS node FROM supplier
-    ), l0 AS (
-      SELECT node, node AS lbl FROM nodes
-    ),
-    {chain},
-    ch AS (
-      {moved}
-    ),
-    rr AS (
-      SELECT CAST(COALESCE(MIN(CASE WHEN n_moved = 0 THEN t END), {rounds})
-                  AS BIGINT) AS rounds_run
-      FROM ch
+    return unrolled_cte(
+        f"{_COSUPPLIER_CTES}, l0 AS (SELECT node, node AS lbl FROM nodes)",
+        step,
+        LPA_ROUNDS,
+        f"""SELECT node, lbl AS community, (
+      SELECT CAST(COALESCE(MIN(t), {LPA_ROUNDS}) AS BIGINT) FROM (
+        {moved}
+      ) WHERE n_moved = 0
+    ) AS rounds_run
+    FROM l{LPA_ROUNDS}""",
     )
-    SELECT node, lbl AS community, (SELECT rounds_run FROM rr) AS rounds_run
-    FROM l{rounds}
-    """
 
 
 @query("lpa_supplier_communities", oracle=_lpa_oracle_sql())

@@ -37,24 +37,23 @@ from pyspark.sql.window import Window
 from imdbmapreduce_spark.catalog import table
 from imdbmapreduce_spark.functions import tokens
 from imdbmapreduce_spark.operators.text import _DUCK_TOKS
-from imdbmapreduce_spark.registry import query
+from imdbmapreduce_spark.registry import query, unrolled_cte
 
 _BPE_TOP = 100
 _BPE_MERGES = 10
 _LP_SCALE = 1_000_000  # log-prob quantum: 1e-6 per token occurrence
 
 
-def _bpe_chain_prefix(n_merges: int) -> str:
-    """The shared CTE prefix of every BPE oracle: the unrolled merge
-    recurrence up to (and including) the post-merge vocabulary
-    ``v{n_merges}``. The three oracles (merge table, encode stats,
-    token budget) each append their own final CTEs/SELECT — no caller
-    re-parses generated SQL.
+def _bpe_oracle(select: str) -> str:
+    """A BPE oracle: the unrolled merge recurrence up to (and including)
+    the post-merge vocabulary ``v{_BPE_MERGES}``, then ``select``. The
+    three oracles (merge table, encode stats, token budget) differ only
+    in ``select`` — no caller re-parses generated SQL.
 
-    Same pattern as the kmeans/logreg oracles: each round is a
-    MATERIALIZED CTE chain (pair counts -> argmax -> apply-merge). The
-    symbol sequence is a space-joined string (tokens are
-    whitespace-split, so ' ' can never occur inside a symbol).
+    Same pattern as the kmeans/logreg oracles: each round is a CTE
+    chain (pair counts -> argmax -> apply-merge). The symbol sequence is
+    a space-joined string (tokens are whitespace-split, so ' ' can never
+    occur inside a symbol).
 
     Apply-merge is SYMBOL-anchored, not substring ``replace``: a plain
     ``replace(seq, 'c1 c2', 'c1c2')`` can match a SUFFIX of a longer
@@ -69,9 +68,7 @@ def _bpe_chain_prefix(n_merges: int) -> str:
     the engine's fold/scan venues (test_lm.py pins all three against a
     pure-Python tuple-scan replay).
     """
-    parts = [
-        f"""
-    WITH ex AS MATERIALIZED (
+    base = f"""ex AS MATERIALIZED (
       SELECT unnest(toks) AS tok
       FROM (SELECT {_DUCK_TOKS} AS toks FROM documents)
     ), v0 AS MATERIALIZED (
@@ -79,26 +76,29 @@ def _bpe_chain_prefix(n_merges: int) -> str:
              CAST(COUNT(*) AS BIGINT) AS n
       FROM ex GROUP BY tok
     )"""
-    ]
-    for r in range(1, n_merges + 1):
-        parts.append(
-            f""", p{r} AS MATERIALIZED (
+
+    def step(r: int) -> list[tuple[str, str]]:
+        return [
+            (f"p{r}", f"""
       SELECT c1, c2, CAST(SUM(n) AS BIGINT) AS pair_count FROM (
         SELECT n, unnest(c[1:len(c)-1]) AS c1, unnest(c[2:len(c)]) AS c2
         FROM (SELECT n, string_split(seq, ' ') AS c FROM v{r - 1})
         WHERE len(c) >= 2
       ) GROUP BY 1, 2
-    ), b{r} AS MATERIALIZED (
+    """),
+            (f"b{r}", f"""
       SELECT c1, c2, pair_count FROM p{r}
       ORDER BY pair_count DESC, c1, c2 LIMIT 1
-    ), w{r} AS MATERIALIZED (
+    """),
+            (f"w{r}", f"""
       SELECT tok, n, i, sym,
              (sym = (SELECT c1 FROM b{r})
               AND lead(sym) OVER (PARTITION BY tok ORDER BY i)
                   = (SELECT c2 FROM b{r})) AS hit
       FROM (SELECT tok, n, unnest(c) AS sym, generate_subscripts(c, 1) AS i
             FROM (SELECT tok, n, string_split(seq, ' ') AS c FROM v{r - 1}))
-    ), sel{r} AS MATERIALIZED (
+    """),
+            (f"sel{r}", f"""
       SELECT tok, i FROM (
         SELECT tok, i,
                ROW_NUMBER() OVER (PARTITION BY tok, isl ORDER BY i) AS rk
@@ -107,7 +107,8 @@ def _bpe_chain_prefix(n_merges: int) -> str:
                        AS isl
               FROM w{r} WHERE hit)
       ) WHERE rk % 2 = 1
-    ), v{r} AS MATERIALIZED (
+    """),
+            (f"v{r}", f"""
       SELECT w.tok,
              string_agg(CASE WHEN s.i IS NOT NULL
                              THEN w.sym || (SELECT c2 FROM b{r})
@@ -118,23 +119,20 @@ def _bpe_chain_prefix(n_merges: int) -> str:
       LEFT JOIN sel{r} p ON p.tok = w.tok AND p.i = w.i - 1
       WHERE p.i IS NULL
       GROUP BY w.tok, w.n
-    )"""
-        )
-    return "".join(parts)
+    """),
+        ]
+
+    return unrolled_cte(base, step, _BPE_MERGES, select)
 
 
-def _bpe_merge_oracle(n_merges: int) -> str:
-    """Merge-table oracle: the chain prefix plus a UNION of the
-    per-round argmax winners."""
+def _bpe_merge_oracle() -> str:
+    """Merge-table oracle: a UNION of the per-round argmax winners."""
     unions = "\n      UNION ALL ".join(
         f"SELECT CAST({r} AS BIGINT) AS rnk, c1, c2, c1 || c2 AS merged,"
         f" pair_count FROM b{r}"
-        for r in range(1, n_merges + 1)
+        for r in range(1, _BPE_MERGES + 1)
     )
-    return (
-        _bpe_chain_prefix(n_merges)
-        + f"\n    SELECT * FROM ({unions}) ORDER BY rnk"
-    )
+    return _bpe_oracle(f"SELECT * FROM ({unions}) ORDER BY rnk")
 
 
 @query(
@@ -205,7 +203,7 @@ def bpe_first_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.withColumn("rnk", F.row_number().over(w).cast("long"))
 
 
-@query("bpe_merge_sequence", oracle=_bpe_merge_oracle(_BPE_MERGES))
+@query("bpe_merge_sequence", oracle=_bpe_merge_oracle())
 def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full BPE tokenizer induction: ``_BPE_MERGES`` (10) sequential
     merges, each the
@@ -465,26 +463,23 @@ def _merge_expr(seq_col: str, c1: str, c2: str):
     return F.aggregate(F.split(F.col(seq_col), " "), init, step, finish)
 
 
-def _bpe_encode_oracle(n_merges: int) -> str:
-    """Encode-side oracle: the shared chain prefix continued past the
-    last merge into the post-merge symbol statistics."""
-    return (
-        _bpe_chain_prefix(n_merges)
-        + f""", occ AS (
-      SELECT n, unnest(string_split(seq, ' ')) AS symbol FROM v{n_merges}
-    ), cnt AS (
-      SELECT symbol, CAST(SUM(n) AS BIGINT) AS n_occ FROM occ GROUP BY 1
-    ), rankedsym AS (
+def _bpe_encode_oracle() -> str:
+    """Encode-side oracle: the merge chain continued past the last merge
+    into the post-merge symbol statistics."""
+    return _bpe_oracle(
+        f"""SELECT symbol, n_occ, rnk FROM (
       SELECT symbol, n_occ,
              CAST(ROW_NUMBER() OVER (ORDER BY n_occ DESC, symbol) AS BIGINT)
                AS rnk
-      FROM cnt
-    )
-    SELECT symbol, n_occ, rnk FROM rankedsym WHERE rnk <= {_BPE_TOP}"""
+      FROM (SELECT symbol, CAST(SUM(n) AS BIGINT) AS n_occ
+            FROM (SELECT n, unnest(string_split(seq, ' ')) AS symbol
+                  FROM v{_BPE_MERGES})
+            GROUP BY 1)
+    ) WHERE rnk <= {_BPE_TOP}"""
     )
 
 
-@query("bpe_encode_stats", oracle=_bpe_encode_oracle(_BPE_MERGES))
+@query("bpe_encode_stats", oracle=_bpe_encode_oracle())
 def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE — the other half of the tokenizer lifecycle: apply the
     learned merge sequence (:func:`bpe_merge_sequence`) to the corpus
@@ -516,30 +511,25 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.withColumn("rnk", F.row_number().over(w).cast("long"))
 
 
-def _bpe_budget_oracle(n_merges: int) -> str:
+def _bpe_budget_oracle() -> str:
     """Per-doc token-budget oracle: the merge chain's final vocabulary
     joined back to per-(doc, word) counts."""
-    return (
-        _bpe_chain_prefix(n_merges)
-        + f""", dt AS (
-      SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS k
-      FROM (SELECT doc_id, unnest(toks) AS tok
-            FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents))
-      GROUP BY 1, 2
-    ), nsym AS (
-      SELECT tok, CAST(len(string_split(seq, ' ')) AS BIGINT) AS n_sym
-      FROM v{n_merges}
-    )
-    SELECT d.doc_id,
+    return _bpe_oracle(
+        f"""SELECT d.doc_id,
            CAST(SUM(d.k) AS BIGINT) AS n_words,
            CAST(SUM(d.k * s.n_sym) AS BIGINT) AS n_bpe_tokens,
            CAST(SUM(d.k * s.n_sym) AS DOUBLE) / SUM(d.k) AS tokens_per_word
-    FROM dt d JOIN nsym s USING (tok)
+    FROM (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS k
+          FROM (SELECT doc_id, unnest(toks) AS tok
+                FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents))
+          GROUP BY 1, 2) d
+    JOIN (SELECT tok, CAST(len(string_split(seq, ' ')) AS BIGINT) AS n_sym
+          FROM v{_BPE_MERGES}) s USING (tok)
     GROUP BY d.doc_id"""
     )
 
 
-@query("doc_bpe_token_budget", oracle=_bpe_budget_oracle(_BPE_MERGES))
+@query("doc_bpe_token_budget", oracle=_bpe_budget_oracle())
 def doc_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token budget under the TRAINED tokenizer: how many
     BPE tokens each document costs after the learned merge sequence is

@@ -22,12 +22,13 @@ in numpy and requires exact equality, round by round.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from imdbmapreduce_spark.cache import register_release_hook, shared_cache
-from imdbmapreduce_spark.registry import query
+from imdbmapreduce_spark.registry import query, unrolled_cte
 
 _LR_ROUNDS = 10
 _LR_RATE = 2.0  # learning rate on normalized, bounded features
@@ -58,12 +59,15 @@ def quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _features_sql() -> str:
-    """The quality_features projection in DuckDB SQL (mirrors
-    operators.text.doc_quality's oracle fragments)."""
+def _logreg_base_sql() -> str:
+    """The training chain's inputs in DuckDB SQL: ``feats``, the
+    quality_features projection (mirrors operators.text.doc_quality's
+    oracle fragments), and the zero initial weights ``w0``. ``feats`` is
+    MATERIALIZED because every round reads it: inlined, it re-tokenizes
+    the corpus and re-opens the parquet per reference."""
     from imdbmapreduce_spark.operators.text import _DUCK_TOKS, _stop_list_sql
 
-    return f"""feats AS (
+    return f"""feats AS MATERIALIZED (
       SELECT
         doc_id,
         CAST((len(toks) >= 20 AND len(list_distinct(toks)) * 4 >= len(toks))
@@ -75,10 +79,40 @@ def _features_sql() -> str:
         CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS x3
       FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents) t
       WHERE len(toks) > 0
-    )"""
+    ), w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)"""
 
 
-def _logreg_oracle_sql(rounds: int = _LR_ROUNDS) -> str:
+def _logreg_step(src: str, extra_aggs: str = "") -> Callable:
+    """Round ``t`` of the quantized gradient descent over the rows of
+    CTE ``src``: margins at ``w{t-1}`` (``m{t}``), the exact gradient
+    sums plus ``extra_aggs`` (``a{t}``), and the updated weights ``w{t}``
+    — the driver-side update's double arithmetic, same association order
+    as the Python expressions."""
+    margin = " + ".join(f"w.w{j} * f.x{j}" for j in range(4))
+    grads = ", ".join(
+        f"SUM(CAST(round(((p - CAST(y AS DOUBLE)) * x{j}) * {_GRAD_SCALE})"
+        f" AS BIGINT)) AS g{j}"
+        for j in range(4)
+    )
+    update = ", ".join(
+        f"w.w{j} - ({_LR_RATE} * (CAST(a.g{j} AS DOUBLE) / {_GRAD_SCALE}))"
+        f" / a.n AS w{j}"
+        for j in range(4)
+    )
+    return lambda t: [
+        (
+            f"m{t}",
+            f"""
+      SELECT y, x0, x1, x2, x3, margin, 1.0 / (1.0 + exp(-margin)) AS p
+      FROM (SELECT f.*, ({margin}) AS margin FROM {src} f, w{t - 1} w)
+    """,
+        ),
+        (f"a{t}", f"SELECT {grads}, {extra_aggs}COUNT(*) AS n FROM m{t}"),
+        (f"w{t}", f"SELECT {update} FROM w{t - 1} w, a{t} a"),
+    ]
+
+
+def _logreg_oracle_sql() -> str:
     """Unroll the exact quantized-gradient descent as chained DuckDB CTEs.
 
     Possible BECAUSE of the determinism contract (module docstring): every
@@ -88,48 +122,23 @@ def _logreg_oracle_sql(rounds: int = _LR_ROUNDS) -> str:
     the Python expressions). DuckDB lacks ``log1p``, so the loss uses
     ``ln(1+x)`` — for x = e^-|margin| in (0, 1] the two differ by at most
     1 ulp, ~1e-10 of a loss quantum, far off any rounding boundary.
-    Verified hash-identical at sf0.01 via tools/driver_sim.py.
+    Verified hash-identical at sf0.01 via tools/driver_sim.py and at
+    sf0.001 by tests/test_oracle_parity.py.
     """
-    parts = [_features_sql()]
-    parts.append("w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)")
-    rows = []
-    for t in range(rounds):
-        margin = " + ".join(f"w.w{j} * f.x{j}" for j in range(4))
-        grads = ",\n        ".join(
-            f"SUM(CAST(round(((p - CAST(y AS DOUBLE)) * x{j}) * {_GRAD_SCALE})"
-            f" AS BIGINT)) AS g{j}"
-            for j in range(4)
-        )
-        parts.append(
-            f"""m{t} AS (
-      SELECT y, x0, x1, x2, x3, margin,
-             1.0 / (1.0 + exp(-margin)) AS p
-      FROM (SELECT f.*, ({margin}) AS margin FROM feats f, w{t} w)
-    ), a{t} AS (
-      SELECT
-        {grads},
-        SUM(CAST(round((greatest(margin, 0.0) + ln(1.0 + exp(-abs(margin)))
+    loss = f"""SUM(CAST(round((greatest(margin, 0.0) + ln(1.0 + exp(-abs(margin)))
                         - CAST(y AS DOUBLE) * margin) * {_LOSS_SCALE})
                  AS BIGINT)) AS loss_q,
-        SUM(CAST((CAST(p > 0.5 AS INT) = y) AS BIGINT)) AS n_correct,
-        COUNT(*) AS n
-      FROM m{t}
-    ), w{t + 1} AS (
-      SELECT
-        {", ".join(
-            f"w.w{j} - ({_LR_RATE} * (CAST(a.g{j} AS DOUBLE) / {_GRAD_SCALE}))"
-            f" / a.n AS w{j}"
-            for j in range(4)
-        )}
-      FROM w{t} w, a{t} a
-    )"""
-        )
-        rows.append(
-            f"SELECT {t} AS round, CAST(a.loss_q AS BIGINT) AS sum_loss_q, "
-            f"CAST(a.n_correct AS BIGINT) AS n_correct, w.w0, w.w1, w.w2, w.w3 "
-            f"FROM a{t} a, w{t} w"
-        )
-    return "WITH " + ",\n    ".join(parts) + "\n    " + "\n    UNION ALL ".join(rows)
+        SUM(CAST((CAST(p > 0.5 AS INT) = y) AS BIGINT)) AS n_correct, """
+    # row t: the loss and accuracy at w{t}, computed by round t + 1
+    rows = "\n    UNION ALL ".join(
+        f"SELECT {t} AS round, CAST(a.loss_q AS BIGINT) AS sum_loss_q, "
+        f"CAST(a.n_correct AS BIGINT) AS n_correct, w.w0, w.w1, w.w2, w.w3 "
+        f"FROM a{t + 1} a, w{t} w"
+        for t in range(_LR_ROUNDS)
+    )
+    return unrolled_cte(
+        _logreg_base_sql(), _logreg_step("feats", loss), _LR_ROUNDS, rows
+    )
 
 
 @query("doc_quality_logreg", oracle=_logreg_oracle_sql(), bench=True)
@@ -238,25 +247,16 @@ def _round_half_away(v: float) -> int:
     return int(math.floor(v + 0.5)) if v >= 0 else -int(math.floor(-v + 0.5))
 
 
-def _logreg_eval_oracle_sql(rounds: int = _LR_ROUNDS) -> str:
-    """Unrolled-CTE oracle for the train/eval twin: the content-hash
-    split rule (operators.text's md5-bucket thresholds) is plain SQL, the
-    10 training rounds unroll exactly like :func:`_logreg_oracle_sql`
-    (gradients only — the eval loop computes no loss), and the frozen
-    final weights score every split. ``accuracy_milli`` uses integer
-    division — Spark's double-divide-then-cast truncation is exact for
-    counts × 1000 far below 2^53, so ``//`` reproduces it bit-for-bit.
-    """
+def _train_split_oracle(select: str) -> str:
+    """The eval and calibration oracles' shared chain: the content-hash
+    split rule (operators.text's md5-bucket thresholds) as plain SQL, then
+    the 10 gradient rounds over the ``train`` rows only. ``select`` scores
+    ``labeled`` (every doc with its split) under the frozen final weights
+    ``w{_LR_ROUNDS}``."""
     from imdbmapreduce_spark.operators.text import _SPLIT_TRAIN, _SPLIT_VAL
 
     bucket = "CAST(('0x' || substring(md5(text), 1, 2)) AS INTEGER)"
-    # MATERIALIZED: DuckDB otherwise inlines these CTEs into every one of
-    # the 10 unrolled rounds, re-opening the parquet per reference (the
-    # "too many open files" failure mode); materializing evaluates each
-    # base table once, values unchanged.
-    parts = [_features_sql().replace("feats AS (", "feats AS MATERIALIZED (", 1)]
-    parts.append(
-        f"""split AS MATERIALIZED (
+    base = f"""{_logreg_base_sql()}, split AS MATERIALIZED (
       SELECT doc_id,
              CASE WHEN {bucket} < {_SPLIT_TRAIN} THEN 'train'
                   WHEN {bucket} < {_SPLIT_VAL} THEN 'val'
@@ -265,48 +265,35 @@ def _logreg_eval_oracle_sql(rounds: int = _LR_ROUNDS) -> str:
     ), labeled AS MATERIALIZED (
       SELECT f.*, s.split FROM feats f JOIN split s USING (doc_id)
     ), train AS MATERIALIZED (SELECT * FROM labeled WHERE split = 'train')"""
+    return unrolled_cte(base, _logreg_step("train"), _LR_ROUNDS, select)
+
+
+# (y, split, p) of every labeled doc under the frozen final weights
+_SCORED = f"""(SELECT l.y, l.split,
+                 1.0 / (1.0 + exp(-({" + ".join(f"w.w{j} * l.x{j}" for j in range(4))}))) AS p
+          FROM labeled l, w{_LR_ROUNDS} w)"""
+
+
+def _logreg_eval_oracle_sql() -> str:
+    """Unrolled-CTE oracle for the train/eval twin: the training chain of
+    :func:`_train_split_oracle` (gradients only — the eval loop computes
+    no loss), and the frozen final weights score every split.
+    ``accuracy_milli`` uses integer division — Spark's
+    double-divide-then-cast truncation is exact for counts × 1000 far
+    below 2^53, so ``//`` reproduces it bit-for-bit.
+    """
+    weights = ", ".join(
+        f"(SELECT w{j} FROM w{_LR_ROUNDS}) AS w{j}" for j in range(4)
     )
-    parts.append("w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)")
-    for t in range(rounds):
-        margin = " + ".join(f"w.w{j} * f.x{j}" for j in range(4))
-        grads = ",\n        ".join(
-            f"SUM(CAST(round(((p - CAST(y AS DOUBLE)) * x{j}) * {_GRAD_SCALE})"
-            f" AS BIGINT)) AS g{j}"
-            for j in range(4)
-        )
-        # every round CTE MATERIALIZED: the w{t+1} -> (w{t}, a{t}) ->
-        # m{t} -> w{t} reference chain doubles per inlined level —
-        # exponential re-evaluation by round 10 without it
-        parts.append(
-            f"""m{t} AS MATERIALIZED (
-      SELECT y, x0, x1, x2, x3, 1.0 / (1.0 + exp(-margin)) AS p
-      FROM (SELECT f.*, ({margin}) AS margin FROM train f, w{t} w)
-    ), a{t} AS MATERIALIZED (
-      SELECT {grads}, COUNT(*) AS n FROM m{t}
-    ), w{t + 1} AS MATERIALIZED (
-      SELECT
-        {", ".join(
-            f"w.w{j} - ({_LR_RATE} * (CAST(a.g{j} AS DOUBLE) / {_GRAD_SCALE}))"
-            f" / (SELECT n FROM a0) AS w{j}"
-            for j in range(4)
-        )}
-      FROM w{t} w, a{t} a
-    )"""
-        )
-    fmargin = " + ".join(f"w.w{j} * l.x{j}" for j in range(4))
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT split,
+    return _train_split_oracle(
+        f"""SELECT split,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CAST((CAST(p > 0.5 AS INT) = y) AS BIGINT)) AS BIGINT)
              AS n_correct,
            CAST(SUM(CAST((CAST(p > 0.5 AS INT) = y) AS BIGINT)) * 1000
                 // COUNT(*) AS BIGINT) AS accuracy_milli,
-           {", ".join(f"(SELECT w{j} FROM w{rounds}) AS w{j}" for j in range(4))}
-    FROM (SELECT l.y, l.split, 1.0 / (1.0 + exp(-({fmargin}))) AS p
-          FROM labeled l, w{rounds} w)
+           {weights}
+    FROM {_SCORED}
     GROUP BY split ORDER BY split"""
     )
 
@@ -451,67 +438,64 @@ def _trunc_div(s: int, n: int) -> int:
     return -q if s < 0 else q
 
 
-def _kmeans_oracle_sql(k: int = _KM_K, rounds: int = _KM_ROUNDS) -> str:
-    """Unroll Lloyd's algorithm as chained MATERIALIZED DuckDB CTEs.
+def _kmeans_oracle_sql() -> str:
+    """Unroll Lloyd's algorithm as chained DuckDB CTEs.
 
     Possible because every step is integer fixed-point: quantized
     components, exact BIGINT distances, argmin with (dist, cluster)
     tie-break, and truncating integer centroid updates — the same
     bit-for-bit recurrence in both engines (the PageRank/logreg oracle
-    technique). MATERIALIZED is load-bearing: the c0→a0→c1→… chain
-    re-evaluates exponentially if inlined.
+    technique).
     """
-    parts = [
-        f"""pts AS MATERIALIZED (
+    base = f"""pts AS MATERIALIZED (
       SELECT vec_id,
              list_transform(embedding,
                             v -> CAST(round(CAST(v AS DOUBLE) * {_KM_Q}) AS BIGINT)) AS xq
       FROM embeddings
-    )""",
-        f"""c0 AS MATERIALIZED (
+    ), c0 AS MATERIALIZED (
       SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, xq AS cent
-      FROM (SELECT vec_id, xq FROM pts ORDER BY vec_id LIMIT {k})
-    )""",
-    ]
-    rows = []
-    for t in range(rounds):
-        parts.append(
-            f"""d{t} AS MATERIALIZED (
+      FROM (SELECT vec_id, xq FROM pts ORDER BY vec_id LIMIT {_KM_K})
+    )"""
+
+    def step(t: int) -> list[tuple[str, str]]:
+        return [
+            (f"d{t}", f"""
       SELECT vec_id, cluster, CAST(SUM((x - c) * (x - c)) AS BIGINT) AS dist
       FROM (SELECT p.vec_id, c.cluster, UNNEST(p.xq) AS x, UNNEST(c.cent) AS c
-            FROM pts p CROSS JOIN c{t} c)
+            FROM pts p CROSS JOIN c{t - 1} c)
       GROUP BY 1, 2
-    ), a{t} AS MATERIALIZED (
+    """),
+            (f"a{t}", f"""
       SELECT vec_id, cluster, dist
       FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
                                          ORDER BY dist, cluster) AS rn
             FROM d{t})
       WHERE rn = 1
-    ), s{t} AS MATERIALIZED (
+    """),
+            (f"s{t}", f"""
       SELECT cluster, COUNT(*) AS n_points, SUM(dist) AS sse_q
       FROM a{t} GROUP BY 1
-    ), u{t} AS MATERIALIZED (
+    """),
+            (f"u{t}", f"""
       SELECT a.cluster, g.i, SUM(p.xq[g.i]) AS s, COUNT(*) AS n
       FROM a{t} a JOIN pts p USING (vec_id)
            CROSS JOIN generate_series(1, {_KM_DIM}) g(i)
       GROUP BY 1, 2
-    ), c{t + 1} AS MATERIALIZED (
+    """),
+            (f"c{t}", f"""
       SELECT cluster, list(CAST(s AS BIGINT) // CAST(n AS BIGINT) ORDER BY i) AS cent
       FROM u{t} GROUP BY cluster
-    )"""
-        )
-        rows.append(
-            f"SELECT {t} AS round, s.cluster, CAST(s.n_points AS BIGINT) AS n_points, "
-            f"CAST(s.sse_q AS BIGINT) AS sse_q, c.cent[1] AS cent0_q "
-            f"FROM s{t} s JOIN c{t} c USING (cluster)"
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + "\n    SELECT * FROM (\n    "
-        + "\n    UNION ALL ".join(rows)
-        + "\n    )"
+    """),
+        ]
+
+    # row t: the assignment under c{t}, computed by round t + 1
+    rows = "\n    UNION ALL ".join(
+        f"SELECT {t} AS round, s.cluster, CAST(s.n_points AS BIGINT) AS n_points, "
+        f"CAST(s.sse_q AS BIGINT) AS sse_q, c.cent[1] AS cent0_q "
+        f"FROM s{t + 1} s JOIN c{t} c USING (cluster)"
+        for t in range(_KM_ROUNDS)
     )
+    return unrolled_cte(base, step, _KM_ROUNDS, f"SELECT * FROM (\n    {rows}\n    )")
 
 
 def _km_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,67 +865,21 @@ _CAL_BINS = 10
 _CAL_PPM = 1_000_000
 
 
-def _logreg_calibration_oracle_sql(rounds: int = _LR_ROUNDS) -> str:
-    """Unrolled-CTE oracle for the reliability diagram: the same train
-    CTE chain as :func:`_logreg_eval_oracle_sql` (content-hash split,
-    10 materialized gradient rounds), final weights scoring the VAL
+def _logreg_calibration_oracle_sql() -> str:
+    """Unrolled-CTE oracle for the reliability diagram: the training
+    chain of :func:`_train_split_oracle`, final weights scoring the VAL
     split only, fixed-width probability bins. All reported values are
     integer: counts, and ppm ratios by truncating division over exact
     integer sums (per-row HALF_UP p quanta — the module's determinism
     contract)."""
-    from imdbmapreduce_spark.operators.text import _SPLIT_TRAIN, _SPLIT_VAL
-
-    bucket = "CAST(('0x' || substring(md5(text), 1, 2)) AS INTEGER)"
-    parts = [_features_sql().replace("feats AS (", "feats AS MATERIALIZED (", 1)]
-    parts.append(
-        f"""split AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN {bucket} < {_SPLIT_TRAIN} THEN 'train'
-                  WHEN {bucket} < {_SPLIT_VAL} THEN 'val'
-                  ELSE 'test' END AS split
-      FROM documents
-    ), labeled AS MATERIALIZED (
-      SELECT f.*, s.split FROM feats f JOIN split s USING (doc_id)
-    ), train AS MATERIALIZED (SELECT * FROM labeled WHERE split = 'train')"""
-    )
-    parts.append("w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)")
-    for t in range(rounds):
-        margin = " + ".join(f"w.w{j} * f.x{j}" for j in range(4))
-        grads = ",\n        ".join(
-            f"SUM(CAST(round(((p - CAST(y AS DOUBLE)) * x{j}) * {_GRAD_SCALE})"
-            f" AS BIGINT)) AS g{j}"
-            for j in range(4)
-        )
-        parts.append(
-            f"""m{t} AS MATERIALIZED (
-      SELECT y, x0, x1, x2, x3, 1.0 / (1.0 + exp(-margin)) AS p
-      FROM (SELECT f.*, ({margin}) AS margin FROM train f, w{t} w)
-    ), a{t} AS MATERIALIZED (
-      SELECT {grads}, COUNT(*) AS n FROM m{t}
-    ), w{t + 1} AS MATERIALIZED (
-      SELECT
-        {", ".join(
-            f"w.w{j} - ({_LR_RATE} * (CAST(a.g{j} AS DOUBLE) / {_GRAD_SCALE}))"
-            f" / (SELECT n FROM a0) AS w{j}"
-            for j in range(4)
-        )}
-      FROM w{t} w, a{t} a
-    )"""
-        )
-    fmargin = " + ".join(f"w.w{j} * l.x{j}" for j in range(4))
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT LEAST(CAST(floor(p * {_CAL_BINS}) AS BIGINT), {_CAL_BINS - 1}) AS bin,
+    return _train_split_oracle(
+        f"""SELECT LEAST(CAST(floor(p * {_CAL_BINS}) AS BIGINT), {_CAL_BINS - 1}) AS bin,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(y) AS BIGINT) AS n_pos,
            CAST(SUM(CAST(round(p * {_CAL_PPM}) AS BIGINT)) // COUNT(*) AS BIGINT)
              AS predicted_ppm,
            CAST(SUM(y) * {_CAL_PPM} // COUNT(*) AS BIGINT) AS observed_ppm
-    FROM (SELECT l.y, 1.0 / (1.0 + exp(-({fmargin}))) AS p
-          FROM labeled l, w{rounds} w
-          WHERE l.split = 'val')
+    FROM {_SCORED} WHERE split = 'val'
     GROUP BY 1"""
     )
 

@@ -41,7 +41,7 @@ from imdbmapreduce_spark.cache import (
     stable_checkpoint_lazy,
 )
 from imdbmapreduce_spark.catalog import table
-from imdbmapreduce_spark.registry import query
+from imdbmapreduce_spark.registry import query, unrolled_cte
 
 # Component quantization scale: 1e-6 units. Unit-norm components are
 # |x| <= 1, so |v| <= 1e6, dot <= 64e12 and norm2 <= ~1e12 — far inside
@@ -197,18 +197,22 @@ _MMR_K = 5  # diversified results returned
 # double literals, so scores are bit-identical.
 
 
-def _mmr_oracle_sql(k: int = _MMR_K) -> str:
+def _mmr_oracle_sql() -> str:
     """Unrolled greedy MMR selection: the knn scoring CTEs, a top-POOL
     candidate set, the bounded pool×pool cosine matrix, then one CTE
-    pair per selection step (score remaining vs selected-so-far, argmax
-    with vec_id tie-break) — the kmeans/pagerank unrolled-recurrence
-    pattern applied to a greedy algorithm."""
-    steps = []
-    sel_union = "SELECT q_id, vec_id FROM s1"
-    for t in range(2, k + 1):
-        steps.append(
-            f""", sel{t - 1} AS MATERIALIZED ({sel_union}),
-    sc{t} AS (
+    triple per selection step t >= 2 (the selected-so-far set, remaining
+    candidates scored against it, argmax with vec_id tie-break) — the
+    kmeans/pagerank unrolled-recurrence pattern applied to a greedy
+    algorithm."""
+
+    def step(i: int) -> list[tuple[str, str]]:
+        t = i + 1  # round i picks the (i+1)-th result; s1 is in the base
+        selected = " UNION ALL ".join(
+            f"SELECT q_id, vec_id FROM s{r}" for r in range(1, t)
+        )
+        return [
+            (f"sel{t - 1}", selected),
+            (f"sc{t}", f"""
       SELECT c.q_id, c.vec_id, c.rel, 0.7 * c.rel - 0.3 * MAX(m.sim) AS mmr
       FROM cand c
       JOIN sel{t - 1} s ON s.q_id = c.q_id
@@ -218,19 +222,19 @@ def _mmr_oracle_sql(k: int = _MMR_K) -> str:
       WHERE NOT EXISTS (SELECT 1 FROM sel{t - 1} x
                         WHERE x.q_id = c.q_id AND x.vec_id = c.vec_id)
       GROUP BY c.q_id, c.vec_id, c.rel
-    ), s{t} AS MATERIALIZED (
+    """),
+            (f"s{t}", f"""
       SELECT q_id, vec_id, rel, mmr, CAST({t} AS BIGINT) AS rank
       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
               ORDER BY mmr DESC, vec_id) AS rn FROM sc{t})
       WHERE rn = 1
-    )"""
-        )
-        sel_union += f" UNION ALL SELECT q_id, vec_id FROM s{t}"
+    """),
+        ]
+
     final = "\n      UNION ALL ".join(
-        f"SELECT q_id, vec_id, rel, mmr, rank FROM s{t}" for t in range(1, k + 1)
+        f"SELECT q_id, vec_id, rel, mmr, rank FROM s{t}" for t in range(1, _MMR_K + 1)
     )
-    return f"""
-    WITH ex AS MATERIALIZED (
+    base = f"""ex AS MATERIALIZED (
       SELECT vec_id, CAST(t.i AS INTEGER) AS pos,
              CAST(round(CAST(embedding[CAST(t.i AS INTEGER)] AS DOUBLE)*{_SCALE}) AS BIGINT) AS v
       FROM embeddings CROSS JOIN range(1, 4097) t(i)
@@ -285,9 +289,13 @@ def _mmr_oracle_sql(k: int = _MMR_K) -> str:
                    ROW_NUMBER() OVER (PARTITION BY q_id
                      ORDER BY 0.7 * rel DESC, vec_id) AS rn FROM cand)
       WHERE rn = 1
-    ){"".join(steps)}
-    SELECT q_id, vec_id, rel, mmr, rank FROM ({final})
-    """
+    )"""
+    return unrolled_cte(
+        base,
+        step,
+        _MMR_K - 1,
+        f"SELECT q_id, vec_id, rel, mmr, rank FROM ({final})",
+    )
 
 
 @query("mmr_diversified_topk", oracle=_mmr_oracle_sql())
@@ -962,7 +970,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantized components: build once, serve every probe batch.
     # Codebook = cells x dims rows (constants); inverted lists = one
     # (vec_id, cell) row per corpus vector — o(corpus), spillable.
-    # Both prefer the PERSISTED index when one exists (_vector_artifact).
+    # Both prefer the PERSISTED index when one exists (indexstore.artifact).
     cents = _ivf_codebook_cached(spark, sf_dir)
     corpus_cells = _ivf_lists_cached(spark, sf_dir)
     probe_cells = (
@@ -1911,27 +1919,12 @@ _PCA_ROUNDS = 8
 _PCA_S = 1_000_000  # iterate fixed-point scale (1e-6 per coordinate)
 
 
-def _pca_oracle_sql(rounds: int = _PCA_ROUNDS) -> str:
+def _pca_oracle_sql() -> str:
     """Unroll the integer power iteration as chained CTEs — possible
     because every round is an exact int64 matrix-vector product, an
     integer max, and a divisor-first truncating division (DuckDB ``//``
     truncates toward zero like Spark ``DIV`` — the pagerank contract)."""
-    steps = []
-    for t in range(1, rounds + 1):
-        steps.append(
-            f"""y{t} AS MATERIALIZED (
-      SELECT m.i AS pos, CAST(SUM(m.mn * x.xq) AS BIGINT) AS y
-      FROM mn m JOIN x{t - 1} x ON m.j = x.pos GROUP BY m.i
-    ), d{t} AS MATERIALIZED (
-      SELECT GREATEST((MAX(ABS(y)) + {_PCA_S} - 1) // {_PCA_S}, 1) AS dv
-      FROM y{t}
-    ), x{t} AS MATERIALIZED (
-      SELECT pos, CAST(y // (SELECT dv FROM d{t}) AS BIGINT) AS xq FROM y{t}
-    )"""
-        )
-    chain = ",\n    ".join(steps)
-    return f"""
-    WITH ex AS MATERIALIZED (
+    base = f"""ex AS MATERIALIZED (
       SELECT vec_id, CAST(t.i AS BIGINT) - 1 AS pos,
              CAST(round(CAST(embedding[CAST(t.i AS INTEGER)] AS DOUBLE)
                         * {_SCALE}) AS BIGINT) AS v
@@ -1948,10 +1941,26 @@ def _pca_oracle_sql(rounds: int = _PCA_ROUNDS) -> str:
     mn AS MATERIALIZED (
       SELECT i, j, CAST(m // (SELECT dv FROM dm) AS BIGINT) AS mn FROM m
     ),
-    x0 AS (SELECT DISTINCT i AS pos, CAST({_PCA_S} AS BIGINT) AS xq FROM m),
-    {chain}
-    SELECT pos, xq AS pc1_q FROM x{rounds}
-    """
+    x0 AS (SELECT DISTINCT i AS pos, CAST({_PCA_S} AS BIGINT) AS xq FROM m)"""
+
+    def step(t: int) -> list[tuple[str, str]]:
+        return [
+            (f"y{t}", f"""
+      SELECT m.i AS pos, CAST(SUM(m.mn * x.xq) AS BIGINT) AS y
+      FROM mn m JOIN x{t - 1} x ON m.j = x.pos GROUP BY m.i
+    """),
+            (f"d{t}", f"""
+      SELECT GREATEST((MAX(ABS(y)) + {_PCA_S} - 1) // {_PCA_S}, 1) AS dv
+      FROM y{t}
+    """),
+            (f"x{t}", f"""
+      SELECT pos, CAST(y // (SELECT dv FROM d{t}) AS BIGINT) AS xq FROM y{t}
+    """),
+        ]
+
+    return unrolled_cte(
+        base, step, _PCA_ROUNDS, f"SELECT pos, xq AS pc1_q FROM x{_PCA_ROUNDS}"
+    )
 
 
 _PCA_DRIVER_DIM_MAX = 512  # above this, d² Gram cells stop being model-sized

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from imdbmapreduce_spark.catalog import table
 from imdbmapreduce_spark.functions import cents_sum
-from imdbmapreduce_spark.registry import query
+from imdbmapreduce_spark.registry import query, unrolled_cte
 
 # Formatted-timestamp spelling in each engine, microsecond-exact.
 _SPARK_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -1960,24 +1960,12 @@ def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stationary_oracle_sql(iters: int = _MC_ITERS) -> str:
+def _stationary_oracle_sql() -> str:
     """Unrolled exact fixed-point power iteration over the event-type
-    transition matrix — the PageRank oracle pattern (graph.py:202) on a
+    transition matrix — the PageRank oracle pattern (graph.py) on a
     row-stochastic chain: per round, pi_{t+1}(j) = Σ_i (pi_t(i)·n_ij) //
     n_i, every term an exact int64 multiply + truncating division."""
-    rounds = []
-    for t in range(1, iters + 1):
-        rounds.append(
-            f"""r{t} AS (
-      SELECT m.next_type AS event_type,
-             CAST(SUM((r.pi_fp * m.n) // m.row_total) AS BIGINT) AS pi_fp
-      FROM m JOIN r{t - 1} r ON m.prev_type = r.event_type
-      GROUP BY m.next_type
-    )"""
-        )
-    chain = ",\n    ".join(rounds)
-    return f"""
-    WITH {_TRANSITION_CTES}, m AS (
+    base = f"""{_TRANSITION_CTES}, m AS MATERIALIZED (
       SELECT prev_type, next_type, n,
              CAST(SUM(n) OVER (PARTITION BY prev_type) AS BIGINT) AS row_total
       FROM pairs
@@ -1988,10 +1976,19 @@ def _stationary_oracle_sql(iters: int = _MC_ITERS) -> str:
              CAST({_MC_SCALE} // (SELECT COUNT(*) FROM states) AS BIGINT)
                AS pi_fp
       FROM states
-    ),
-    {chain}
-    SELECT event_type, pi_fp FROM r{iters}
-    """
+    )"""
+
+    def step(t: int) -> list[tuple[str, str]]:
+        return [(f"r{t}", f"""
+      SELECT m.next_type AS event_type,
+             CAST(SUM((r.pi_fp * m.n) // m.row_total) AS BIGINT) AS pi_fp
+      FROM m JOIN r{t - 1} r ON m.prev_type = r.event_type
+      GROUP BY m.next_type
+    """)]
+
+    return unrolled_cte(
+        base, step, _MC_ITERS, f"SELECT event_type, pi_fp FROM r{_MC_ITERS}"
+    )
 
 
 @query("events_type_stationary", oracle=_stationary_oracle_sql())

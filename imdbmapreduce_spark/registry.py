@@ -55,6 +55,38 @@ def query(
     return wrap
 
 
+def unrolled_cte(
+    base: str,
+    step: Callable[[int], list[tuple[str, str]]],
+    rounds: int,
+    select: str,
+) -> str:
+    """DuckDB oracle SQL for an iterative operator unrolled into a CTE
+    chain: ``WITH base, <round 1>, ..., <round rounds> select``.
+
+    ``base`` is the comma-separated CTEs every round reads, round 0's
+    state included, written as given. ``step(t)`` returns round ``t``'s
+    ``(name, body)`` pairs, which read round ``t - 1``'s; each is written
+    as ``name AS MATERIALIZED (body)``. That keyword is why
+    this helper exists: round t+1 references round t's CTEs more than
+    once (directly and through the aggregates it derives), and DuckDB
+    inlines an unmaterialized CTE at every reference, so the work
+    doubles with each round (the 10-round logreg oracle at sf0.001:
+    250 s inlined, 0.5 s materialized). ``select`` is the final
+    statement; it reads any round's CTEs by name.
+
+    Possible only for operators whose rounds are deterministic in both
+    engines (exact integer sums, total-ordered argmax, truncating
+    division); the operator modules state that contract.
+    """
+    chain = (
+        f"{name} AS MATERIALIZED ({body})"
+        for t in range(1, rounds + 1)
+        for name, body in step(t)
+    )
+    return f"WITH {base},\n    " + ",\n    ".join(chain) + f"\n    {select}"
+
+
 def _repo_root() -> str:
     import os
 
@@ -73,10 +105,44 @@ def _cached(fn):
     return functools.lru_cache(maxsize=1)(fn)
 
 
+def _code_text(fn: QueryFn) -> str:
+    """``fn``'s source with its comments and docstring cut out and blank
+    lines dropped, so an edit to either leaves the fingerprint alone.
+
+    Spans are located with ``tokenize`` and cut from the text rather than
+    hashing the token strings or ``ast.dump``: both of those change form
+    between Python minor versions (3.12 re-tokenized f-strings), and a
+    manifest recorded under one interpreter must match under another.
+    """
+    import inspect
+    import io
+    import textwrap
+    import tokenize
+
+    src = textwrap.dedent(inspect.getsource(fn))
+    toks = list(tokenize.generate_tokens(io.StringIO(src).readline))
+    cuts = [(t.start, t.end) for t in toks if t.type == tokenize.COMMENT]
+    # docstring: a lone STRING statement first after the ``def``'s colon
+    i, depth = next(i for i, t in enumerate(toks) if t.string == "def"), 0
+    while toks[i].string != ":" or depth:
+        if toks[i].type == tokenize.OP:
+            depth += (toks[i].string in "([{") - (toks[i].string in ")]}")
+        i += 1
+    skip = (tokenize.NEWLINE, tokenize.NL, tokenize.INDENT, tokenize.COMMENT)
+    j = next(j for j in range(i + 1, len(toks)) if toks[j].type not in skip)
+    if toks[j].type == tokenize.STRING and toks[j + 1].type == tokenize.NEWLINE:
+        cuts.append((toks[j].start, toks[j].end))
+    lines = src.splitlines()
+    for (r0, c0), (r1, c1) in sorted(cuts, reverse=True):
+        lines[r0 - 1 : r1] = [lines[r0 - 1][:c0] + lines[r1 - 1][c1:]]
+    return "\n".join(ln.rstrip() for ln in lines if ln.strip())
+
+
 def query_fingerprint(name: str) -> str:
     """Behavior fingerprint of a registered query: sha256 over the plan
-    function's source text, its oracle SQL, AND a content stamp of the
-    input data the query reads.
+    function's code (comments and docstring removed, see
+    :func:`_code_text`), its oracle SQL, AND a content stamp of the input
+    data the query reads.
 
     The input stamp closes the round-6 staleness hole: a green driver
     row certifies (plan, oracle, DATA) — round 6 regenerated the movies
@@ -93,13 +159,11 @@ def query_fingerprint(name: str) -> str:
     its input data; the pytest suite remains the net under helper edits.
     """
     import hashlib
-    import inspect
-    import textwrap
 
     _load_plans()
     rq = _REGISTRY[name]
     try:
-        src = textwrap.dedent(inspect.getsource(rq.fn))
+        src = _code_text(rq.fn)
     except (OSError, TypeError):
         src = ""  # unhashable source degrades to "always stale" — conservative
     blob = src + "\n--oracle--\n" + (rq.oracle or "")

@@ -4,12 +4,20 @@ the local replica of the driver's CORRECTNESS gate (SURVEY.md §5 item 1).
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from imdbmapreduce_spark import registry
 from tests.oracle_util import compare, duckdb_connection
 
 _NAMES = sorted(registry.all_oracles())
+
+# Wall budget for one oracle in DuckDB at sf0.001. The slowest oracle
+# takes under 4 s; an unrolled CTE chain that inlines its rounds instead
+# of going through registry.unrolled_cte grows exponentially with the
+# round count (minutes at 8-10 rounds) and fails here, not in a stall.
+_ORACLE_BUDGET_S = 30.0
 
 
 @pytest.fixture(scope="module")
@@ -23,8 +31,11 @@ def oracle_con(sf_dir):
 def test_oracle_parity(spark, sf_dir, oracle_con, name):
     rq = registry.get(name)
     spark_pdf = rq.fn(spark, sf_dir).toPandas()
-    oracle_pdf = oracle_con.execute(rq.oracle).fetchdf()
-    compare(spark_pdf, oracle_pdf, name)
+    t0 = time.perf_counter()
+    result = oracle_con.execute(rq.oracle)
+    oracle_s = time.perf_counter() - t0
+    assert oracle_s <= _ORACLE_BUDGET_S, (name, round(oracle_s, 1))
+    compare(spark_pdf, result.fetchdf(), name)
 
 
 def test_rows_only_queries_run(spark, sf_dir):

@@ -195,6 +195,49 @@ def test_fingerprint_staleness_demotes_edited_query(tmp_path, monkeypatch):
         registry.invalidate_caches()
 
 
+_FP_PROBE = '''
+from imdbmapreduce_spark.registry import query
+
+
+@query("fp_probe", oracle="SELECT 1 AS x -- a '#' inside SQL")
+def fp_probe(spark, sf_dir):
+    """Docstring, first wording."""
+    n = 1  # inline comment
+    # a full-line comment
+    return spark.range(n).filter("id >= 0")  # '#' in code: "x#y"
+'''
+
+
+def test_fingerprint_ignores_comments_and_docstring(tmp_path, monkeypatch):
+    """A comment-only or docstring-only edit to a ``@query`` function
+    keeps its fingerprint, so a stale comment can be fixed without
+    demoting the query to tier 1; a code edit still changes it."""
+    import importlib.util
+
+    registry._load_plans()
+    variants = {
+        "base": _FP_PROBE,
+        "comment": _FP_PROBE.replace("# inline comment", "# reworded")
+        .replace("# a full-line comment", "# now\n    # two lines")
+        .replace("# '#' in code", "#"),
+        "docstring": _FP_PROBE.replace(
+            "Docstring, first wording.", "Docstring,\n    reworded on two lines."
+        ),
+        "code": _FP_PROBE.replace("n = 1", "n = 2"),
+    }
+    fps = {}
+    for label, src in variants.items():
+        path = tmp_path / f"fp_probe_{label}.py"
+        path.write_text(src)
+        monkeypatch.setattr(registry, "_REGISTRY", {})
+        spec = importlib.util.spec_from_file_location(path.stem, path)
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+        fps[label] = registry.query_fingerprint("fp_probe")
+    assert fps["comment"] == fps["base"]
+    assert fps["docstring"] == fps["base"]
+    assert fps["code"] != fps["base"]
+
+
 def test_fingerprint_tracks_input_data_content(tmp_path, monkeypatch):
     """r6 verdict item 1: a green driver row certifies (plan, oracle,
     DATA). Regenerating the movies fixture (the r6 85k regen is the

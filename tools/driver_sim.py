@@ -4,6 +4,7 @@ value-hash compare (what CORRECTNESS_r{N}.json records)."""
 import hashlib
 import importlib.util
 import sys
+import time
 
 import duckdb
 
@@ -53,18 +54,25 @@ if len(sys.argv) > 1:
     qs = {n: qs[n] for n in sys.argv[1:]}
 fails = []
 for name in sorted(qs):
+    t0 = time.perf_counter()
     sdf = qs[name](spark, SF).toPandas()
+    spark_s = time.perf_counter() - t0
     if name not in oracles:
-        print(f"ROWS-ONLY {name}: {len(sdf)} rows")
+        print(f"ROWS-ONLY {name}: {len(sdf)} rows spark_s={spark_s:.2f} oracle_s=-")
         continue
+    t0 = time.perf_counter()
     odf = con.execute(oracles[name]).fetchdf()
+    oracle_s = time.perf_counter() - t0
     ok_rows = len(sdf) == len(odf)
     ok_cols = sorted(sdf.columns) == sorted(odf.columns)
     ok_hash = value_hash(sdf) == value_hash(odf)
     status = "MATCH" if (ok_rows and ok_cols and ok_hash) else "MISMATCH"
     if status == "MISMATCH":
         fails.append(name)
-    print(f"{status} {name}: spark_rows={len(sdf)} oracle_rows={len(odf)} cols_ok={ok_cols} hash_ok={ok_hash}")
+    print(
+        f"{status} {name}: spark_rows={len(sdf)} oracle_rows={len(odf)} cols_ok={ok_cols} "
+        f"hash_ok={ok_hash} spark_s={spark_s:.2f} oracle_s={oracle_s:.2f}"
+    )
 
 print("RESULT:", "ALL MATCH" if not fails else f"FAILURES: {fails}")
 
