@@ -168,20 +168,32 @@ def doc_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = shared_cache(
         spark, ("logreg_features", sf_dir), lambda: quality_features(spark, sf_dir)
     )
-    n = None  # folded into round 0's aggregation — one job per round, exactly
-    w = [0.0, 0.0, 0.0, 0.0]
+    rows, _ = _logreg_fit(feats)
+    return spark.createDataFrame(
+        rows,
+        "round int, sum_loss_q long, n_correct long, "
+        "w0 double, w1 double, w2 double, w3 double",
+    )
+
+
+def _logreg_fit(frame: DataFrame) -> tuple[list[tuple], list]:
+    """The quantized-gradient descent over ``frame``'s (y, x0..x3) rows:
+    ``_LR_ROUNDS`` rounds of ONE aggregation each — the 4 exact gradient
+    sums, the log-loss, the decision accuracy and the row count — with
+    the weight update as driver-side double arithmetic. Returns the
+    training curve, (round, loss_q, n_correct, w0..w3) at the weights in
+    effect that round, and the final weights.
+
+    An empty frame has no model: its round-0 sums are NULL, the weights
+    become NULL and every later round is NULL too — the same NULL
+    propagation as the unrolled oracle, whose curve keeps all its rows.
+    """
+    w: list = [0.0, 0.0, 0.0, 0.0]
     rows = []
     for t in range(_LR_ROUNDS):
-        margin = sum(F.lit(w[j]) * F.col(f"x{j}") for j in range(4))
+        margin = sum(F.lit(w[j]).cast("double") * F.col(f"x{j}") for j in range(4))
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
         r = p - F.col("y").cast("double")
-        # per-row quantization BEFORE the sum: exact long reduction
-        grads = [
-            F.sum(
-                F.round(r * F.col(f"x{j}") * _GRAD_SCALE).cast("long")
-            ).alias(f"g{j}")
-            for j in range(4)
-        ]
         # log-loss in softplus form: ln(1+e^margin) - y*margin, computed
         # as max(margin,0) + log1p(exp(-|margin|)) - y*margin. Never
         # evaluates log(0) when the sigmoid saturates (|margin| > ~37
@@ -189,30 +201,32 @@ def doc_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # y*log(p)+(1-y)*log(1-p) silently null-drops the row in Spark
         # while the replay raises) — and it is the same expression the
         # replay computes, so bit-exactness survives separable corpora.
-        m = margin
         logloss = (
-            F.greatest(m, F.lit(0.0))
-            + F.log1p(F.exp(-F.abs(m)))
-            - F.col("y").cast("double") * m
+            F.greatest(margin, F.lit(0.0))
+            + F.log1p(F.exp(-F.abs(margin)))
+            - F.col("y").cast("double") * margin
         )
-        agg = feats.agg(
-            *grads,
+        # per-row quantization BEFORE every sum: exact long reductions
+        agg = frame.agg(
+            *[
+                F.sum(F.round(r * F.col(f"x{j}") * _GRAD_SCALE).cast("long")).alias(
+                    f"g{j}"
+                )
+                for j in range(4)
+            ],
             F.sum(F.round(logloss * _LOSS_SCALE).cast("long")).alias("loss_q"),
-            F.sum(
-                ((p > 0.5).cast("int") == F.col("y")).cast("long")
-            ).alias("n_correct"),
+            F.sum(((p > 0.5).cast("int") == F.col("y")).cast("long")).alias(
+                "n_correct"
+            ),
             F.count(F.lit(1)).alias("n"),
         ).first()
-        if n is None:
-            n = agg["n"]
         rows.append((t, agg["loss_q"], agg["n_correct"], *w))
+        if agg["n"] == 0:
+            w = [None, None, None, None]
+            continue
         for j in range(4):
-            w[j] -= _LR_RATE * (agg[f"g{j}"] / _GRAD_SCALE) / n
-    return spark.createDataFrame(
-        rows,
-        "round int, sum_loss_q long, n_correct long, "
-        "w0 double, w1 double, w2 double, w3 double",
-    )
+            w[j] -= _LR_RATE * (agg[f"g{j}"] / _GRAD_SCALE) / agg["n"]
+    return rows, w
 
 
 def logreg_replay(feats: list[tuple], rounds: int = _LR_ROUNDS) -> list[tuple]:
@@ -310,57 +324,28 @@ _TRAIN_W_MEMO: dict[tuple, list] = {}
 register_release_hook(_TRAIN_W_MEMO.clear)
 
 
-def _train_split_weights(spark: SparkSession, sf_dir: str) -> list:
-    """The frozen train-split weights shared by
-    :func:`doc_quality_logreg_eval` and :func:`doc_quality_calibration`:
-    fit on the train split only, one exact-quantized-gradient
-    aggregation per round (the same recurrence both oracles unroll).
-    ``[None]*4`` on an empty train split — NULL weights flow through the
-    scoring expressions as NULL, matching the oracles' NULL propagation.
+def _split_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
+    """What :func:`doc_quality_logreg_eval` and
+    :func:`doc_quality_calibration` both score: ``labeled``, every
+    featured doc joined to its content-hash split, and the frozen
+    weights fit by :func:`_logreg_fit` on the train split only (the
+    recurrence both oracles unroll), memoized per (session, corpus) in
+    ``_TRAIN_W_MEMO``. An empty train split gives NULL weights, which
+    flow through the scoring expressions as NULL — the oracles' NULL
+    propagation.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TRAIN_W_MEMO.get(key)
-    if hit is not None:
-        return list(hit)
-
     from imdbmapreduce_spark.catalog import table
     from imdbmapreduce_spark.operators.text import split_assignment
 
     feats = shared_cache(
         spark, ("logreg_features", sf_dir), lambda: quality_features(spark, sf_dir)
     )
-    split = split_assignment(table(spark, sf_dir, "documents"))
-    train = feats.join(split, "doc_id").filter(F.col("split") == "train")
-
-    n = None
-    w: list = [0.0, 0.0, 0.0, 0.0]
-    for _ in range(_LR_ROUNDS):
-        margin = sum(F.lit(w[j]) * F.col(f"x{j}") for j in range(4))
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-        r = p - F.col("y").cast("double")
-        agg = train.agg(
-            *[
-                F.sum(F.round(r * F.col(f"x{j}") * _GRAD_SCALE).cast("long")).alias(
-                    f"g{j}"
-                )
-                for j in range(4)
-            ],
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        if n is None:
-            n = agg["n"]
-        if n == 0:
-            # empty train split (degenerate corpus): no model exists.
-            # NULL weights flow through the scoring expressions as NULL
-            # predictions/accuracy — the same NULL propagation the
-            # unrolled oracle produces — instead of a driver
-            # TypeError/ZeroDivisionError (review r5)
-            w = [None, None, None, None]
-            break
-        for j in range(4):
-            w[j] -= _LR_RATE * (agg[f"g{j}"] / _GRAD_SCALE) / n
-    _TRAIN_W_MEMO[key] = list(w)
-    return list(w)
+    labeled = feats.join(split_assignment(table(spark, sf_dir, "documents")), "doc_id")
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _TRAIN_W_MEMO:
+        _, w = _logreg_fit(labeled.filter(F.col("split") == "train"))
+        _TRAIN_W_MEMO[key] = w
+    return labeled, list(_TRAIN_W_MEMO[key])
 
 
 @query("doc_quality_logreg_eval", oracle=_logreg_eval_oracle_sql(), bench=True)
@@ -379,21 +364,13 @@ def doc_quality_logreg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the feature build joins the map-only split projection onto
     the cached feature table once; training sees |train| rows per round
     (same one-aggregation-per-round shape as `doc_quality_logreg`) and
-    is the shared :func:`_train_split_weights` fit — trained once per
+    is the shared :func:`_split_model` fit — trained once per
     (session, corpus), served to this report AND the calibration twin
     (r12: the two queries ran the identical 10-round fit back to back);
     the final scoring pass is a single grouped aggregation over all
     splits with the weights as literals.
     """
-    from imdbmapreduce_spark.catalog import table
-    from imdbmapreduce_spark.operators.text import split_assignment
-
-    feats = shared_cache(
-        spark, ("logreg_features", sf_dir), lambda: quality_features(spark, sf_dir)
-    )
-    split = split_assignment(table(spark, sf_dir, "documents"))
-    labeled = feats.join(split, "doc_id")
-    w = _train_split_weights(spark, sf_dir)
+    labeled, w = _split_model(spark, sf_dir)
 
     margin = sum(F.lit(w[j]).cast("double") * F.col(f"x{j}") for j in range(4))
     pred = (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)) > 0.5).cast("int")
@@ -904,19 +881,11 @@ def doc_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the same one-aggregation-per-round training as the eval twin
     (model-sized driver state only) via the shared
-    :func:`_train_split_weights` fit (r12: trained once per session,
+    :func:`_split_model` fit (r12: trained once per session,
     not re-fit per report), then ONE grouped aggregation over the val
     split — no sort, no window, 10 output rows at any corpus size.
     """
-    from imdbmapreduce_spark.catalog import table
-    from imdbmapreduce_spark.operators.text import split_assignment
-
-    feats = shared_cache(
-        spark, ("logreg_features", sf_dir), lambda: quality_features(spark, sf_dir)
-    )
-    split = split_assignment(table(spark, sf_dir, "documents"))
-    labeled = feats.join(split, "doc_id")
-    w = _train_split_weights(spark, sf_dir)
+    labeled, w = _split_model(spark, sf_dir)
 
     margin = sum(F.lit(w[j]).cast("double") * F.col(f"x{j}") for j in range(4))
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))

@@ -56,50 +56,51 @@ def test_pagerank_matches_python_reference(spark, sf_dir):
     assert got == want  # bit equality, every vertex
 
 
+def _adjacency(edges):
+    """(src, dsts, out_deg) rows of a (src, dst) edge frame — the input
+    shape of :func:`pagerank`."""
+    import pyspark.sql.functions as F
+
+    return edges.groupBy("src").agg(
+        F.collect_list("dst").alias("dsts"), F.count(F.lit(1)).alias("out_deg")
+    )
+
+
 def test_pagerank_is_partition_invariant(spark, sf_dir):
     """Same ranks regardless of how nodes/edges are partitioned — the
-    order-independence claim of the integer recurrence."""
+    order-independence claim of the integer recurrence — for plain
+    PageRank and for a personalized seed subset."""
     nodes = spark.range(6).selectExpr("id AS node")
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (5, 2)], ["src", "dst"]
     )
-    a = {r.node: r.rank_fp for r in pagerank(nodes, edges).collect()}
-    b = {
-        r.node: r.rank_fp
-        for r in pagerank(nodes.repartition(7), edges.repartition(5)).collect()
-    }
-    assert a == b
+    seed_sub = nodes.filter("node IN (0, 5)")
+
+    def ranks(nodes, edges, seeds):
+        return {
+            r.node: (r.rank_fp, r.is_seed)
+            for r in pagerank(nodes, _adjacency(edges), 8, seeds).collect()
+        }
+
+    plain = ranks(nodes, edges, None)
+    assert plain == ranks(nodes.repartition(7), edges.repartition(5), None)
     # sink-heavy vertex 2 must outrank the isolated-ish source 5
-    assert a[2] > a[5]
+    assert plain[2][0] > plain[5][0]
+    ppr = ranks(nodes, edges, seed_sub)
+    assert ppr == ranks(
+        nodes.repartition(7), edges.repartition(5), seed_sub.repartition(3)
+    )
+    assert {v for v, (_, is_seed) in ppr.items() if is_seed} == {0, 5}
 
 
 def test_pagerank_empty_and_isolated(spark):
     nodes = spark.range(3).selectExpr("id AS node")
     edges = spark.createDataFrame([(0, 1)], ["src", "dst"])
-    ranks = {r.node: r.rank_fp for r in pagerank(nodes, edges).collect()}
+    ranks = {r.node: r.rank_fp for r in pagerank(nodes, _adjacency(edges), 8).collect()}
     # isolated vertex 2 holds exactly the teleport mass
     base = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE // PR_DAMP_DEN // 3
     assert ranks[2] == base
     assert ranks[1] > ranks[2]  # receiver of 0's mass beats teleport-only
-
-
-def test_pagerank_adjacency_matches_flat_form(spark):
-    """The adjacency-list formulation must be bit-identical to the flat
-    edge formulation — same integer recurrence, different shuffle shape."""
-    import pyspark.sql.functions as F
-
-    from imdbmapreduce_spark.operators.graph import pagerank_adjacency
-
-    nodes = spark.range(6).selectExpr("id AS node")
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (5, 2)], ["src", "dst"]
-    )
-    adj = edges.groupBy("src").agg(
-        F.collect_list("dst").alias("dsts"), F.count(F.lit(1)).alias("out_deg")
-    )
-    flat = {r.node: r.rank_fp for r in pagerank(nodes, edges).collect()}
-    via_adj = {r.node: r.rank_fp for r in pagerank_adjacency(nodes, adj).collect()}
-    assert flat == via_adj
 
 
 def test_cosupplier_edges_symmetric(spark, sf_dir):
@@ -107,29 +108,6 @@ def test_cosupplier_edges_symmetric(spark, sf_dir):
     fwd = {(r.src, r.dst) for r in e.collect()}
     assert fwd  # non-empty at every sf
     assert all((d, s) in fwd for s, d in fwd)  # both directions present
-
-
-def test_pagerank_cache_key_routes_edge_table_through_shared_cache(spark):
-    """The keyed form must (a) produce the identical exact result as the
-    call-local form and (b) actually register the loop-invariant edge
-    table in the releasable shared cache under the given key."""
-    from imdbmapreduce_spark import cache as C
-    from imdbmapreduce_spark.operators.graph import pagerank
-
-    nodes = spark.createDataFrame([(i,) for i in range(6)], "node long")
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (3, 4), (4, 3), (5, 0)], "src long, dst long"
-    )
-    C.release_shared_caches()
-    try:
-        plain = sorted(map(tuple, pagerank(nodes, edges, iters=3).collect()))
-        keyed = sorted(
-            map(tuple, pagerank(nodes, edges, iters=3, cache_key=("t6",)).collect())
-        )
-        assert keyed == plain
-        assert any("pagerank_ed" in k for k in C._CACHE), list(C._CACHE)
-    finally:
-        C.release_shared_caches()
 
 
 def test_ppr_matches_python_reference_and_localizes(spark, sf_dir):

@@ -205,3 +205,44 @@ def test_calibration_bins_properties(spark, sf_dir):
         # closed) — the bin mean must sit inside its own bin
         assert r.bin * _CAL_PPM // _CAL_BINS <= r.predicted_ppm
         assert r.predicted_ppm <= (r.bin + 1) * _CAL_PPM // _CAL_BINS or r.bin == _CAL_BINS - 1
+
+
+def test_logreg_queries_match_oracles_on_empty_corpus(spark, sf_dir, tmp_path):
+    """An empty documents table trains no model: the training curve keeps
+    all its rounds — round 0 at the zero weights with NULL sums, all-NULL
+    rows after — and the eval and calibration reports are empty; each of
+    the three queries equals its DuckDB oracle."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from imdbmapreduce_spark.catalog import TABLES
+    from tests.oracle_util import compare, duckdb_connection
+
+    for t in TABLES:
+        src = f"{sf_dir}/{t}.parquet"
+        if t == "documents":
+            pq.write_table(pq.read_table(src).slice(0, 0), tmp_path / f"{t}.parquet")
+        else:
+            os.symlink(src, tmp_path / f"{t}.parquet")
+    empty = str(tmp_path)
+    con = duckdb_connection(empty)
+    try:
+        for name in (
+            "doc_quality_logreg",
+            "doc_quality_logreg_eval",
+            "doc_quality_calibration",
+        ):
+            rq = registry.get(name)
+            got = rq.fn(spark, empty).toPandas()
+            compare(got, con.execute(rq.oracle).fetchdf(), name)
+            if name != "doc_quality_logreg":
+                assert got.empty, name
+    finally:
+        con.close()
+    curve = sorted(
+        tuple(r) for r in registry.get("doc_quality_logreg").fn(spark, empty).collect()
+    )
+    assert curve == [(0, None, None, 0.0, 0.0, 0.0, 0.0)] + [
+        (t, None, None, None, None, None, None) for t in range(1, _LR_ROUNDS)
+    ]

@@ -3,14 +3,19 @@ then run queries() vs oracle_sql() at sf0.01 with an order-insensitive
 value-hash compare (what CORRECTNESS_r{N}.json records)."""
 import hashlib
 import importlib.util
+import os
 import sys
 import time
 
 import duckdb
 
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+# the checkout this script lives in, wherever that is
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+spec = importlib.util.spec_from_file_location(
+    "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
+)
 mod = importlib.util.module_from_spec(spec)
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 spec.loader.exec_module(mod)
 
 from pyspark.sql import SparkSession
@@ -97,7 +102,7 @@ from imdbmapreduce_spark import registry
 
 refresh_src = """
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from imdbmapreduce_spark import registry
 names = json.load(sys.stdin)
 manifest = dict(registry._manifest())
@@ -109,7 +114,7 @@ print(len(manifest))
 """
 ok_names = [name for name in qs if name not in fails]
 proc = subprocess.run(
-    [sys.executable, "-c", refresh_src],
+    [sys.executable, "-c", refresh_src, ROOT],
     input=json.dumps(ok_names),
     capture_output=True,
     text=True,
