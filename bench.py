@@ -85,7 +85,11 @@ def main() -> None:
 
     # Warmup pass: first execution of each plan shape pays JIT/codegen
     # compilation (measured 6-18s of one-off cost); steady-state is what a
-    # long-running cluster job sees, so that's what we time. Median-of-3
+    # long-running cluster job sees, so that's what we time. The warm-up
+    # covers codegen only because the session's generated-class cache
+    # holds the whole sweep (session.py); at Spark's default of 100
+    # entries it kept only the last ~100 classes, and every timed pass
+    # recompiled nearly all the rest. Median-of-3
     # timed passes: this VM shows ±50% scheduler jitter, and the r1→r2
     # uniform ~1.4× drift on untouched plans proved best-of-2 numbers have
     # noise comparable to real per-query deltas — medians resist a single

@@ -2145,8 +2145,11 @@ def snm_embedding_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rk").alias("rk_a"),
         F.explode(F.array(F.col("cell"), F.col("cell") + 1)).alias("cand_cell"),
     )
+    # The right side renames every column, ``k`` included: both sides
+    # project the same ``cells`` frame, so ``left.k == right.k`` would
+    # compare one attribute with itself (a trivially true predicate).
     right = cells.select(
-        "k",
+        F.col("k").alias("k_b"),
         F.col("vec_id").alias("id_b"),
         F.col("rk").alias("rk_b"),
         F.col("cell").alias("cell_b"),
@@ -2154,7 +2157,7 @@ def snm_embedding_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff = F.col("rk_b") - F.col("rk_a")
     return (
         left.join(
-            right, (left.cand_cell == right.cell_b) & (left.k == right.k)
+            right, (F.col("cand_cell") == F.col("cell_b")) & (F.col("k") == F.col("k_b"))
         )
         .filter((diff >= 1) & (diff <= _SNM_EMB_W))
         .select(

@@ -327,3 +327,64 @@ def test_catalog_schema_memo_skips_inference_job_and_tracks_rewrites(spark, tmp_
     release_shared_caches()
     _, n_released = read("schema-memo-released")
     assert n_released == 1, "release_shared_caches must empty the memo"
+
+
+def _classes_compiled(spark) -> int:
+    """Generated classes compiled by this JVM so far: one count per miss
+    of Spark's generated-class cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def test_warm_rerun_compiles_nothing(spark, sf_dir):
+    """A query run again after more than 100 other classes were compiled
+    (Spark's default cache size, under which LRU eviction forces a
+    recompile) compiles nothing: the session's codegen cache holds the
+    engine's working set."""
+    import random
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from imdbmapreduce_spark import registry
+
+    queries = registry.all_queries()
+
+    def run(df) -> int:
+        c0 = _classes_compiled(spark)
+        df.write.format("noop").mode("overwrite").save()
+        return _classes_compiled(spark) - c0
+
+    first, *others = ["q10_returned_revenue", "q8_market_share", "q21_sole_late_suppliers"]
+    run(queries[first](spark, sf_dir))
+    since_first = sum(run(queries[name](spark, sf_dir)) for name in others)
+    # Earlier tests may have compiled those queries already; top up with
+    # plan shapes no run has seen (fresh literals) until more than 100
+    # classes were compiled after the first query.
+    while since_first <= 100:
+        base = random.getrandbits(40)
+        since_first += run(
+            reduce(
+                DataFrame.unionAll,
+                [spark.range(1).select((F.col("id") + F.lit(base + i)).alias("x")) for i in range(26)],
+            )
+        )
+    assert run(queries[first](spark, sf_dir)) == 0, "a warm re-run must not recompile"
+
+
+def test_stage_code_compiles_once_in_any_plan_position(spark):
+    """A generated class is keyed by its code, not by the whole-stage id
+    that AQE assigns in stage-creation order: the same two aggregations
+    unioned in the other order compile nothing. With the id in the class
+    name, each stage compiles again under its new id, which is what made
+    multi-branch queries such as ann_recall_audit recompile on every
+    call (their stage order depends on which stage finishes first)."""
+    import random
+
+    base = random.getrandbits(40)
+    a = spark.range(100).groupBy((F.col("id") % 7).alias("k")).agg(F.sum(F.col("id") + F.lit(base)).alias("s"))
+    b = spark.range(100).groupBy((F.col("id") % 5).alias("k")).agg(F.max(F.col("id") + F.lit(base)).alias("s"))
+    a.unionByName(b).write.format("noop").mode("overwrite").save()
+    c0 = _classes_compiled(spark)
+    b.unionByName(a).write.format("noop").mode("overwrite").save()
+    assert _classes_compiled(spark) - c0 == 0
