@@ -23,6 +23,8 @@ are the exception; see the frequency-cap note on neardup_ngram_jaccard).
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
@@ -463,26 +465,93 @@ def minhash_signature(sh: Column) -> Column:
     )
 
 
-def _minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_a, doc_b) LSH band-bucket candidates — the
-    sub-quadratic candidate generator shared by :func:`minhash_lsh_pairs`
-    and the routed band branch of :func:`neardup_pairs_routed` (one
-    definition, so the routed family can never drift from the audited
-    one). Signature table comes from the persisted/cached index artifact
-    (the 64-way min agg is the expensive stage; cold sessions load it
-    from parquet)."""
-    bands = _bands_of(_minhash_sig_cached(spark, sf_dir))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
+# The MinHash family's verify threshold as an exact rational, matched
+# to the 16x4 band s-curve: J >= 1/2  <=>  3*n_common >= n_a + n_b.
+_LSH_TAU_NUM, _LSH_TAU_DEN = 1, 2
+
+
+def _minhash_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    tau_num: int,
+    tau_den: int,
+    shard_docs: DataFrame | None = None,
+) -> DataFrame:
+    """The MinHash family's one candidate→verify plan: LSH band-bucket
+    collisions, then the exact Jaccard of the hashed shingle sets under
+    the integer gate (num+den)·n_common >= num·(n_a+n_b) — J >= num/den
+    with no float deciding membership.
+
+    ``shard_docs=None`` is the batch self-join over the corpus index
+    (doc_a < doc_b). With ``shard_docs`` — (doc_id, text) of ARRIVING
+    rows — only the shard is shingled and min-aggregated; it probes the
+    base corpus (the persisted index minus the standing shard residue)
+    in role order (doc_a = arriving doc) with doc_a != doc_b, so a
+    re-delivered document whose id is still in the base never emits a
+    jaccard-1.0 SELF-match while its true near-dups still surface.
+    Returns (doc_a, doc_b, jaccard).
+
+    Signatures come from the persisted/cached index artifact (the 64-way
+    min agg is the expensive stage; cold sessions load it from parquet).
+    The band join carries only (doc_id, band, bucket) — the hashed
+    shingle lists join in after the candidate dedup, so the 16x band
+    explode never duplicates them.
+    """
+    def sets_of(hx: DataFrame) -> DataFrame:
+        return hx.groupBy("doc_id").agg(F.collect_list("hx").alias("sh"))
+
+    if shard_docs is None:
+        pair = operator.lt
+        bands_a = bands_b = _bands_of(_minhash_sig_cached(spark, sf_dir))
+        sets_a = sets_b = sets_of(_shingle_hx_cached(spark, sf_dir))
+    else:
+        pair = operator.ne
+        hx = _shingle_rows_of(shard_docs).select(
+            "doc_id", F.xxhash64("shingle").alias("hx")
+        )
+        bands_a = _bands_of(hx.groupBy("doc_id").agg(*_minhash_agg_cols()))
+        sets_a = sets_of(hx)
+        # The base-side DERIVED frames are session-cached: the streaming
+        # gate calls this once per MICRO-BATCH, and without the cache
+        # each batch would re-run the full-corpus collect_list
+        # aggregation — arrival cost must stay shard-proportional.
+        bands_b = shared_cache(
+            spark,
+            ("neardup_base_bands", sf_dir, _SHARD_MOD, _SHARD_RESIDUE, _N_PERM, _N_BANDS),
+            lambda: _bands_of(
+                _minhash_sig_cached(spark, sf_dir).filter(~_is_shard("doc_id"))
+            ),
+        )
+        sets_b = shared_cache(
+            spark,
+            ("neardup_base_sets", sf_dir, _SHARD_MOD, _SHARD_RESIDUE, 3),
+            lambda: sets_of(
+                _shingle_hx_cached(spark, sf_dir).filter(~_is_shard("doc_id"))
+            ),
+        )
+    cand = (
+        bands_a.alias("a")
+        .join(
+            bands_b.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & pair(F.col("a.doc_id"), F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
+    )
+    n_a, n_b = F.size("sh_a").cast("long"), F.size("sh_b").cast("long")
+    n_common = F.col("n_common")
+    return (
+        cand.join(sets_a.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
+        .join(sets_b.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
+        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
+        .filter((tau_num + tau_den) * n_common >= tau_num * (n_a + n_b))
+        .select(
+            "doc_a",
+            "doc_b",
+            (n_common.cast("double") / (n_a + n_b - n_common)).alias("jaccard"),
+        )
     )
 
 
@@ -492,7 +561,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pipeline: shingle explode → 64-way min hash-aggregate (one shuffle on
     doc_id) → 16 bands of 4 rows → band bucket self-join → distinct slim
-    (doc_a, doc_b) pairs → join shingle sets back → exact-Jaccard >= 0.5.
+    (doc_a, doc_b) pairs → join shingle sets back → exact-Jaccard >= 1/2
+    (integer gate, see :func:`_minhash_pairs`).
 
     Same math as :func:`minhash_signature` (min of xxhash64(shingle, i));
     expressed as ``explode + groupBy(64 mins)`` instead of per-row
@@ -511,20 +581,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pre-hash each shingle to one int64: the 64 permutations then re-key
     # an 8-byte long instead of re-hashing a ~25-byte string 64 times, and
     # the verify sets carry longs (collision prob ~2^-64·|pairs| — nil,
-    # and deterministic). cache: feeds the signature build AND the verify
-    # sets; prefers the persisted text index when present.
-    ex = _shingle_hx_cached(spark, sf_dir)
-    sh = ex.groupBy("doc_id").agg(F.collect_list("hx").alias("sh"))
-    cand = _minhash_band_candidates(spark, sf_dir)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
-        .withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # and deterministic). Both come from the shared shingle_hx artifact,
+    # which prefers the persisted text index when present.
+    return _minhash_pairs(spark, sf_dir, _LSH_TAU_NUM, _LSH_TAU_DEN)
 
 
 # --- incremental near-dup ingest (shard vs persisted index) ----------------
@@ -544,22 +603,24 @@ def shard_neardup_lookup(
     spark: SparkSession,
     sf_dir: str,
     shard_docs: DataFrame,
-    tau_num: int | None = None,
-    tau_den: int | None = None,
+    tau_num: int = _LSH_TAU_NUM,
+    tau_den: int = _LSH_TAU_DEN,
 ) -> DataFrame:
     """The production ingest loop's core: check ARRIVING documents
     against the EXISTING MinHash index without recomputing the corpus
-    side.
+    side — :func:`_minhash_pairs` in its probe-vs-base mode.
 
     ``shard_docs`` is (doc_id, text) of the arriving rows. Corpus-side
     signatures/shingle sets come from the persisted text-index artifacts
     (indexstore group "text"; session-cached, parquet-served on cold
     sessions) filtered to base docs — the expensive 64-way min
     aggregation and the shingle explode run ONLY over the shard.
-    Returns (new_doc, matched_doc, jaccard) with exact Jaccard >= 0.5,
-    matched_doc always a base-corpus doc. Shared by the batch
-    :func:`neardup_incremental_ingest` and its streaming micro-batch
-    twin (streaming/windowed.py) — one lookup definition, no drift.
+    Returns (new_doc, matched_doc, jaccard) with exact Jaccard >=
+    tau_num/tau_den (the family's 1/2 by default; the routed ingest gate
+    verifies at the prefix families' 3/5), matched_doc always a
+    base-corpus doc. Shared by the batch
+    :func:`neardup_incremental_ingest`, the routed ingest gate's band
+    branch and the streaming micro-batch twin (streaming/windowed.py).
 
     Contract: the base side is the persisted index minus the standing
     shard residue (``_SHARD_MOD``/``_SHARD_RESIDUE``), so ``shard_docs``
@@ -568,80 +629,8 @@ def shard_neardup_lookup(
     known document can never emit a spurious jaccard-1.0 SELF-match —
     its true near-dups (other base docs) still surface normally.
     """
-    # shard-only shingles + signatures (the only fresh computation)
-    sh_rows = _shingle_rows_of(shard_docs).select(
-        "doc_id", F.xxhash64("shingle").alias("hx")
-    )
-    shard_sig = sh_rows.groupBy("doc_id").agg(*_minhash_agg_cols())
-    shard_bands = _bands_of(shard_sig)
-    shard_sets = sh_rows.groupBy("doc_id").agg(F.collect_list("hx").alias("sh"))
-
-    # Corpus side: persisted/cached artifacts filtered to the base —
-    # and the DERIVED band/set frames are themselves session-cached:
-    # the streaming gate calls this once per MICRO-BATCH, and without
-    # the cache each batch would re-run the full-corpus collect_list
-    # aggregation, violating the arrival-cost contract below.
-    base_bands = shared_cache(
-        spark,
-        ("neardup_base_bands", sf_dir, _SHARD_MOD, _SHARD_RESIDUE, _N_PERM, _N_BANDS),
-        lambda: _bands_of(
-            _minhash_sig_cached(spark, sf_dir).filter(~_is_shard("doc_id"))
-        ),
-    )
-    base_sets = shared_cache(
-        spark,
-        ("neardup_base_sets", sf_dir, _SHARD_MOD, _SHARD_RESIDUE, 3),
-        lambda: _shingle_hx_cached(spark, sf_dir)
-        .filter(~_is_shard("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.collect_list("hx").alias("sh")),
-    )
-
-    s = shard_bands.alias("s")
-    b = base_bands.alias("b")
-    cand = (
-        s.join(
-            b,
-            (F.col("s.band") == F.col("b.band"))
-            & (F.col("s.bucket") == F.col("b.bucket"))
-            # a re-delivered doc whose id is already in the base index
-            # must not self-match (see the contract note above)
-            & (F.col("s.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.col("s.doc_id").alias("new_doc"),
-            F.col("b.doc_id").alias("matched_doc"),
-        )
-        .dropDuplicates(["new_doc", "matched_doc"])
-    )
-    inter = F.size(F.array_intersect("sh_new", "sh_base"))
-    union = F.size("sh_new") + F.size("sh_base") - inter
-    # Gate: the historical family threshold (jaccard >= 0.5, matched to
-    # the 16x4 band s-curve) unless the caller passes an integer tau —
-    # the routed ingest gate verifies at the prefix families' 3/5 with
-    # the exact cross-multiplication, so no float decides membership.
-    if tau_num is None:
-        gate = F.col("jaccard") >= 0.5
-    else:
-        gate = (tau_num + tau_den) * inter >= tau_num * (
-            F.size("sh_new") + F.size("sh_base")
-        )
-    return (
-        cand.join(
-            shard_sets.select(
-                F.col("doc_id").alias("new_doc"), F.col("sh").alias("sh_new")
-            ),
-            "new_doc",
-        )
-        .join(
-            base_sets.select(
-                F.col("doc_id").alias("matched_doc"), F.col("sh").alias("sh_base")
-            ),
-            "matched_doc",
-        )
-        .withColumn("jaccard", inter.cast("double") / union)
-        .filter(gate)
-        .select("new_doc", "matched_doc", "jaccard")
+    return _minhash_pairs(spark, sf_dir, tau_num, tau_den, shard_docs).select(
+        F.col("doc_a").alias("new_doc"), F.col("doc_b").alias("matched_doc"), "jaccard"
     )
 
 
@@ -807,6 +796,9 @@ _MAX_SIMHASH_TOKENS = 32767
 # linearly, the join output stops growing quadratically.
 _BLOCK_WIDTHS = (11, 11, 11, 11, 10, 10)
 _BLOCK_OFFSETS = (0, 11, 22, 33, 44, 54)
+# The radius the 3-of-6 tables are complete for; a wider radius needs
+# smaller block subsets (k-of-6 with k = 6 - d), not a larger constant.
+_MAX_HAMMING = 3
 
 
 def _simhash_tables() -> list[tuple[int, ...]]:
@@ -892,7 +884,9 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: permuted-block candidate join + exact
     Hamming verify — :func:`simhash_fingerprints` piped into the shared
-    :func:`hamming_pairs` banded join.
+    :func:`hamming_pairs` banded join in its self-join mode (the arrival
+    gate, :func:`simhash_incremental_ingest`, runs its probe-vs-base
+    mode).
 
     Scale: see :func:`hamming_pairs` (the join machinery) and
     :func:`simhash_fingerprints` (the fingerprint build).
@@ -905,8 +899,8 @@ def _hamming_bands(dfp: DataFrame) -> DataFrame:
     """(fp, tbl, key) band rows for the 20 permuted-block tables — one
     (tbl, key) row per table; key packs the table's 3 block values into
     16-bit lanes of one long (block width <= 11 < 16, no overlap).
-    Shared by the batch self-join (:func:`hamming_pairs`) and the
-    incremental shard lookup (:func:`hamming_lookup`). Built as one
+    Shared by both modes of :func:`hamming_pairs` (batch self-join and
+    the probe-vs-base shard lookup). Built as one
     parsed SQL string — this plan is rebuilt per arriving shard (see
     simhash_fingerprints for the fresh-plan-cost measurement)."""
 
@@ -929,76 +923,6 @@ def _hamming_bands(dfp: DataFrame) -> DataFrame:
     )
 
 
-def hamming_lookup(
-    probe_members: DataFrame, base_members: DataFrame, max_hamming: int = 3
-) -> DataFrame:
-    """Cross-corpus variant of :func:`hamming_pairs`: every (probe,
-    base) pair within ``max_hamming`` bits — the ARRIVAL-time lookup of
-    the Hamming fingerprint family (token SimHash, image perceptual
-    hash, ...): probe fingerprints are the arriving shard's, the base
-    side is the existing index, and no probe-probe or base-base pair is
-    ever formed. Same 20 permuted-block tables, same completeness
-    guarantee (recall proven for distance <= 3), same
-    identical-fingerprint short-circuit.
-
-    Returns (probe_doc, base_doc, hamming).
-
-    Scale: band rows are 20 per DISTINCT fingerprint PER SIDE; the join
-    keys on (tbl, key) — probe side is shard-sized, so arrival cost is
-    proportional to the shard plus collision output, never the corpus.
-    """
-    if max_hamming > 3:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the 3-of-6 banding's "
-            "completeness guarantee (distance <= 3)"
-        )
-    p, b = probe_members.alias("p"), base_members.alias("b")
-    # doc_id inequality for the same reason as shard_neardup_lookup's
-    # candidate guard: a probe doc that still exists in the base index
-    # (caller passed ids outside the standing shard residue) must not
-    # emit a hamming-0 SELF-match.
-    same = p.join(
-        b,
-        (F.col("p.fp") == F.col("b.fp"))
-        & (F.col("p.doc_id") != F.col("b.doc_id")),
-    ).select(
-        F.col("p.doc_id").alias("probe_doc"),
-        F.col("b.doc_id").alias("base_doc"),
-        F.lit(0).cast("int").alias("hamming"),
-    )
-    pb = _hamming_bands(probe_members.select("fp").distinct()).alias("pb")
-    bb = _hamming_bands(base_members.select("fp").distinct()).alias("bb")
-    fp_pairs = (
-        pb.join(
-            bb,
-            (F.col("pb.tbl") == F.col("bb.tbl"))
-            & (F.col("pb.key") == F.col("bb.key"))
-            & (F.col("pb.fp") != F.col("bb.fp")),
-        )
-        .select(
-            F.col("pb.fp").alias("fp_p"),
-            F.col("bb.fp").alias("fp_b"),
-            F.bit_count(F.col("pb.fp").bitwiseXOR(F.col("bb.fp")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["fp_p", "fp_b"])
-    )
-    cross = (
-        fp_pairs.join(
-            probe_members.select(F.col("fp").alias("fp_p"), F.col("doc_id").alias("probe_doc")),
-            "fp_p",
-        )
-        .join(
-            base_members.select(F.col("fp").alias("fp_b"), F.col("doc_id").alias("base_doc")),
-            "fp_b",
-        )
-        .select("probe_doc", "base_doc", "hamming")
-    )
-    return same.unionByName(cross)
-
-
 @query("simhash_incremental_ingest")  # no SQL oracle: xxhash SimHash family;
 # pinned hash-equal to the batch simhash_pairs restriction in
 # tests/test_dedup.py::test_simhash_incremental_equals_batch_restriction
@@ -1007,7 +931,7 @@ def simhash_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving documents fingerprinted fresh (SimHash over the shard
     only) and looked up against the PERSISTED fingerprint artifact
     (indexstore "text" group simhash_fp, filtered to base docs) through
-    the shared :func:`hamming_lookup` banded cross join. Together the
+    :func:`hamming_pairs` in its probe-vs-base mode. Together the
     two gates cover both near-dup families a production ingest runs:
     set-similarity (MinHash/Jaccard) and bit-similarity (SimHash /
     perceptual hashes — the SAME lookup serves image pHash arrivals).
@@ -1018,8 +942,8 @@ def simhash_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count. Corpus side never recomputes.
     """
     docs = table(spark, sf_dir, "documents")
-    # The lookup consumes the probe side 4 ways (identical-fp join,
-    # distinct-fp bands, and the two expand joins); checkpoint the
+    # The lookup consumes the probe side 3 ways (identical-fp join,
+    # distinct-fp bands, and its expand join); checkpoint the
     # freshly-computed shard fingerprints once — shard-sized slim rows —
     # so the tokenize/hash/bit-count pipeline doesn't re-execute per
     # consumer.
@@ -1027,17 +951,25 @@ def simhash_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_fingerprints(docs.filter(_is_shard("doc_id")))
     )
     base_fp = _simhash_fp_cached(spark, sf_dir).filter(~_is_shard("doc_id"))
-    return (
-        hamming_lookup(shard_fp, base_fp)
-        .withColumnRenamed("probe_doc", "new_doc")
-        .withColumnRenamed("base_doc", "matched_doc")
+    return hamming_pairs(shard_fp, base_fp).select(
+        F.col("doc_a").alias("new_doc"), F.col("doc_b").alias("matched_doc"), "hamming"
     )
 
 
-def hamming_pairs(members: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """All pairs within ``max_hamming`` bits over ANY (doc_id, fp) input —
-    the fingerprint source is pluggable (token SimHash, image perceptual
-    hash, audio chromaprint, ...); this is the shared scale path.
+def hamming_pairs(members: DataFrame, base: DataFrame | None = None) -> DataFrame:
+    """All pairs within ``_MAX_HAMMING`` (3) bits over ANY (doc_id, fp)
+    input — the fingerprint source is pluggable (token SimHash, image
+    perceptual hash, audio chromaprint, ...); this is the shared scale
+    path for batch and arrival alike.
+
+    ``base=None`` is the batch self-join: unordered pairs, doc_a < doc_b.
+    With ``base`` set it is the ARRIVAL lookup: ``members`` are the
+    arriving shard's fingerprints, ``base`` the existing index, and
+    every (probe, base) pair comes out in role order (doc_a = probe)
+    with no probe-probe or base-base pair ever formed. The two modes
+    differ only in the pair predicate (``<`` vs ``!=``); the probe-vs-base
+    ``!=`` also keeps a re-delivered probe whose id is still in the base
+    from emitting a hamming-0 SELF-match.
 
     20 tables keyed on 3-of-6 fingerprint blocks (~32 key bits) guarantee
     recall for Hamming distance <= 3 (pigeonhole over blocks — see the
@@ -1045,23 +977,15 @@ def hamming_pairs(members: DataFrame, max_hamming: int = 3) -> DataFrame:
     per table instead of a 16-bit chunk scheme's n²/2^16.
 
     Scale: fingerprints are 8 bytes/doc; the table join shuffles 20 slim
-    rows per DISTINCT fingerprint (linear), its output is
-    collision-bounded (not bucket-count-bounded), and duplicate-document
-    clusters never enter it at all. bit_count is a single codegen'd
-    instruction.
+    rows per DISTINCT fingerprint per side (linear; shard-sized on the
+    probe side), its output is collision-bounded (not
+    bucket-count-bounded), and duplicate-document clusters never enter
+    it at all. bit_count is a single codegen'd instruction.
 
-    ``max_hamming`` must be <= 3: the 3-of-6 banding only GUARANTEES
-    recall through distance 3 (pigeonhole over the six blocks). A larger
-    value would emit only pairs the bands happen to catch — silently
-    incomplete — so it is rejected rather than half-honored (ADVICE r4);
-    a wider radius needs smaller band subsets (k-of-6 with k = 6 - d).
+    Returns (doc_a, doc_b, hamming).
     """
-    if max_hamming > 3:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the 3-of-6 banding's "
-            "completeness guarantee (distance <= 3); rebuild the band "
-            "tables with (6 - d)-block subsets for a wider radius"
-        )
+    pair = operator.lt if base is None else operator.ne
+    base = members if base is None else base
     # Identical-fingerprint clusters (the dominant mass in a duplicate-
     # heavy corpus — one 249-doc cluster at sf0.1 alone is 31k pairs)
     # short-circuit the banded join entirely: emit their pairs directly
@@ -1071,25 +995,24 @@ def hamming_pairs(members: DataFrame, max_hamming: int = 3) -> DataFrame:
     # ~98k true pairs; with it the join sees each fp once (3,897
     # distinct fps at sf0.1 → 135k join rows, an 11x cut vs the old
     # 16-bit chunk scheme's 1.5M).
-    x, y = members.alias("x"), members.alias("y")
+    x, y = members.alias("x"), base.alias("y")
     intra = x.join(
-        y, (F.col("x.fp") == F.col("y.fp")) & (F.col("x.doc_id") < F.col("y.doc_id"))
+        y, (F.col("x.fp") == F.col("y.fp")) & pair(F.col("x.doc_id"), F.col("y.doc_id"))
     ).select(
         F.col("x.doc_id").alias("doc_a"),
         F.col("y.doc_id").alias("doc_b"),
         F.lit(0).cast("int").alias("hamming"),
     )
 
-    dfp = members.select("fp").distinct()
-    bands = _hamming_bands(dfp)
-    a = bands.alias("a")
-    b = bands.alias("b")
+    a = _hamming_bands(members.select("fp").distinct())
+    b = a if base is members else _hamming_bands(base.select("fp").distinct())
     fp_pairs = (
-        a.join(
-            b,
+        a.alias("a")
+        .join(
+            b.alias("b"),
             (F.col("a.tbl") == F.col("b.tbl"))
             & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.fp") < F.col("b.fp")),
+            & pair(F.col("a.fp"), F.col("b.fp")),
         )
         .select(
             F.col("a.fp").alias("fp_a"),
@@ -1098,23 +1021,19 @@ def hamming_pairs(members: DataFrame, max_hamming: int = 3) -> DataFrame:
         )
         # filter BEFORE dedup: only true fp pairs (<= 20 copies each)
         # reach the dropDuplicates shuffle; background collisions at ~32
-        # key bits are negligible. (Recall is guaranteed for <= 3; a
-        # larger max_hamming keeps correctness of emitted pairs but the
-        # pigeonhole bound no longer covers every pair.)
-        .filter(F.col("hamming") <= max_hamming)
+        # key bits are negligible.
+        .filter(F.col("hamming") <= _MAX_HAMMING)
         .dropDuplicates(["fp_a", "fp_b"])
     )
     # expand verified fp pairs to doc pairs — two output-sized joins
-    cross = (
-        fp_pairs.join(members.select(F.col("fp").alias("fp_a"), F.col("doc_id").alias("id_a")), "fp_a")
-        .join(members.select(F.col("fp").alias("fp_b"), F.col("doc_id").alias("id_b")), "fp_b")
-        .select(
-            F.least("id_a", "id_b").alias("doc_a"),
-            F.greatest("id_a", "id_b").alias("doc_b"),
-            "hamming",
-        )
-    )
-    return intra.unionByName(cross)
+    cross = fp_pairs.join(
+        members.select(F.col("fp").alias("fp_a"), F.col("doc_id").alias("id_a")), "fp_a"
+    ).join(base.select(F.col("fp").alias("fp_b"), F.col("doc_id").alias("id_b")), "fp_b")
+    if pair is operator.lt:  # fp order says nothing about doc order
+        ids = [F.least("id_a", "id_b").alias("doc_a"), F.greatest("id_a", "id_b").alias("doc_b")]
+    else:
+        ids = [F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")]
+    return intra.unionByName(cross.select(*ids, "hamming"))
 
 
 # --- connected-components clustering (pairs → cluster assignment) ---------
@@ -1533,6 +1452,49 @@ def _prefix_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _overlap_counts(
+    ex: DataFrame, a: DataFrame, b: DataFrame, on: Column
+) -> DataFrame:
+    """Candidate→verify half both prefix joins (:func:`_jaccard_join`,
+    :func:`_containment_join`) share: posting frames ``a`` and ``b``
+    (doc_id, shingle, n_sh, rn) joined on ``on`` (which names them
+    ``a.``/``b.``), deduped to distinct (doc_a, doc_b, n_a, n_b), then
+    the exact overlap of each pair's FULL shingle sets in ``ex``
+    (distinct doc_id, shingle) as n_common.
+
+    The pair's sizes flow THROUGH the candidate join (n_sh rides both
+    posting frames) instead of being re-derived by a sizes groupBy + two
+    post-verify joins — one exchange and two joins gone, measured
+    2.27 s → 1.74 s warm at sf0.1 on the containment join (n_a/n_b are
+    functions of the doc ids, so the distinct() dedupes exactly as
+    before). The verify is an exploded equi-join keyed (doc, shingle):
+    measured FASTER than an array_intersect verify here — 174k
+    candidates × ~40-shingle docs shuffle slim (id, shingle) rows, where
+    the array form ships both full arrays to every pair row (80
+    strings/pair — 2.5× the bytes, 4.5× the time at sf0.1)."""
+    cand = (
+        a.alias("a")
+        .join(b.alias("b"), on)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n_sh").cast("long").alias("n_a"),
+            F.col("b.n_sh").cast("long").alias("n_b"),
+        )
+        .distinct()
+    )
+    return (
+        ex.select(F.col("doc_id").alias("doc_a"), "shingle")
+        .join(cand, "doc_a")
+        .join(
+            ex.select(F.col("doc_id").alias("doc_b"), "shingle"),
+            ["doc_b", "shingle"],
+        )
+        .groupBy("doc_a", "doc_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
+    )
+
+
 def _jaccard_join(
     spark: SparkSession,
     sf_dir: str,
@@ -1614,44 +1576,18 @@ def _jaccard_join(
         if side_a is not None or side_b is not None
         else F.col("a.doc_id") < F.col("b.doc_id")
     )
-    # r12 optimization (guide §2.4): the pair's (n_a, n_b) flow THROUGH
-    # the candidate join (n_sh rides both prefix sides already) instead
-    # of being re-derived by a sizes groupBy + two post-verify joins —
-    # one exchange and two joins gone; n_a/n_b are functions of the doc
-    # ids, so the distinct() dedupes exactly as before. Same change as
-    # _containment_join's (measured there: 2.27 s → 1.74 s warm sf0.1).
-    cand = (
-        pa.alias("a")
-        .join(
-            pb.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & pair_pred
-            & (_PFX_TAU_DEN * _min_n >= _PFX_TAU_NUM * _max_n)
-            & (
-                (_PFX_TAU_NUM + _PFX_TAU_DEN) * _ub
-                >= _PFX_TAU_NUM * (F.col("a.n_sh") + F.col("b.n_sh"))
-            ),
+    on = (
+        (F.col("a.shingle") == F.col("b.shingle"))
+        & pair_pred
+        & (_PFX_TAU_DEN * _min_n >= _PFX_TAU_NUM * _max_n)
+        & (
+            (_PFX_TAU_NUM + _PFX_TAU_DEN) * _ub
+            >= _PFX_TAU_NUM * (F.col("a.n_sh") + F.col("b.n_sh"))
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").cast("long").alias("n_a"),
-            F.col("b.n_sh").cast("long").alias("n_b"),
-        )
-        .distinct()
-    )
-    common = (
-        ex.select(F.col("doc_id").alias("doc_a"), "shingle")
-        .join(cand, "doc_a")
-        .join(
-            ex.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
     )
     return (
-        common.filter(
+        _overlap_counts(ex, pa, pb, on)
+        .filter(
             (_PFX_TAU_NUM + _PFX_TAU_DEN) * F.col("n_common")
             >= _PFX_TAU_NUM * (F.col("n_a") + F.col("n_b"))
         )
@@ -1887,43 +1823,13 @@ def _neardup_routed(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
     with exact 3-gram Jaccard >= {num}/{den}, gated by the integer
     cross-multiplication (never a float) — they differ only in
     candidate generation: the df-ceiling prefix join vs the MinHash
-    band-bucket join (shared with :func:`minhash_lsh_pairs` via
-    :func:`_minhash_band_candidates`)."""
+    band-bucket join (:func:`_minhash_pairs`, the plan
+    :func:`minhash_lsh_pairs` runs at its own 1/2)."""
     if family == "bounded_prefix":
         return _jaccard_join(spark, sf_dir, df_ceil=_JAC_DF_CEIL).select(
             "doc_a", "doc_b", "jaccard"
         )
-    sh = (
-        _shingle_hx_cached(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(F.collect_list("hx").alias("sh"))
-    )
-    cand = _minhash_band_candidates(spark, sf_dir)
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-    n_a, n_b = F.size("sh_a").cast("long"), F.size("sh_b").cast("long")
-    return (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
-        .withColumn("n_common", inter)
-        .filter(
-            (_PFX_TAU_NUM + _PFX_TAU_DEN) * F.col("n_common")
-            >= _PFX_TAU_NUM * (n_a + n_b)
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (n_a + n_b - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-    )
+    return _minhash_pairs(spark, sf_dir, _PFX_TAU_NUM, _PFX_TAU_DEN)
 
 
 _neardup_routed.__doc__ = _neardup_routed.__doc__.format(
@@ -2359,9 +2265,6 @@ def neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             emb_truth.filter(one_end_shard),
         ),
-        # ORDERED pairs (doc_a = contained) on both sides — no
-        # least/greatest normalization; the truth is the exact
-        # containment join itself, checkpointed below like the others.
         # Bounded-form arms: df-ceiling variants scored against their
         # exact twins' truth. Jaccard pairs are id-normalized on both
         # sides; containment pairs are ORDERED (doc_a = contained).
@@ -2953,26 +2856,24 @@ def _containment_join(
     ranked = _shingle_ranked_cached(spark, sf_dir)
     if df_ceil is not None:
         # df-ceiling on the posting lists entering the candidate join
-        # (BOTH sides — same shingle, same df; stated once each so the
-        # optimizer prunes each scan). rn/n_sh stay as computed over the
-        # FULL order, so a pair is detected iff its RAREST shared
-        # shingle has df <= ceiling — the bounded-recall semantics the
-        # oracle reproduces and neardup_recall_audit scores.
+        # (BOTH sides — same shingle, same df; the prefix below derives
+        # from the ceiled frame, so the optimizer prunes each scan).
+        # rn/n_sh stay as computed over the FULL order, so a pair is
+        # detected iff its RAREST shared shingle has df <= ceiling — the
+        # bounded-recall semantics the oracle reproduces and
+        # neardup_recall_audit scores.
         ranked = ranked.filter(F.col("df") <= df_ceil)
-    ranked = ranked.select("doc_id", "shingle", "n_sh", "rn")
-    if container_where is not None:
-        ranked = ranked.filter(container_where)
-    pref = _shingle_ranked_cached(spark, sf_dir).filter(
+    pref = ranked.filter(
         F.col("rn")
         <= F.col("n_sh")
         - F.expr(f"({_CNT_TAU_NUM}*n_sh + {_CNT_TAU_DEN - 1}) div {_CNT_TAU_DEN}")
         + 1
-    )
-    if df_ceil is not None:
-        pref = pref.filter(F.col("df") <= df_ceil)
-    pref = pref.select("doc_id", "shingle", "n_sh", "rn")
+    ).select("doc_id", "shingle", "n_sh", "rn")
+    ranked = ranked.select("doc_id", "shingle", "n_sh", "rn")
     if contained_where is not None:
         pref = pref.filter(contained_where)
+    if container_where is not None:
+        ranked = ranked.filter(container_where)
     # Candidate-time tightening (exact, zero recall loss — hash equality
     # vs the naive oracle is the proof). At the FIRST common shingle in
     # the global order (guaranteed inside a's prefix), the remaining
@@ -2985,48 +2886,15 @@ def _containment_join(
     _ub = 1 + F.least(
         F.col("a.n_sh") - F.col("a.rn"), F.col("b.n_sh") - F.col("b.rn")
     )
-    # r12 optimization (guide §2.4): both candidate sides already carry
-    # the doc's full-set size (n_sh rides the ranked artifact), so the
-    # pair's (n_a, n_b) flow THROUGH the candidate join instead of being
-    # re-derived by a sizes groupBy + two post-verify joins — one
-    # exchange and two joins gone, measured 2.27 s → 1.74 s warm at
-    # sf0.1 with identical output (n_a/n_b are functions of the doc ids,
-    # so the distinct() dedupes exactly as before).
-    cand = (
-        pref.alias("a")
-        .join(
-            ranked.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (_CNT_TAU_DEN * F.col("b.n_sh") >= _CNT_TAU_NUM * F.col("a.n_sh"))
-            & (_CNT_TAU_DEN * _ub >= _CNT_TAU_NUM * F.col("a.n_sh")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").cast("long").alias("n_a"),
-            F.col("b.n_sh").cast("long").alias("n_b"),
-        )
-        .distinct()
-    )
-    # Verify with the exploded equi-join (shingle rows of candidate docs,
-    # keyed (doc, shingle)) — measured FASTER than the array_intersect
-    # twin here: 174k candidates × ~40-shingle docs shuffle slim
-    # (id, shingle) rows, where the array form ships both full arrays to
-    # every pair row (80 strings/pair — 2.5× the bytes, 4.5× the time at
-    # sf0.1).
-    common = (
-        ex.select(F.col("doc_id").alias("doc_a"), "shingle")
-        .join(cand, "doc_a")
-        .join(
-            ex.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    on = (
+        (F.col("a.shingle") == F.col("b.shingle"))
+        & (F.col("a.doc_id") != F.col("b.doc_id"))
+        & (_CNT_TAU_DEN * F.col("b.n_sh") >= _CNT_TAU_NUM * F.col("a.n_sh"))
+        & (_CNT_TAU_DEN * _ub >= _CNT_TAU_NUM * F.col("a.n_sh"))
     )
     return (
-        common.filter(_CNT_TAU_DEN * F.col("n_common") >= _CNT_TAU_NUM * F.col("n_a"))
+        _overlap_counts(ex, pref, ranked, on)
+        .filter(_CNT_TAU_DEN * F.col("n_common") >= _CNT_TAU_NUM * F.col("n_a"))
         .select(
             "doc_a",
             "doc_b",
@@ -3151,7 +3019,9 @@ containment_prefix_join_bounded.__doc__ = containment_prefix_join_bounded.__doc_
 )
 
 
-def shard_containment_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def shard_containment_lookup(
+    spark: SparkSession, sf_dir: str, df_ceil: int | None = None
+) -> DataFrame:
     """Arrival-time containment gate — the fourth near-dup family's
     entry in the production ingest loop (MinHash:
     :func:`shard_neardup_lookup`, SimHash: ``simhash_incremental_ingest``,
@@ -3176,7 +3046,9 @@ def shard_containment_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact verify + integer gate as in the batch form, so the union is
     pinned HASH-EQUAL to :func:`containment_prefix_join` restricted to
-    pairs with exactly one endpoint in the shard
+    pairs with exactly one endpoint in the shard (with ``df_ceil`` set,
+    to :func:`containment_prefix_join_bounded`'s; the ceiling applies to
+    both orientations)
     (tests/test_dedup.py::test_containment_ingest_equals_batch_restriction),
     and the registered query carries the same restriction as a DuckDB
     oracle — the only arrival gate whose semantics are fully
@@ -3185,12 +3057,14 @@ def shard_containment_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard_contained = _containment_join(
         spark,
         sf_dir,
+        df_ceil=df_ceil,
         contained_where=_is_shard("doc_id"),
         container_where=~_is_shard("doc_id"),
     )
     shard_container = _containment_join(
         spark,
         sf_dir,
+        df_ceil=df_ceil,
         contained_where=~_is_shard("doc_id"),
         container_where=_is_shard("doc_id"),
     )
@@ -3299,10 +3173,10 @@ def containment_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def containment_incremental_ingest_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION containment arrival gate (r9 verdict task 2): the
-    df-ceiling of :func:`containment_prefix_join_bounded` composed with
-    :func:`shard_containment_lookup`'s shard predicates — both knobs
-    were already parameters of the shared :func:`_containment_join`
-    plan; this query registers, oracles, benches, and recall-scores the
+    df-ceiling of :func:`containment_prefix_join_bounded` passed to
+    :func:`shard_containment_lookup`, whose shard predicates and ceiling
+    are both parameters of the shared :func:`_containment_join` plan;
+    this query registers, oracles, benches, and recall-scores the
     composition the r9 docstrings only described.
 
     Semantics (fully SQL-expressible, hash-checked): the BOUNDED batch
@@ -3321,21 +3195,7 @@ def containment_incremental_ingest_bounded(spark: SparkSession, sf_dir: str) -> 
     :func:`neardup_recall_audit`, scored against the EXACT containment
     truth restricted to the gate's reachable set every round.
     """
-    shard_contained = _containment_join(
-        spark,
-        sf_dir,
-        df_ceil=_CNT_DF_CEIL,
-        contained_where=_is_shard("doc_id"),
-        container_where=~_is_shard("doc_id"),
-    )
-    shard_container = _containment_join(
-        spark,
-        sf_dir,
-        df_ceil=_CNT_DF_CEIL,
-        contained_where=~_is_shard("doc_id"),
-        container_where=_is_shard("doc_id"),
-    )
-    return shard_contained.unionByName(shard_container)
+    return shard_containment_lookup(spark, sf_dir, df_ceil=_CNT_DF_CEIL)
 
 
 # --- sorted-neighborhood (SNM) --------------------------------------------

@@ -864,7 +864,9 @@ def image_phash_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate image pairs: the multimodal decode lane
     produces 64-bit aHash fingerprints; the dedup family's banded
     Hamming join (:func:`~imdbmapreduce_spark.operators.dedup.
-    hamming_pairs`) finds every pair within 3 bits. The composition is
+    hamming_pairs`) finds every pair within 3 bits — its self-join
+    mode here, its probe-vs-base mode for arriving images against an
+    existing fingerprint index. The composition is
     the point — the fingerprint source is pluggable (token SimHash,
     image aHash, audio chromaprint) and the O(n²)-avoiding join is
     shared, not re-derived per modality.

@@ -495,6 +495,28 @@ def _quant_batch(col):
 # cosine ~ N(0, 1/sqrt(64))), so 0.45 (~3.6 sigma) selects the genuine
 # distribution tail — the same knob a real corpus would set at 0.9+.
 _NEARDUP_THETA = 0.45
+
+
+def _cosine_gram(ids_a, q_a, ids_b, q_b, upper: bool = False):
+    """Every (a, b) pair of two quantized blocks with exact quantized
+    cosine >= _NEARDUP_THETA, as (a ids, b ids, cosines) — the one numpy
+    kernel of the in-cell SemDeDup lanes. The batch lane passes one
+    block on both sides with ``upper`` (keep a_id < b_id only); the
+    arrival lane passes shard vs base rows. One expression for both, so
+    their cosine doubles are bit-equal."""
+    import numpy as np
+
+    dot = q_a @ q_b.T  # exact int64
+    s_a = np.sqrt((q_a * q_a).sum(axis=1).astype(np.float64))
+    s_b = np.sqrt((q_b * q_b).sum(axis=1).astype(np.float64))
+    cos = dot.astype(np.float64) / (s_a[:, None] * s_b[None, :])
+    keep = cos >= _NEARDUP_THETA
+    if upper:
+        keep &= ids_a[:, None] < ids_b[None, :]
+    ai, bi = np.nonzero(keep)
+    return ids_a[ai], ids_b[bi], cos[ai, bi]
+
+
 # Block count for the pair-block decomposition. Locally 8 blocks -> 36
 # tasks saturate the box; on a cluster pick B ~ sqrt(2 * total cores) so
 # B(B+1)/2 block-pairs fill the executors while each row is replicated
@@ -1373,25 +1395,12 @@ def neardup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .join(cells, "vec_id")
     )
-    _quant = _quant_batch
 
     def gram(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"a_id": pd.Series([], dtype="int64"),
-                 "b_id": pd.Series([], dtype="int64"),
-                 "cosine": pd.Series([], dtype="float64")}
-            )
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        Q = _quant(pdf["embedding"])
-        dot = Q @ Q.T  # exact int64
-        s = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
-        cos = dot.astype(np.float64) / (s[:, None] * s[None, :])
-        keep = (cos >= _NEARDUP_THETA) & (ids[:, None] < ids[None, :])
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {"a_id": ids[ai], "b_id": ids[bi], "cosine": cos[ai, bi]}
-        )
+        Q = _quant_batch(pdf["embedding"])
+        a, b, cos = _cosine_gram(ids, Q, ids, Q, upper=True)
+        return pd.DataFrame({"a_id": a, "b_id": b, "cosine": cos})
 
     return emb.groupBy("cell").applyInPandas(gram, "a_id long, b_id long, cosine double")
 
@@ -1461,31 +1470,19 @@ def embedding_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shard_emb = stable_checkpoint(emb.join(shard_cells, "vec_id"))
     base_emb = emb.join(base_cells, "vec_id")
-    _quant = _quant_batch
 
     def cross_gram(sh: "pd.DataFrame", ba: "pd.DataFrame") -> "pd.DataFrame":
-        if len(sh) == 0 or len(ba) == 0:
-            return pd.DataFrame(
-                {
-                    "new_vec": pd.Series([], dtype="int64"),
-                    "matched_vec": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
+        if len(sh) == 0 or len(ba) == 0:  # no arriving (or no base) vector
+            new = matched = np.empty(0, dtype=np.int64)
+            cos = np.empty(0, dtype=np.float64)
+        else:
+            new, matched, cos = _cosine_gram(
+                sh["vec_id"].to_numpy(dtype=np.int64),
+                _quant_batch(sh["embedding"]),
+                ba["vec_id"].to_numpy(dtype=np.int64),
+                _quant_batch(ba["embedding"]),
             )
-        sid = sh["vec_id"].to_numpy(dtype=np.int64)
-        bid = ba["vec_id"].to_numpy(dtype=np.int64)
-        Qs, Qb = _quant(sh["embedding"]), _quant(ba["embedding"])
-        dot = Qs @ Qb.T  # exact int64
-        ss = np.sqrt((Qs * Qs).sum(axis=1).astype(np.float64))
-        sb = np.sqrt((Qb * Qb).sum(axis=1).astype(np.float64))
-        # identical expression shape to the batch gram lane, so the
-        # doubles are bit-equal to neardup_embedding_cells' cosines
-        cos = dot.astype(np.float64) / (ss[:, None] * sb[None, :])
-        keep = cos >= _NEARDUP_THETA
-        si, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {"new_vec": sid[si], "matched_vec": bid[bi], "cosine": cos[si, bi]}
-        )
+        return pd.DataFrame({"new_vec": new, "matched_vec": matched, "cosine": cos})
 
     return (
         shard_emb.groupBy("cell")

@@ -303,8 +303,10 @@ def assert_routed_family(
     instead of surfacing as a bare value-hash mismatch in the driver
     sweep. The forced-branch helpers (``_neardup_routed``,
     ``_neardup_ingest_by_family``, ``_embedding_neardup_by_family``)
-    remain the way to RUN the other branch; this guard only protects
-    the oracle-checked entry point's contract."""
+    remain the way to RUN the other branch (the band branch of the
+    first two is ``dedup._minhash_pairs``, batch and arrival mode);
+    this guard only protects the oracle-checked entry point's
+    contract."""
     if family != oracle_branch:
         raise RuntimeError(
             f"{query_name}: statistics routed to family {family!r} but the "

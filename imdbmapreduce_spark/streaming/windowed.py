@@ -710,8 +710,10 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (maxFilesPerTrigger=1, so the AvailableNow drain exercises REAL
     multi-batch execution), and each micro-batch runs the SHARED
     :func:`~imdbmapreduce_spark.operators.dedup.shard_neardup_lookup`
-    against the persisted MinHash index — signatures computed only for
-    the arriving rows, corpus side served from the index artifacts.
+    (the probe-vs-base mode of the one MinHash band-join + exact-verify
+    plan the batch query runs) against the persisted MinHash index —
+    signatures computed only for the arriving rows, corpus side served
+    from the index artifacts.
 
     State across batches = the index manifest version: it is captured
     before the drain and re-checked after — a re-persist mid-drain

@@ -696,6 +696,58 @@ def test_simhash_incremental_equals_batch_restriction(spark, sf_dir):
     assert want, "test premise: the shard has at least one Hamming match"
 
 
+def test_redelivered_base_docs_never_self_match(spark, sf_dir):
+    """The re-delivery guard of both probe-vs-base gates: probe the
+    MinHash lookup and the Hamming gate with BASE documents (ids outside
+    the standing shard residue) that have near-dups in the base. No row
+    may pair a document with itself, and each gate's rows must equal the
+    batch pairs that touch those documents, probe endpoint first."""
+    from imdbmapreduce_spark.catalog import table
+    from imdbmapreduce_spark.operators.dedup import (
+        _SHARD_MOD,
+        _SHARD_RESIDUE,
+        _is_shard,
+        _simhash_fp_cached,
+        hamming_pairs,
+        shard_neardup_lookup,
+        simhash_fingerprints,
+    )
+
+    def is_base(d):
+        return d % _SHARD_MOD != _SHARD_RESIDUE
+
+    def touching(pairs, probe):
+        return {
+            (p, o, v)
+            for a, b, v in pairs
+            for p, o in ((a, b), (b, a))
+            if p in probe and is_base(o)
+        }
+
+    mh = [tuple(r) for r in registry.get("minhash_lsh_pairs").fn(spark, sf_dir).collect()]
+    ham = [tuple(r) for r in registry.get("simhash_pairs").fn(spark, sf_dir).collect()]
+    probe = {
+        d
+        for pairs in (mh, ham)
+        for a, b, _ in pairs
+        if is_base(a) and is_base(b)
+        for d in (a, b)
+    }
+    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id").isin(sorted(probe)))
+
+    got_mh = {
+        tuple(r)
+        for r in shard_neardup_lookup(spark, sf_dir, docs.select("doc_id", "text")).collect()
+    }
+    base_fp = _simhash_fp_cached(spark, sf_dir).filter(~_is_shard("doc_id"))
+    got_ham = {tuple(r) for r in hamming_pairs(simhash_fingerprints(docs), base_fp).collect()}
+    for got, pairs in ((got_mh, mh), (got_ham, ham)):
+        assert all(new != matched for new, matched, _ in got)
+        want = touching(pairs, probe)
+        assert want, "test premise: the probe docs have base near-dups"
+        assert got == want
+
+
 def test_containment_join_matches_naive_python_and_catches_jaccard_blindspot(
     spark, sf_dir
 ):

@@ -342,21 +342,6 @@ def test_scd2_sink_redelivery_of_same_ts_state_flip_is_noop(spark, tmp_path):
     assert sink.total_stale_dropped == 2
 
 
-def test_hamming_pairs_rejects_radius_beyond_banding_guarantee(spark):
-    """The 3-of-6 banded tables only guarantee completeness through
-    Hamming distance 3; a wider request must raise, not silently return
-    whatever pairs the bands happen to catch (ADVICE r4)."""
-    import pytest
-
-    from imdbmapreduce_spark.operators.dedup import hamming_pairs
-
-    members = spark.createDataFrame([(1, 5)], "doc_id long, fp long")
-    with pytest.raises(ValueError, match="completeness"):
-        hamming_pairs(members, max_hamming=4)
-    # the guaranteed radius still works
-    assert hamming_pairs(members, max_hamming=3).count() == 0
-
-
 def test_watermark_sized_from_disorder_profile(spark, tmp_path):
     """The disorder→watermark loop closed: size the watermark from the
     profiled lateness tail (watermark_from_disorder = ceil(p99)), replay
