@@ -2157,16 +2157,6 @@ _NEARDUP_RECALL_FLOORS = {
 }
 
 
-def _snm_embedding_candidates_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embedding-SNM candidate window renamed to the audit's
-    (doc_a, doc_b) pair convention (vec ids are already min-first)."""
-    from imdbmapreduce_spark.operators.similarity import snm_embedding_candidates
-
-    return snm_embedding_candidates(spark, sf_dir).select(
-        F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b")
-    )
-
-
 @query("neardup_recall_audit", bench=False)  # rows-only (xxhash band
 # families on every gate side); bench=False: the audit re-executes four
 # queries the sweep already times — keeping it in would double-count
@@ -2205,6 +2195,7 @@ def neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_incremental_ingest,
         neardup_embedding_cells,
         neardup_embedding_cosine,
+        snm_embedding_candidates,
     )
 
     jac_truth = stable_checkpoint(
@@ -2317,7 +2308,7 @@ def neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is a measured per-round number, not prose.
         (
             "snm_embedding_window",
-            _snm_embedding_candidates_normalized(spark, sf_dir),
+            snm_embedding_candidates(spark, sf_dir),
             emb_truth,
         ),
     ]
@@ -3208,94 +3199,44 @@ def containment_incremental_ingest_bounded(spark: SparkSession, sf_dir: str) -> 
 # never C(df,2)).
 _SNM_WINDOW = 8
 _SNM_TAU_NUM, _SNM_TAU_DEN = 7, 10  # token-set Jaccard threshold 0.7
-_RANK_PARTS = 32  # range partitions for the global sort (thousands at 100 TB)
-
-
-def _global_rank(
-    df: DataFrame, order_cols: list[str], parts: int | None = None
-) -> DataFrame:
-    """Attach a 1-based GLOBAL rank ``rk`` by a total order — WITHOUT the
-    single-partition window Spark plans for an unpartitioned
-    ``row_number`` (the classic driver-of-scale-death: one task sorts
-    the world).
-
-    Distributed two-pass rank: range-partition on the order columns
-    (partition id is then monotone in the sort order), rank locally
-    within each partition, count rows per partition (a partition-count-
-    sized frame), prefix-sum those counts driver-free, and broadcast the
-    offsets back. The rank each row gets is its position in the total
-    order — independent of where the sampled range boundaries happen to
-    fall, so the result is deterministic and AQE-coalesce-safe (merging
-    contiguous ranges preserves pid monotonicity).
-
-    The only unpartitioned window runs over the OFFSETS frame —
-    ``_RANK_PARTS`` rows, bounded by construction.
-    """
-    # parts: callers that know the input is small may pass a smaller
-    # range-partition count — the rank VALUES are partition-boundary-
-    # independent by construction, so this is a pure plan knob (the
-    # range partitioner's sampling pass is the fixed cost that
-    # dominates on few-thousand-row inputs).
-    ranged = df.repartitionByRange(parts or _RANK_PARTS, *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    # Checkpoint after the local rank: the frame is consumed twice (the
-    # offsets build and the output join) and the range partitioner adds
-    # a sampling pass — without truncation the upstream plan computes
-    # ~3x (measured 8 s -> ~1 s on the 50k-doc sf1 fixture). LAZY
-    # (r13): the offsets broadcast build is the first consumer and
-    # materializes the blocks inside the consuming job — truncation
-    # without a separate eager-checkpoint job per invocation.
-    local = stable_checkpoint_lazy(
-        ranged.withColumn(
-            "_lrk",
-            F.row_number().over(Window.partitionBy("_pid").orderBy(*order_cols)),
-        )
-    )
-    offs = (
-        local.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_pid", "_off")
-    )
-    return (
-        local.join(F.broadcast(offs), "_pid")
-        .withColumn("rk", (F.col("_lrk") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lrk")
-    )
+# Range partitions of the text window's grouped rank (thousands at 100 TB;
+# the embedding window sizes its own count to its projection table).
+_RANK_PARTS = 32
 
 
 def _grouped_global_rank(
     df: DataFrame, group_col: str, order_cols: list[str], parts: int
 ) -> DataFrame:
-    """:func:`_global_rank` for MANY independent sort orders at once:
-    every row gets ``rk`` = its 1-based position in the total order of
-    ITS group — one ranged exchange for all groups instead of one rank
-    job per group (the multi-pass SNM shape: 8 projection keys = 8
-    groups; the per-job fixed cost of 8 separate ranks was the
-    embedding family's wall at bench SFs).
+    """Attach ``rk``, every row's 1-based position in the total order of
+    ITS group — WITHOUT the single-partition window Spark plans for an
+    unpartitioned ``row_number`` (one task sorting the world). One
+    ranged exchange serves all groups instead of one rank job per group
+    (the multi-pass SNM shape: 8 projection keys = 8 groups; the per-job
+    fixed cost of 8 separate ranks was the embedding family's wall at
+    bench SFs).
 
-    Same two-pass discipline as :func:`_global_rank`: range-partition
-    on (group, order) — partition id is then monotone in each group's
-    order — rank locally, and correct with per-(partition, group)
-    counts: within-pid start of the group (rows of smaller groups in
-    the same partition) and the group's global offset (its rows in
-    earlier partitions). The offsets frame is ``parts x |groups|`` rows
-    — bounded by construction; both correction windows run over it,
+    Distributed two-pass rank: range-partition on (group, order) —
+    partition id is then monotone in each group's order — rank locally,
+    and correct with per-(partition, group) counts: within-pid start of
+    the group (rows of smaller groups in the same partition) and the
+    group's global offset (its rows in earlier partitions). The rank is
+    a row's position in its group's order, independent of where the
+    sampled range boundaries fall, so ``parts`` is a pure plan knob and
+    the result is AQE-coalesce-safe (merging contiguous ranges keeps
+    pids monotone). The offsets frame is ``parts x |groups|`` rows —
+    bounded by construction; both correction windows run over it,
     never over data.
     """
     ranged = df.repartitionByRange(parts, group_col, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # lazy for the same reason as _global_rank's local checkpoint (r13)
+    # Checkpoint after the local rank: the offsets build and the output
+    # join both consume it, and recomputed separately they could see
+    # DIFFERENT sampled range boundaries (offsets desynchronized from
+    # local ranks — a run-to-run pair-set variance at sf1, SCALE.md);
+    # one materialization also saves the ~3x upstream recompute. LAZY
+    # (r13): the offsets broadcast build is the first consumer and
+    # materializes the blocks inside its own job.
     local = stable_checkpoint_lazy(
         ranged.withColumn(
             "_lrk",
@@ -3334,41 +3275,49 @@ def _grouped_global_rank(
     )
 
 
-def _snm_pass(keyed: DataFrame) -> DataFrame:
-    """One SNM pass over a ``(doc_id, st, key)`` frame: window-pair every
-    record with its ``_SNM_WINDOW`` successors in the global ``key`` sort
-    order, emitting id-NORMALIZED (doc_a < doc_b) candidate pairs with
-    both token sets in the row."""
-    # Checkpoint the ranked frame: both sides of the cell join consume it,
-    # and without truncation each branch re-runs the range sort.
-    ranked = stable_checkpoint(
-        _global_rank(keyed, ["key", "doc_id"]).select(
-            "doc_id", "st", "rk", F.floor((F.col("rk") - 1) / _SNM_WINDOW).alias("cell")
-        )
+def _snm_window(keyed: DataFrame, w: int, parts: int) -> DataFrame:
+    """The sorted-neighborhood candidate window of every SNM family:
+    over one ``(k, id, key)`` row per record per pass ``k``, the
+    distinct id-normalized ``(doc_a < doc_b)`` pairs whose ranks in the
+    ``(key, id)`` order of some pass differ by 1..``w``.
+
+    All passes rank in ONE :func:`_grouped_global_rank` (range partition
+    on (k, key) once, per-(partition, k) offsets), and the window
+    pairing is ONE uniform equi-join on (k, rank cell ``floor((rk-1)/w)``):
+    each left row probes its own cell and the next, since pairs within
+    ``w`` ranks never span more than two cells. No shuffle is keyed on
+    anything data-dependent, so the plan is immune to key skew, and the
+    candidate volume is at most ``passes * w * n`` by construction."""
+    ranked = _grouped_global_rank(keyed, "k", ["key", "id"], parts)
+    cells = ranked.select(
+        "k", "id", "rk", F.floor((F.col("rk") - 1) / w).alias("cell")
     )
-    left = ranked.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("st").alias("set_a"),
+    left = cells.select(
+        "k",
+        F.col("id").alias("id_a"),
         F.col("rk").alias("rk_a"),
         F.explode(F.array(F.col("cell"), F.col("cell") + 1)).alias("cand_cell"),
     )
-    right = ranked.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("st").alias("set_b"),
+    # The right side renames every column, ``k`` included: both sides
+    # project the same ``cells`` frame, so ``left.k == right.k`` would
+    # compare one attribute with itself (a trivially true predicate).
+    right = cells.select(
+        F.col("k").alias("k_b"),
+        F.col("id").alias("id_b"),
         F.col("rk").alias("rk_b"),
         F.col("cell").alias("cell_b"),
     )
     diff = F.col("rk_b") - F.col("rk_a")
-    flip = F.col("id_a") > F.col("id_b")
     return (
-        left.join(right, left.cand_cell == right.cell_b)
-        .filter((diff >= 1) & (diff <= _SNM_WINDOW))
+        left.join(
+            right, (F.col("cand_cell") == F.col("cell_b")) & (F.col("k") == F.col("k_b"))
+        )
+        .filter((diff >= 1) & (diff <= w))
         .select(
             F.least("id_a", "id_b").alias("doc_a"),
             F.greatest("id_a", "id_b").alias("doc_b"),
-            F.when(flip, F.col("set_b")).otherwise(F.col("set_a")).alias("st_a"),
-            F.when(flip, F.col("set_a")).otherwise(F.col("set_b")).alias("st_b"),
         )
+        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
@@ -3413,18 +3362,33 @@ def _snm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately from the verify threshold. Session-cached (round 10):
     four consumers run it per bench/audit session — the batch query,
     the arrival gate, and the scoreboard's two SNM arms — and the
-    window is the family's whole cost."""
+    window is the family's whole cost.
+
+    The window pairs ids only (:func:`_snm_window`, pass ``k`` 0 =
+    forward key, 1 = reversed); the token sets join back on the
+    distinct pairs for the verify."""
 
     def build() -> DataFrame:
         docs = table(spark, sf_dir, "documents")
         st = F.array_sort(F.array_distinct(tokens("text")))
         base = docs.select("doc_id", st.alias("st")).filter(F.size("st") > 0)
-        fwd = base.withColumn("key", _snm_key(F.col("st")))
-        rev = base.withColumn("key", _snm_key(F.reverse("st")))
+        keyed = base.select(
+            F.col("doc_id").alias("id"),
+            F.posexplode(
+                F.array(_snm_key(F.col("st")), _snm_key(F.reverse("st")))
+            ).alias("k", "key"),
+        )
         return (
-            _snm_pass(fwd)
-            .unionByName(_snm_pass(rev))
-            .dropDuplicates(["doc_a", "doc_b"])
+            _snm_window(keyed, _SNM_WINDOW, _RANK_PARTS)
+            .join(
+                base.select(F.col("doc_id").alias("doc_a"), F.col("st").alias("st_a")),
+                "doc_a",
+            )
+            .join(
+                base.select(F.col("doc_id").alias("doc_b"), F.col("st").alias("st_b")),
+                "doc_b",
+            )
+            .select("doc_a", "doc_b", "st_a", "st_b")
         )
 
     return shared_cache(
@@ -3493,13 +3457,11 @@ def snm_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf1 failure mode), at the price of bounded recall (more passes buy
     recall linearly in cost).
 
-    Scale shape: one range-partitioned sort for the global rank (see
-    :func:`_global_rank` — no single-partition window), then the window
-    pairing as ONE uniform equi-join on the rank cell ``floor(rk/w)``
-    (each left row probes its own cell and the next — pairs within ``w``
-    ranks never span more than two cells), exact verify on arrays
-    already in the row. No shuffle is keyed on anything data-dependent,
-    so the plan is immune to key skew end to end.
+    Scale shape: both passes rank in one range-partitioned sort and pair
+    in one uniform equi-join on (pass, rank cell) — :func:`_snm_window`,
+    no single-partition window — then the token sets join back on the
+    distinct pairs for the exact verify. No shuffle is keyed on anything
+    data-dependent, so the plan is immune to key skew end to end.
 
     Reference analog: the reference dedups by exact key adjacency in its
     sorted ETS table (/root/reference/Code/csv_to_ets.erl:27-53); SNM is

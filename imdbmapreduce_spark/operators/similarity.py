@@ -89,6 +89,47 @@ def _shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _long_sum(arr) -> Column:
+    """Exact int64 sum of a BIGINT array column."""
+    return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, x: acc + x)
+
+
+def _quantized_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, vq, n2): each embedding as ONE row holding its BIGINT
+    1e-6 component array and exact squared norm — the frame every
+    array-cosine verify (MMR pool pairs, the ANN rescore, the embedding
+    SNM verify) joins its candidate pairs to, scored by
+    :func:`_array_cosine`.
+
+    r12/r13: each pair ships two 64-long arrays in one row per side,
+    where the exploded-component plans multiplied every candidate into
+    d rows per side and paid a (id, pos)-keyed exchange, a pair-keyed
+    dot aggregation and two norm joins (sf1 SNM verify warm 53.0 →
+    6.4 s; plans/r13/mmr_diversified_topk_{before,after}.txt). Same
+    F.round HALF_UP quantization as :func:`quantized_components` and
+    exact long sums, so cosines match the exploded-join oracles
+    bit-for-bit. Callers join it with plain shuffle joins on the pair
+    ids (or broadcast a query-sized slice): it is |vectors|-row
+    DATA-sized."""
+    vq = F.transform(
+        "embedding", lambda x: F.round(x.cast("double") * _SCALE).cast("long")
+    )
+    return (
+        table(spark, sf_dir, "embeddings")
+        .select("vec_id", vq.alias("vq"))
+        .withColumn("n2", _long_sum(F.transform("vq", lambda v: v * v)))
+    )
+
+
+def _array_cosine(va: str, na: str, vb: str, nb: str) -> Column:
+    """Exact quantized cosine of two :func:`_quantized_arrays` rows: the
+    int64 zip_with dot over the product of the norms' square roots."""
+    dot = _long_sum(F.zip_with(va, vb, lambda x, y: x * y))
+    return dot.cast("double") / (
+        F.sqrt(F.col(na).cast("double")) * F.sqrt(F.col(nb).cast("double"))
+    )
+
+
 _KNN_ORACLE = f"""
 WITH ex AS (
   SELECT vec_id, CAST(t.i AS INTEGER) AS pos,
@@ -350,61 +391,14 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("y.vec_id").alias("b"),
         )
     )
-    # Pool-pair similarities on quantized ARRAYS (r13 — the
-    # snm_embedding_pairs r12 verify shape): each pair ships two
-    # 64-long arrays in one row per side via zip_with/aggregate
-    # expressions, where the r12 plan exploded every candidate into d
-    # rows per side and paid a (b, pos)-keyed exchange plus a
-    # (q_id, a, b) dot aggregation plus two norm joins. Same integer
-    # math (F.round HALF_UP at _SCALE), so cosines match bit-for-bit
-    # (plans/r13/mmr_diversified_topk_{before,after}.txt).
-    vq = (
-        table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: F.round(x.cast("double") * _SCALE).cast("long")
-            ).alias("vq"),
-        )
-        .withColumn(
-            "n2",
-            F.aggregate(
-                F.transform("vq", lambda v: v * v),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
-    pair_dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    # Pool-pair similarities on quantized ARRAYS (r13; see
+    # _quantized_arrays): one row per pair side, no positional explode.
+    vq = _quantized_arrays(spark, sf_dir)
     sim = (
-        pairs.join(
-            vq.select(
-                F.col("vec_id").alias("a"),
-                F.col("vq").alias("va"),
-                F.col("n2").alias("n2_a"),
-            ),
-            "a",
-        )
-        .join(
-            vq.select(
-                F.col("vec_id").alias("b"),
-                F.col("vq").alias("vb"),
-                F.col("n2").alias("n2_b"),
-            ),
-            "b",
-        )
+        pairs.join(vq.toDF("a", "va", "n2_a"), "a")
+        .join(vq.toDF("b", "vb", "n2_b"), "b")
         .select(
-            "q_id",
-            "a",
-            "b",
-            (
-                pair_dot.cast("double")
-                / (F.sqrt(F.col("n2_a").cast("double")) * F.sqrt(F.col("n2_b").cast("double")))
-            ).alias("sim"),
+            "q_id", "a", "b", _array_cosine("va", "n2_a", "vb", "n2_b").alias("sim")
         )
     )
 
@@ -634,63 +628,24 @@ def _exact_rescore_topk(
     standing probe set (vec_id < _N_PROBES) — the arrival lookup passes
     the shard predicate instead.
 
-    r13 (the snm_embedding_pairs r12 verify shape, guide §2.3): each
-    candidate pair ships the two quantized vectors as 64-long ARRAYS in
-    one row per side (zip_with/aggregate dot, norms riding along),
-    where the r12 plan exploded candidates into d rows per side and
-    paid a (q_id, pos)-keyed join plus a (q_id, vec_id) dot aggregation
-    plus two norm joins. Same F.round HALF_UP integer quantization as
-    quantized_components, exact long sums either way — cosines are
-    bit-identical (recall pins in tests/test_similarity.py unchanged).
+    r13: candidates score on the quantized ARRAYS of
+    :func:`_quantized_arrays` (one row per pair side, no positional
+    explode) — cosines bit-identical to the exploded-component plan
+    (recall pins in tests/test_similarity.py unchanged).
     """
     if q_pred is None:
         q_pred = F.col("vec_id") < _N_PROBES
-    vq = (
-        table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: F.round(x.cast("double") * _SCALE).cast("long")
-            ).alias("vq"),
-        )
-        .withColumn(
-            "n2",
-            F.aggregate(
-                F.transform("vq", lambda v: v * v),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
+    vq = _quantized_arrays(spark, sf_dir)
     # query-sized broadcast (see knn_bruteforce): only q_pred rows can
     # match q_id, so don't ship the corpus-sized array table
-    probes = F.broadcast(
-        vq.filter(q_pred).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("vq").alias("qv"),
-            F.col("n2").alias("n2_q"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "vc", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    probes = F.broadcast(vq.filter(q_pred).toDF("q_id", "qv", "n2_q"))
     scored = (
-        cand.join(
-            vq.select(
-                F.col("vec_id"), F.col("vq").alias("vc"), F.col("n2").alias("n2_c")
-            ),
-            "vec_id",
-        )
+        cand.join(vq.toDF("vec_id", "vc", "n2_c"), "vec_id")
         .join(probes, "q_id")
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            (
-                dot.cast("double")
-                / (F.sqrt(F.col("n2_q").cast("double")) * F.sqrt(F.col("n2_c").cast("double")))
-            ).alias("cosine"),
+            _array_cosine("qv", "n2_q", "vc", "n2_c").alias("cosine"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -2102,11 +2057,12 @@ _SNM_EMB_THETA = 0.35
 
 
 def snm_embedding_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embedding-SNM candidate window — id-normalized (a_id, b_id)
-    pairs within _SNM_EMB_W ranks of EITHER projection sort, BEFORE the
-    cosine verify. Factored (like the text family's _snm_candidates) so
-    the recall audit can score the blocking scheme itself."""
-    from imdbmapreduce_spark.operators.dedup import _grouped_global_rank
+    """The embedding-SNM candidate window — id-normalized (doc_a, doc_b)
+    vector pairs within _SNM_EMB_W ranks of EITHER projection sort,
+    BEFORE the cosine verify: :func:`~imdbmapreduce_spark.operators.
+    dedup._snm_window` over one row per vector per JL sort key, so the
+    recall audit scores the same blocking scheme the query runs."""
+    from imdbmapreduce_spark.operators.dedup import _snm_window
 
     ex = _shared_components(spark, sf_dir)
     signs = _rp_signs(spark).filter(F.col("k") < _SNM_EMB_PASSES)
@@ -2122,46 +2078,12 @@ def snm_embedding_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "k")
         .agg(F.sum(F.col("s") * F.col("v")).alias("key"))
     )
-
-    # ALL passes rank in ONE grouped job (r10 second pass on this
-    # family's wall): _grouped_global_rank range-partitions on
-    # (k, key) once and corrects per-(partition, k) offsets, replacing
-    # 8 separate rank jobs whose per-job fixed cost dominated at bench
-    # SFs; the window pairing is then ONE (k, cell) equi-join for
-    # every pass. Partition count sized to the materialized frame
-    # (~4k rows each, capped) — the rank values are partition-
-    # boundary-independent, so this is a pure plan knob.
+    # Range-partition count sized to the materialized frame (~4k rows
+    # each, capped) — the rank values are partition-boundary-
+    # independent, so this is a pure plan knob.
     parts = max(1, min(32, -(-proj.count() // 4096)))
-    ranked = _grouped_global_rank(proj, "k", ["key", "vec_id"], parts)
-    cells = ranked.select(
-        "k", "vec_id", "rk", F.floor((F.col("rk") - 1) / _SNM_EMB_W).alias("cell")
-    )
-    left = cells.select(
-        "k",
-        F.col("vec_id").alias("id_a"),
-        F.col("rk").alias("rk_a"),
-        F.explode(F.array(F.col("cell"), F.col("cell") + 1)).alias("cand_cell"),
-    )
-    # The right side renames every column, ``k`` included: both sides
-    # project the same ``cells`` frame, so ``left.k == right.k`` would
-    # compare one attribute with itself (a trivially true predicate).
-    right = cells.select(
-        F.col("k").alias("k_b"),
-        F.col("vec_id").alias("id_b"),
-        F.col("rk").alias("rk_b"),
-        F.col("cell").alias("cell_b"),
-    )
-    diff = F.col("rk_b") - F.col("rk_a")
-    return (
-        left.join(
-            right, (F.col("cand_cell") == F.col("cell_b")) & (F.col("k") == F.col("k_b"))
-        )
-        .filter((diff >= 1) & (diff <= _SNM_EMB_W))
-        .select(
-            F.least("id_a", "id_b").alias("a_id"),
-            F.greatest("id_a", "id_b").alias("b_id"),
-        )
-        .dropDuplicates(["a_id", "b_id"])
+    return _snm_window(
+        proj.select("k", F.col("vec_id").alias("id"), "key"), _SNM_EMB_W, parts
     )
 
 
@@ -2259,59 +2181,17 @@ def snm_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact on candidate-pair ids — bounded at 2·passes·w rows per
     vector.
     """
-    cands = snm_embedding_candidates(spark, sf_dir)
-    # Verify on quantized ARRAYS (zip_with product + aggregate sum —
-    # JVM expressions, exact int64): each pair ships two 64-long arrays
-    # in ONE row per side, where the r9 exploded-component join
-    # multiplied every candidate into d rows per side and paid a
-    # (b_id, pos)-keyed shuffle d× the pair volume. Same integer math
-    # as quantized_components elementwise (F.round HALF_UP at _SCALE),
-    # so the oracle's exploded-join dots match bit-for-bit. Measured at
-    # the retuned 8×16 candidate budget (with the checkpointed-
-    # projection + concurrent-pass candidates): sf1 warm 53.0 → 6.4 s,
-    # sf0.1 6.0 s — near-flat across the decade.
-    # Plain shuffle joins on the pair ids: the vq frame is a
-    # |vectors|-row DATA-sized frame — broadcasting it (as r9 shipped
-    # for the norms) contradicts the family's skew-immune scale story
-    # (ADVICE r9).
-    vq = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * _SCALE).cast("long")
-        ).alias("vq"),
-    ).withColumn(
-        "n2",
-        F.aggregate(
-            F.transform("vq", lambda v: v * v),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    cosine = dot.cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    # Verify on quantized ARRAYS (r12; see _quantized_arrays): plain
+    # shuffle joins on the pair ids — broadcasting the DATA-sized array
+    # frame (as r9 shipped for the norms) contradicts the family's
+    # skew-immune scale story (ADVICE r9).
+    vq = _quantized_arrays(spark, sf_dir)
+    cosine = _array_cosine("va", "na", "vb", "nb")
     return (
-        cands.join(
-            vq.select(
-                F.col("vec_id").alias("a_id"),
-                F.col("vq").alias("va"),
-                F.col("n2").alias("na"),
-            ),
-            "a_id",
-        )
-        .join(
-            vq.select(
-                F.col("vec_id").alias("b_id"),
-                F.col("vq").alias("vb"),
-                F.col("n2").alias("nb"),
-            ),
-            "b_id",
-        )
+        snm_embedding_candidates(spark, sf_dir)
+        .toDF("a_id", "b_id")
+        .join(vq.toDF("a_id", "va", "na"), "a_id")
+        .join(vq.toDF("b_id", "vb", "nb"), "b_id")
         .filter(cosine >= _SNM_EMB_THETA)
         .select("a_id", "b_id", cosine.alias("cosine"))
     )

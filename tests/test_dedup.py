@@ -862,17 +862,19 @@ def test_containment_bounded_is_subset_with_measured_recall(spark, sf_dir):
 
 
 def test_global_rank_matches_unpartitioned_row_number(spark):
-    """_global_rank's distributed two-pass rank must equal the rank a
-    single-partition row_number window would produce, including on a
-    skewed key distribution (one hot key, many singletons)."""
-    from imdbmapreduce_spark.operators.dedup import _global_rank
+    """A one-group _grouped_global_rank, at the text SNM window's own
+    partition count, must equal the rank a single-partition row_number
+    window would produce, including on a skewed key distribution (one
+    hot key, many singletons)."""
+    from imdbmapreduce_spark.operators.dedup import _RANK_PARTS, _grouped_global_rank
 
-    rows = [Row(k="hot", i=i) for i in range(200)] + [
-        Row(k=f"k{i:03d}", i=i) for i in range(50)
+    rows = [Row(g=0, k="hot", i=i) for i in range(200)] + [
+        Row(g=0, k=f"k{i:03d}", i=i) for i in range(50)
     ]
     df = spark.createDataFrame(rows)
     got = {
-        (r.k, r.i): r.rk for r in _global_rank(df, ["k", "i"]).collect()
+        (r.k, r.i): r.rk
+        for r in _grouped_global_rank(df, "g", ["k", "i"], _RANK_PARTS).collect()
     }
     expected = sorted(rows, key=lambda r: (r.k, r.i))
     for pos, r in enumerate(expected, start=1):
@@ -1231,6 +1233,37 @@ def test_grouped_global_rank_matches_per_group_row_number(spark):
         for g, members in by_g.items():
             for pos, r in enumerate(sorted(members, key=lambda x: (x.k, x.i)), 1):
                 assert got[(g, r.k, r.i)] == pos, (parts, g, r)
+
+
+def test_snm_window_pairs_within_each_pass_only(spark):
+    """_snm_window emits exactly the pairs whose ranks differ by 1..w in
+    SOME pass, each pair once: ranks never pair across passes (the
+    ``k == k_b`` join term), key ties order by id, and a pair adjacent
+    in both passes appears once (the final dropDuplicates)."""
+    from imdbmapreduce_spark.operators.dedup import _snm_window
+
+    w = 2
+    passes = {
+        # pass 0: ids in ascending order; 2 and 3 tie on the key
+        0: {1: "a", 2: "b", 3: "b", 4: "c", 5: "d", 6: "e", 7: "f", 8: "g"},
+        # pass 1 disagrees (order 8 7 5 6 4 2 3 1); 5 and 6 tie, and
+        # (2, 3) and (5, 6) are adjacent in both passes
+        1: {8: "a", 7: "b", 6: "c", 5: "c", 4: "d", 2: "e", 3: "f", 1: "g"},
+    }
+    expected = set()
+    for keys in passes.values():
+        order = [i for _, i in sorted((key, i) for i, key in keys.items())]
+        for a in range(len(order)):
+            for b in range(a + 1, min(a + 1 + w, len(order))):
+                expected.add((min(order[a], order[b]), max(order[a], order[b])))
+    keyed = spark.createDataFrame(
+        [(k, i, key) for k, keys in passes.items() for i, key in keys.items()],
+        "k int, id long, key string",
+    )
+    for parts in (1, 4):
+        got = [tuple(r) for r in _snm_window(keyed, w, parts).collect()]
+        assert len(got) == len(set(got)), (parts, sorted(got))
+        assert set(got) == expected, (parts, sorted(got))
 
 
 def test_neardup_family_router_flips_with_corpus_shape(spark, sf_dir):

@@ -48,6 +48,7 @@ RECOMPILES = {
         "image_phash_dupes",
         "neardup_recall_audit",
         "q20_dominant_suppliers",
+        "simhash_pairs",
         "unigram_tokenizer_encode",
     )
 }
