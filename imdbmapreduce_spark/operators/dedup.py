@@ -37,7 +37,7 @@ from imdbmapreduce_spark.cache import (
     stable_checkpoint_lazy,
 )
 from imdbmapreduce_spark.catalog import parallelize_scan, table
-from imdbmapreduce_spark.functions import cents, cents_sum, tokens
+from imdbmapreduce_spark.functions import cents, cents_sum, tokens, top_k
 from imdbmapreduce_spark.registry import query
 from imdbmapreduce_spark.stats import NEARDUP_OVER_PPM_MAX
 
@@ -1314,8 +1314,8 @@ def crossdoc_ngram_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``transform(sequence(...))`` over the token array (array ops,
     map-side), explodes, then ONE aggregation keyed on the n-gram
     computing distinct-doc and occurrence counts together; ``HAVING
-    n_docs >= 2`` prunes before the top-k, which lowers to
-    TakeOrderedAndProject.
+    n_docs >= 2`` prunes before the global
+    :func:`~imdbmapreduce_spark.functions.top_k`.
 
     Scale: the exploded stream is ~|tokens| rows — the same volume the
     tokenizer pass already handles; the agg keys on n-grams, whose
@@ -1349,11 +1349,8 @@ def crossdoc_ngram_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_docs") >= 2)
     )
-    w = Window.orderBy(F.desc("n_docs"), F.desc("n_occ"), F.asc("ngram"))
-    return (
-        agg.orderBy(F.desc("n_docs"), F.desc("n_occ"), "ngram")
-        .limit(_REPEAT_TOP)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
+    return top_k(
+        agg, _REPEAT_TOP, F.desc("n_docs"), F.desc("n_occ"), "ngram", rank="rnk"
     )
 
 

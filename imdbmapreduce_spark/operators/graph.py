@@ -28,6 +28,7 @@ from imdbmapreduce_spark.cache import (
     stable_checkpoint_lazy,
 )
 from imdbmapreduce_spark.catalog import table
+from imdbmapreduce_spark.functions import top_k
 from imdbmapreduce_spark.registry import query, unrolled_cte
 
 # Fixed-point scale: total rank mass = 1e12 units. With <=1e7 nodes the
@@ -562,8 +563,8 @@ def adamic_adar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     + anti-join shape this removes three exchanges and two joins:
     measured at sf0.1/local[32] warm 1.50 s → 1.12 s median with
     identical top-k output
-    (plans/r12/adamic_adar_parts_{before,after}.txt); top-k lowers to
-    TakeOrderedAndProject.
+    (plans/r12/adamic_adar_parts_{before,after}.txt); the cut is the
+    global :func:`~imdbmapreduce_spark.functions.top_k`.
 
     Scale: candidate volume is still |nodes|·M²/2 slim rows with
     map-side combine before the single (src, dst) exchange; the
@@ -572,8 +573,6 @@ def adamic_adar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows to the scoring exchange, strictly less than the anti-join's
     own shuffle of the same edges. No all-pairs node join at any scale.
     """
-    from pyspark.sql.window import Window
-
     # Wedge build: ONE exchange groups each order's distinct parts into
     # an array (collect_set partial-aggregates map-side), the ordered
     # pairs then explode map-side — per-order fan-out is |parts|^2 with
@@ -660,13 +659,13 @@ def adamic_adar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("adjf") == 0)
         .drop("adjf")
     )
-    wr = Window.orderBy(F.desc("aa_q"), F.asc("src"), F.asc("dst"))
-    return (
-        scored.orderBy(F.desc("aa_q"), "src", "dst")
-        .limit(_AA_TOPK)
-        .withColumn("aa_score", F.col("aa_q").cast("double") / _AA_SCALE)
-        .withColumn("rank", F.row_number().over(wr).cast("long"))
-        .select("src", "dst", "n_common", "aa_q", "aa_score", "rank")
+    return top_k(scored, _AA_TOPK, F.desc("aa_q"), "src", "dst").select(
+        "src",
+        "dst",
+        "n_common",
+        "aa_q",
+        (F.col("aa_q").cast("double") / _AA_SCALE).alias("aa_score"),
+        "rank",
     )
 
 

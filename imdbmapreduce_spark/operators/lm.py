@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imdbmapreduce_spark.catalog import table
-from imdbmapreduce_spark.functions import tokens
+from imdbmapreduce_spark.functions import tokens, top_k
 from imdbmapreduce_spark.operators.text import _DUCK_TOKS
 from imdbmapreduce_spark.registry import query, unrolled_cte
 
@@ -170,8 +170,7 @@ def bpe_first_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     final agg on token); everything after operates on |vocab| rows —
     split each distinct word into characters, slide the 2-window via two
     array slices zipped map-side, explode, and sum the word counts per
-    pair. Top-k lowers to TakeOrderedAndProject (per-partition heaps, no
-    global sort); the rank window runs over the {top} survivors only.
+    pair, then the global :func:`~imdbmapreduce_spark.functions.top_k`.
 
     Scale: this corpus-once/vocab-many asymmetry is WHY BPE trains in
     minutes on terabytes — at 100 TB the vocabulary is ~1e8 rows of a
@@ -198,9 +197,7 @@ def bpe_first_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("p.l").alias("c1"), F.col("p.r").alias("c2"))
         .agg(F.sum("n").alias("pair_count"))
     )
-    top = cnt.orderBy(F.desc("pair_count"), "c1", "c2").limit(_BPE_TOP)
-    w = Window.orderBy(F.desc("pair_count"), "c1", "c2")
-    return top.withColumn("rnk", F.row_number().over(w).cast("long"))
+    return top_k(cnt, _BPE_TOP, F.desc("pair_count"), "c1", "c2", rank="rnk")
 
 
 @query("bpe_merge_sequence", oracle=_bpe_merge_oracle())
@@ -493,7 +490,8 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the training loop's final vocabulary (|vocab| rows, merges
     already applied as narrow merge folds) explodes to one row
     per symbol occurrence and aggregates — still vocab-sized, never
-    corpus-sized; top-k lowers to TakeOrderedAndProject. Oracle = the
+    corpus-sized; then the global
+    :func:`~imdbmapreduce_spark.functions.top_k`. Oracle = the
     merge chain's CTE recurrence continued into the symbol stats.
 
     Scale: identical corpus-once/vocab-many asymmetry as training; the
@@ -506,9 +504,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("symbol")
         .agg(F.sum("n").alias("n_occ"))
     )
-    top = cnt.orderBy(F.desc("n_occ"), "symbol").limit(_BPE_TOP)
-    w = Window.orderBy(F.desc("n_occ"), "symbol")
-    return top.withColumn("rnk", F.row_number().over(w).cast("long"))
+    return top_k(cnt, _BPE_TOP, F.desc("n_occ"), "symbol", rank="rnk")
 
 
 def _bpe_budget_oracle() -> str:
@@ -1659,13 +1655,9 @@ def unigram_tokenizer_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chars = pcnt.filter(F.col("pl") == 1).select("piece", "cnt")
     n_chars = chars.count()
-    w_rank = Window.orderBy(F.desc("cnt"), F.asc("piece"))
-    multis = (
-        pcnt.filter(F.col("pl") >= 2)
-        .select("piece", "cnt", F.row_number().over(w_rank).alias("rn"))
-        .filter(F.col("rn") <= _UNI_V - n_chars)
-        .select("piece", "cnt")
-    )
+    multis = top_k(
+        pcnt.filter(F.col("pl") >= 2), _UNI_V - n_chars, F.desc("cnt"), "piece"
+    ).select("piece", "cnt")
     vocab = chars.unionByName(multis)
     total = vocab.agg(F.sum("cnt")).first()[0]
     if total is None:

@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from imdbmapreduce_spark.cache import shared_cache
 from imdbmapreduce_spark.catalog import table
-from imdbmapreduce_spark.functions import tokens
+from imdbmapreduce_spark.functions import tokens, top_k
 from imdbmapreduce_spark.operators.dedup import _shingle_rows
 from imdbmapreduce_spark.operators.dedup import _DUCK_JAC_CTES as _JAC_CTES
 from imdbmapreduce_spark.operators.text import _SPLIT_TRAIN, _SPLIT_VAL
@@ -730,11 +730,10 @@ def eval_holdout_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     nest).
     """
     docs = table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(F.md5("text"), F.asc("doc_id"))
-    return (
-        docs.select("doc_id", "lang", F.row_number().over(w).cast("long").alias("rnk"))
-        .filter(F.col("rnk") <= _HOLDOUT_PER_LANG)
-    )
+    keyed = docs.select("doc_id", "lang", F.md5("text").alias("h"))
+    return top_k(
+        keyed, _HOLDOUT_PER_LANG, "h", "doc_id", by="lang", rank="rnk"
+    ).drop("h")
 
 
 # --- deterministic training-order shard manifest --------------------------
@@ -953,8 +952,7 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible on any layout, re-dealable by seed string (the shard
     manifest's epoch trick); ln and division are single double ops over
     identical operands in both engines, so ranking is bit-stable.
-    Top-k lowers to TakeOrderedAndProject — per-partition heaps, no
-    global sort.
+    The cut is the global :func:`~imdbmapreduce_spark.functions.top_k`.
 
     Scale: map-only scoring fused into the scan + one bounded top-k
     reduce; for per-stratum quotas compose with the window form of
@@ -1000,12 +998,7 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("es_key_q"),
     )
-    w = Window.orderBy(F.desc("es_key_q"), F.asc("doc_id"))
-    return (
-        scored.orderBy(F.desc("es_key_q"), "doc_id")
-        .limit(_WS_K)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-    )
+    return top_k(scored, _WS_K, F.desc("es_key_q"), "doc_id", rank="rnk")
 
 
 # --- DSIR: data selection with importance resampling ----------------------

@@ -41,6 +41,7 @@ from imdbmapreduce_spark.cache import (
     stable_checkpoint_lazy,
 )
 from imdbmapreduce_spark.catalog import table
+from imdbmapreduce_spark.functions import top_k
 from imdbmapreduce_spark.registry import query, unrolled_cte
 
 # Component quantization scale: 1e-6 units. Unit-norm components are
@@ -175,13 +176,14 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_by-heap agg. Ranking compares doubles built from identical
     integers, so result order is engine-stable.
     """
-    scored = _probe_scored(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "neighbor_id", "cosine", "rank")
-    )
+    return _nearest(_probe_scored(spark, sf_dir), _TOP_K)
+
+
+def _nearest(scored: DataFrame, k: int) -> DataFrame:
+    """Per-probe top-``k`` of (q_id, neighbor_id, cosine, ...) rows by
+    cosine, ties broken on neighbor_id — the one ranking every exact and
+    ANN scorer ends in."""
+    return top_k(scored, k, F.desc("cosine"), "neighbor_id", by="q_id")
 
 
 def _probe_scored(spark: SparkSession, sf_dir: str, q_pred=None) -> DataFrame:
@@ -367,11 +369,8 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    scored = _probe_scored(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _MMR_POOL)
+        _nearest(_probe_scored(spark, sf_dir), _MMR_POOL)
         .select("q_id", F.col("neighbor_id").alias("vec_id"), F.col("cosine").alias("rel"))
         # |probes|·POOL rows referenced by four downstream plan arms
         # (pair sides, id list, greedy input) — materialize once or the
@@ -648,12 +647,7 @@ def _exact_rescore_topk(
             _array_cosine("qv", "n2_q", "vc", "n2_c").alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "neighbor_id", "cosine", "rank")
-    )
+    return _nearest(scored, _TOP_K)
 
 
 @query("ann_lsh_topk")  # no SQL oracle: hash-family specifics; see tests
@@ -724,17 +718,9 @@ def _lloyd_codebook(target: DataFrame, n_cells: int) -> DataFrame:
     int64. Shared by the search IVF codebook (fixed {_IVF_CELLS} cells —
     its nprobe/C recall ratio is test-pinned) and the SemDeDup layout
     (adaptive C, :func:`_dedup_cell_count`)."""
-    cent_ids = (
-        target.select("vec_id")
-        .distinct()
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(n_cells)
-        .select(
-            "vec_id",
-            F.row_number()
-            .over(Window.orderBy(F.xxhash64("vec_id"), "vec_id"))
-            .alias("cell"),
-        )
+    ids = target.select("vec_id").distinct()
+    cent_ids = top_k(ids, n_cells, F.xxhash64("vec_id"), "vec_id", rank="cell").select(
+        "vec_id", F.col("cell").cast("int")
     )
     cents = target.join(F.broadcast(cent_ids), "vec_id").select(
         "cell", "pos", F.col("v").alias("cv")
@@ -1029,17 +1015,9 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on (s, code) instead of cell)."""
     ex = _shared_components(spark, sf_dir)
     corpus = ex.filter(F.col("vec_id") >= _N_PROBES)
-    init_ids = (
-        corpus.select("vec_id")
-        .distinct()
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(_PQ_K)
-        .select(
-            "vec_id",
-            F.row_number()
-            .over(Window.orderBy(F.xxhash64("vec_id"), "vec_id"))
-            .alias("code"),
-        )
+    ids = corpus.select("vec_id").distinct()
+    init_ids = top_k(ids, _PQ_K, F.xxhash64("vec_id"), "vec_id", rank="code").select(
+        "vec_id", F.col("code").cast("int")
     )
     cents = corpus.join(F.broadcast(init_ids), "vec_id").select(
         _pq_subspace(F.col("pos")).alias("s"),
@@ -1072,12 +1050,7 @@ def _pq_assign(target: DataFrame, cents: DataFrame) -> DataFrame:
         .join(F.broadcast(cn2), ["s", "code"])
         .withColumn("dist", F.col("cn2") - 2 * F.col("dot"))
     )
-    w = Window.partitionBy("vec_id", "s").orderBy(F.asc("dist"), F.asc("code"))
-    return (
-        aff.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("vec_id", "s", "code")
-    )
+    return top_k(aff, 1, "dist", "code", by=["vec_id", "s"]).select("vec_id", "s", "code")
 
 
 def _adc_shortlist(
@@ -1148,11 +1121,8 @@ def _adc_shortlist(
             / (F.sqrt(F.col("rn2").cast("double")) * F.sqrt(F.col("n2_q").cast("double"))),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("ascore"), F.asc("vec_id"))
-    return (
-        adc.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= _PQ_RERANK)
-        .select("q_id", "vec_id")
+    return top_k(adc, _PQ_RERANK, F.desc("ascore"), "vec_id", by="q_id").select(
+        "q_id", "vec_id"
     )
 
 
@@ -1567,10 +1537,10 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums integers; final ranking compares integers with doc_id
     tie-break.
 
-    Plan: both arms end in TakeOrderedAndProject top-{_RRF_ARM_N}
-    (driver-bounded, {_RRF_ARM_N} rows each); the fusion is a full
-    outer join of two tiny lists — Spark picks a broadcast-able join
-    under AQE, and the final top-k is again a heap.
+    Plan: both arms and the fused ranking are global
+    :func:`~imdbmapreduce_spark.functions.top_k` cuts ({_RRF_ARM_N} rows
+    per arm); the fusion is a full outer join of two tiny lists — Spark
+    picks a broadcast-able join under AQE.
 
     Scale: arm costs are the parents' (one shared tokenize pass; one
     probe×corpus integer-dot agg); fusion cost is O(arm size),
@@ -1580,29 +1550,20 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from imdbmapreduce_spark.operators.text import BM25_QUERY_TERMS, bm25_scores
 
-    lex = (
-        bm25_scores(spark, sf_dir, BM25_QUERY_TERMS)
-        .orderBy(F.desc("score_q"), "doc_id")
-        .limit(_RRF_ARM_N)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("score_q"), F.asc("doc_id")))
-            .alias("r_lex"),
-        )
-    )
-    dense = (
-        _probe_scored(spark, sf_dir)
-        .filter(F.col("q_id") == RRF_PROBE)
-        .orderBy(F.desc("cosine"), "neighbor_id")
-        .limit(_RRF_ARM_N)
-        .select(
-            F.col("neighbor_id").alias("doc_id"),
-            F.row_number()
-            .over(Window.orderBy(F.desc("cosine"), F.asc("neighbor_id")))
-            .alias("r_dense"),
-        )
-    )
+    lex = top_k(
+        bm25_scores(spark, sf_dir, BM25_QUERY_TERMS),
+        _RRF_ARM_N,
+        F.desc("score_q"),
+        "doc_id",
+        rank="r_lex",
+    ).select("doc_id", "r_lex")
+    dense = top_k(
+        _probe_scored(spark, sf_dir).filter(F.col("q_id") == RRF_PROBE),
+        _RRF_ARM_N,
+        F.desc("cosine"),
+        "neighbor_id",
+        rank="r_dense",
+    ).select(F.col("neighbor_id").alias("doc_id"), "r_dense")
     rq = lambda r: F.coalesce(
         F.round(F.lit(float(_RRF_SCALE)) / (F.lit(RRF_K) + r)).cast("long"),
         F.lit(0).cast("long"),
@@ -1613,13 +1574,13 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("r_dense"), F.lit(0)).cast("long").alias("rank_dense"),
         (rq(F.col("r_lex")) + rq(F.col("r_dense"))).alias("rrf_q"),
     )
-    w = Window.orderBy(F.desc("rrf_q"), F.asc("doc_id"))
-    return (
-        fused.orderBy(F.desc("rrf_q"), "doc_id")
-        .limit(_RRF_TOPK)
-        .withColumn("rrf", F.col("rrf_q").cast("double") / _RRF_SCALE)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .select("doc_id", "rank_lex", "rank_dense", "rrf_q", "rrf", "rank")
+    return top_k(fused, _RRF_TOPK, F.desc("rrf_q"), "doc_id").select(
+        "doc_id",
+        "rank_lex",
+        "rank_dense",
+        "rrf_q",
+        (F.col("rrf_q").cast("double") / _RRF_SCALE).alias("rrf"),
+        "rank",
     )
 
 
@@ -1702,26 +1663,16 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generator when exact scoring stops paying.
     """
     scored = _probe_scored(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    positives = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select(
-            "q_id",
-            F.col("neighbor_id").alias("pos_id"),
-            F.col("cosine").alias("pos_cosine"),
-        )
+    positives = _nearest(scored, 1).select(
+        "q_id",
+        F.col("neighbor_id").alias("pos_id"),
+        F.col("cosine").alias("pos_cosine"),
     )
-    negs = (
-        scored.join(positives, "q_id")
-        .filter(
-            (F.col("neighbor_id") != F.col("pos_id"))
-            & (F.col("cosine") <= F.col("pos_cosine") - HN_MARGIN)
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= HN_PER_PROBE)
+    negs = scored.join(positives, "q_id").filter(
+        (F.col("neighbor_id") != F.col("pos_id"))
+        & (F.col("cosine") <= F.col("pos_cosine") - HN_MARGIN)
     )
-    return negs.select("q_id", "neighbor_id", "cosine", "pos_id", "pos_cosine", "rank")
+    return _nearest(negs, HN_PER_PROBE)
 
 
 # --- arrival-time ANN lookup (shard queries vs persisted IVF index) ---------
@@ -1814,11 +1765,8 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrival truth: exact brute-force top-k of the SHARD queries over
     # the base corpus — the grown-corpus recall the arrival gate's
     # cell-pruned lookup is measured against (r8 verdict task 7)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     exact_arrival = stable_checkpoint(
-        _probe_scored(spark, sf_dir, q_pred=_is_shard("vec_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
+        _nearest(_probe_scored(spark, sf_dir, q_pred=_is_shard("vec_id")), _TOP_K)
         .select("q_id", "neighbor_id", F.col("cosine").alias("true_cos"))
     )
     arms = [

@@ -19,8 +19,9 @@ partition — per-ARROW-BATCH exact ``value_counts`` (vectorized, no
 per-row Python) folded into the running summary with the merge rule
 (sum counters, subtract the (k+1)-st largest, drop non-positive).
 Per-partition summaries (<= partitions x k slim rows) then merge in
-plain DataFrame land: a groupBy(item) sum plus one window to find the
-final (k+1)-st value. The fact shuffles NOTHING — only sketch rows move.
+plain DataFrame land: a groupBy(item) sum plus one global top-(k+1)
+(``functions.top_k``) to find the final (k+1)-st value. The fact
+shuffles NOTHING — only sketch rows move.
 """
 
 from __future__ import annotations
@@ -31,7 +32,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from imdbmapreduce_spark.functions import top_k
 
 __all__ = ["misra_gries", "count_min", "cms_estimate"]
 
@@ -90,8 +92,7 @@ def misra_gries(df: DataFrame, item: str | Column, k: int = 64) -> DataFrame:
     part_dec = partials.filter(F.col("item").isNull()).agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).alias("dec0")
     )
-    w = Window.orderBy(F.desc("cnt"), F.asc("item"))
-    ranked = summary.withColumn("rn", F.row_number().over(w))
+    ranked = top_k(summary, k + 1, F.desc("cnt"), "item", rank="rn")
     # final prune to k: subtract the (k+1)-st largest merged count
     final_dec = ranked.filter(F.col("rn") == k + 1).agg(
         F.coalesce(F.max("cnt"), F.lit(0)).alias("dec1")

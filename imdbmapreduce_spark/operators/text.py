@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from imdbmapreduce_spark.catalog import table
-from imdbmapreduce_spark.functions import tokens
+from imdbmapreduce_spark.functions import tokens, top_k
 from imdbmapreduce_spark.registry import query
 
 # BPE-ish word/number/symbol splitter (same regex dialect subset in Java
@@ -530,14 +530,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("tf").cast("double") * F.col("n_docs") / F.col("df")).alias("score"),
         )
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("doc_id", "term", "tf", "df", "score", "rank")
-    )
+    return top_k(scored, 5, F.desc("score"), "term", by="doc_id")
 
 
 # --- BM25: the ranking-function extension of TF-IDF -----------------------
@@ -608,12 +601,12 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(doc, token) count artifact (`_doc_token_counts` — tokenize
     once, consume many); the term filter restricts tf to query terms
     before any join (≤|terms|·|docs| rows); df/idf derive from tf;
-    the dl join keys on doc_id; top-k lowers to
-    TakeOrderedAndProject. Corpus stats ride a broadcast 1-row
-    crossJoin, keeping the plan data-driven. (n_docs counts docs from
-    the base table — a zero-token doc has dl=0 but can never match a
-    query term, so it affects only N and avgdl, identically in both
-    engines.)
+    the dl join keys on doc_id; the cut is the global
+    :func:`~imdbmapreduce_spark.functions.top_k`. Corpus stats ride a
+    broadcast 1-row crossJoin, keeping the plan data-driven. (n_docs
+    counts docs from the base table — a zero-token doc has dl=0 but can
+    never match a query term, so it affects only N and avgdl,
+    identically in both engines.)
 
     Scale: one corpus tokenize per session; every later table is
     query-term-bounded. The dl side is |docs| slim rows — at 100 TB
@@ -621,15 +614,11 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals.
     """
     tot = bm25_scores(spark, sf_dir, BM25_QUERY_TERMS)
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        tot.orderBy(F.desc("score_q"), "doc_id")
-        .limit(_BM25_TOPK)
-        .withColumn("score", F.col("score_q").cast("double") / _BM25_SCALE)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .select("doc_id", "score_q", "score", "rank")
+    return top_k(tot, _BM25_TOPK, F.desc("score_q"), "doc_id").select(
+        "doc_id",
+        "score_q",
+        (F.col("score_q").cast("double") / _BM25_SCALE).alias("score"),
+        "rank",
     )
 
 
@@ -1031,16 +1020,14 @@ def term_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped sorted term list per doc (sort_array + slice — the
     adamic_adar_parts shape), pairs explode map-side from that list
     (posexplode + slice, per-doc fan-out ≤ M²/2 — no self-join, no
-    window pass); marginal joins are vocab-sized broadcasts; top-k
-    lowers to TakeOrderedAndProject.
+    window pass); marginal joins are vocab-sized broadcasts; the cut is
+    the global :func:`~imdbmapreduce_spark.functions.top_k`.
 
     Scale: pair-generation output is |docs|·M²/2 slim rows with
     map-side combine collapsing repeats before the (term_a, term_b)
     exchange; support pruning happens in the same aggregate. No
     all-pairs term join exists at any scale.
     """
-    from pyspark.sql.window import Window
-
     docs = table(spark, sf_dir, "documents")
     dt = _doc_token_counts(spark, sf_dir)
     # r13 (guide §2.4, the adamic_adar_parts r12 shape): ONE
@@ -1110,13 +1097,15 @@ def term_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("pmi_q"),
         )
     )
-    w = Window.orderBy(F.desc("pmi_q"), F.asc("term_a"), F.asc("term_b"))
-    return (
-        scored.orderBy(F.desc("pmi_q"), "term_a", "term_b")
-        .limit(_PMI_TOPK)
-        .withColumn("pmi", F.col("pmi_q").cast("double") / _PMI_SCALE)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .select("term_a", "term_b", "n_a", "n_b", "n_ab", "pmi_q", "pmi", "rank")
+    return top_k(scored, _PMI_TOPK, F.desc("pmi_q"), "term_a", "term_b").select(
+        "term_a",
+        "term_b",
+        "n_a",
+        "n_b",
+        "n_ab",
+        "pmi_q",
+        (F.col("pmi_q").cast("double") / _PMI_SCALE).alias("pmi"),
+        "rank",
     )
 
 

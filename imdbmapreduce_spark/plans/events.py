@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imdbmapreduce_spark.catalog import table
-from imdbmapreduce_spark.functions import cents_sum
+from imdbmapreduce_spark.functions import cents_sum, top_k
 from imdbmapreduce_spark.registry import query, unrolled_cte
 
 # Formatted-timestamp spelling in each engine, microsecond-exact.
@@ -926,11 +926,8 @@ def _top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact top-_HH_TOP users by count — ONE definition shared by
     the oracle-checked exact twin and the CMS audit, so the audited
     candidate set can never drift from the hash-verified one."""
-    return (
-        _user_exact_counts(spark, sf_dir)
-        .orderBy(F.desc("exact_cnt"), F.asc("user_id"))
-        .limit(_HH_TOP)
-    )
+    users = _user_exact_counts(spark, sf_dir)
+    return top_k(users, _HH_TOP, F.desc("exact_cnt"), "user_id", rank="rnk")
 
 
 @query(
@@ -955,20 +952,15 @@ def events_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch's self-audit compares against an externally hash-verified
     exact side (r4 verdict item 6).
 
-    Plan: one partial/final count agg, then a distributed top-k
-    (orderBy + limit lowers to TakeOrderedAndProject — per-partition
-    heaps, no global sort); the rank window runs over the surviving
-    {top} rows only.
+    Plan: one partial/final count agg, then the global
+    :func:`~imdbmapreduce_spark.functions.top_k`.
 
     Scale: this is the regime where the exact answer is affordable
     (|users| grouped rows); when the key domain itself doesn't fit, the
     sketch twin takes over — that division of labor is the point of
     registering them as a pair.
     """
-    w = Window.orderBy(F.desc("exact_cnt"), F.asc("user_id"))
-    return _top_users(spark, sf_dir).withColumn(
-        "rnk", F.row_number().over(w).cast("long")
-    )
+    return _top_users(spark, sf_dir)
 
 
 @query("events_heavy_hitters_sketch")  # no SQL oracle: sketch internals;

@@ -23,6 +23,7 @@ from imdbmapreduce_spark.functions import (
     cents_sum,
     one_minus_cents,
     one_plus_cents,
+    top_k,
 )
 from imdbmapreduce_spark.operators.dedup import _DUCK_JAC_CTES as _NEARDUP_JAC_CTES
 from imdbmapreduce_spark.cache import stable_checkpoint
@@ -345,23 +346,16 @@ def top_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on the partition key; rank order includes a
     tiebreaker (o_orderkey) so results are deterministic. AQE handles a
-    skewed priority. At extreme K≪group sizes a partial top-K per
-    partition (window after repartition+sortWithinPartitions) would cut
-    shuffle volume; Spark's WindowGroupLimit pushes rn<=5 down for us.
+    skewed priority. The per-group
+    :func:`~imdbmapreduce_spark.functions.top_k` plans as
+    WindowGroupLimit, which keeps each partition's first 5 rows per
+    priority before the shuffle.
     """
-    orders = table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderpriority", "o_orderkey", "o_totalprice"
     )
-    return (
-        orders.select(
-            "o_orderpriority",
-            "o_orderkey",
-            "o_totalprice",
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 5)
+    return top_k(
+        orders, 5, F.desc("o_totalprice"), "o_orderkey", by="o_orderpriority", rank="rn"
     )
 
 

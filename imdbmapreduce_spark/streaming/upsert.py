@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imdbmapreduce_spark.functions import top_k
+
 __all__ = ["KeyedStateSink", "Scd2Sink", "read_state"]
 
 _POINTER = "_CURRENT"
@@ -99,14 +101,8 @@ class KeyedStateSink:
         spark = batch_df.sparkSession
         state = read_state(spark, self.state_path)
         merged = batch_df if state is None else state.unionByName(batch_df)
-        w = Window.partitionBy(*self.keys).orderBy(
-            *[F.desc(c) for c in self.order_cols]
-        )
-        winner = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        order = [F.desc(c) for c in self.order_cols]
+        winner = top_k(merged, 1, *order, by=self.keys, rank="_rn").drop("_rn")
         _commit_version(self.state_path, winner)
 
 

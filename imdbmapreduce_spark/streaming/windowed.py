@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from imdbmapreduce_spark.catalog import normalize_events_ts, table
-from imdbmapreduce_spark.functions import cents
+from imdbmapreduce_spark.functions import cents, top_k
 from imdbmapreduce_spark.registry import query
 
 # Stream-side session gap. The batch plan (plans/events.py) and the
@@ -409,14 +409,8 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     sink = _run_to_table(updates, "append")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("ver"))
-    return (
-        sink.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "sum_cents")
-    )
+    latest = top_k(sink, 1, F.desc("ver"), by="user_id")
+    return latest.select("user_id", "n_events", "sum_cents")
 
 
 @query(
@@ -793,9 +787,12 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dropDuplicates is the same defensive (new_doc, matched_doc) key
     # the old driver-side `seen` set modeled (jaccard is functionally
     # determined by the pair, so which duplicate survives is immaterial).
+    # The discovered epoch=N partition column is the sink layout, not the
+    # result: drop it so both paths return the same three columns.
     return (
         spark.read.schema(match_schema).parquet(sink)
         .dropDuplicates(["new_doc", "matched_doc"])
+        .select("new_doc", "matched_doc", "jaccard")
     )
 
 

@@ -13,6 +13,12 @@ and cost is |fact| × O(1). The whitelist is asserted EXACTLY, so a new
 query that introduces an unbounded BNLJ — or an existing one whose plan
 regresses — fails the lint rather than hiding in the allowed set.
 
+A global ``Window`` (empty ``partitionSpec``) runs in ONE task, so it
+is allowed only over a bounded input: either directly on a
+``TakeOrderedAndProject`` (the global form of ``functions.top_k``, at
+most k rows) or in the exact allowlist ``_GLOBAL_WINDOW_ALLOWED``,
+each member with the frame that bounds it.
+
 This is the executable form of the SCALE.md claims "no cartesian
 products" and "all analytical hot paths are codegen expressions".
 """
@@ -64,12 +70,48 @@ _BNLJ_ALLOWED = {
 }
 
 
+# Global windows NOT on a TakeOrderedAndProject, each over a frame whose
+# size does not grow with the corpus:
+_GLOBAL_WINDOW_ALLOWED = {
+    "dedup_token_waterfall",  # the 4-row stage frame
+    "file_compaction_plan",  # _CMP_FILES file stats
+    "neardup_family_audit",  # the sqrt-bounded df histogram
+    "orders_seasonal_decomposition",  # months
+    "part_price_size_skyline",  # distinct prices
+    # |suppliers|: the max-revenue window keeps q15 to a single fact
+    # scan (pinned in test_tpch2.py)
+    "q15_top_supplier",
+    "quality_threshold_sweep",  # the bucket grid
+    "source_budget_waterfill",  # |sources|
+    "source_temperature_mix",  # |sources|
+}
+
+
+def _global_window_children(plan):
+    """Node names of the children of every Window in ``plan`` (a JVM
+    SparkPlan) whose partitionSpec is empty."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            out.append(node.child().nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def test_no_cartesian_no_row_python_bounded_bnlj(spark, sf_dir):
-    cartesian, row_python, bnlj = [], [], []
+    cartesian, row_python, bnlj, global_window = [], [], [], []
     for name, fn in registry.all_queries().items():
         if name.startswith("streaming_"):
             continue  # streaming plans are covered by test_streaming.py
-        plan = fn(spark, sf_dir)._jdf.queryExecution().sparkPlan().toString()
+        spark_plan = fn(spark, sf_dir)._jdf.queryExecution().sparkPlan()
+        plan = spark_plan.toString()
+        if "Window" in plan and any(
+            child != "TakeOrderedAndProject"
+            for child in _global_window_children(spark_plan)
+        ):
+            global_window.append(name)
         if "CartesianProduct" in plan:
             cartesian.append(name)
         if "BatchEvalPython" in plan:
@@ -81,4 +123,8 @@ def test_no_cartesian_no_row_python_bounded_bnlj(spark, sf_dir):
     assert set(bnlj) == _BNLJ_ALLOWED, (
         f"BNLJ drift — new: {set(bnlj) - _BNLJ_ALLOWED}, "
         f"stale whitelist: {_BNLJ_ALLOWED - set(bnlj)}"
+    )
+    assert set(global_window) == _GLOBAL_WINDOW_ALLOWED, (
+        f"unbounded global Window — new: {set(global_window) - _GLOBAL_WINDOW_ALLOWED}, "
+        f"stale allowlist: {_GLOBAL_WINDOW_ALLOWED - set(global_window)}"
     )

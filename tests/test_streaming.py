@@ -581,6 +581,18 @@ def test_streaming_neardup_gate_equals_batch(spark, sf_dir):
     assert want, "test premise: the shard has at least one near-dup match"
 
 
+def test_streaming_neardup_gate_schema_equals_batch(spark, sf_dir):
+    """The gate returns its batch twin's columns, not the sink layout:
+    the epoch=N partition directories exist for replay idempotence only,
+    so the discovered ``epoch`` column (which varies between identical
+    runs) must not leak into the result."""
+    from imdbmapreduce_spark.registry import get
+
+    got = get("streaming_neardup_gate").fn(spark, sf_dir)
+    want = get("neardup_incremental_ingest").fn(spark, sf_dir)
+    assert got.dtypes == want.dtypes
+
+
 def test_streaming_neardup_gate_has_no_driver_collect():
     """The arrival loop must never funnel matches through the driver: a
     pathological shard (today's crawl heavily duplicating the corpus)
