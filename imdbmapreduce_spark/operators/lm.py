@@ -1,24 +1,34 @@
 """Language-model-adjacent corpus operators: tokenizer induction and
-unigram LM scoring (north-star scope, the training-data side of an LLM
+n-gram LM scoring (north-star scope, the training-data side of an LLM
 pipeline; no reference analog — the reference's text processing stops at
 the cast tokenizer, /root/reference/Code/mapReduce.erl:140-148).
 
-Two operators a real pretraining pipeline runs over the whole corpus:
+Three families a real pretraining pipeline runs over the whole corpus:
 
-- :func:`bpe_first_merge_stats` — the first step of byte-pair-encoding
-  training: count adjacent SYMBOL pairs across the corpus vocabulary,
-  weighted by word frequency. BPE's defining trick is that after one
-  pass over the corpus (the word-count aggregation), every further merge
-  round operates on the VOCABULARY (|unique words|), not the corpus —
-  exactly how this plan is shaped, so the expensive input is touched
-  once no matter how many merges a tokenizer build runs.
-- :func:`doc_unigram_logprob` — CCNet-style LM quality scoring: each
-  document's mean per-token log-probability under the corpus's own
-  unigram distribution. Low-probability documents are gibberish/noise;
-  high-probability ones are repetitive boilerplate — both tails are what
-  perplexity filters cut. The real thing swaps the unigram model for a
-  KenLM n-gram; the plan shape (score tokens against a broadcast/joined
-  model table, aggregate per doc) is identical.
+- BPE tokenizer training and use (:func:`bpe_first_merge_stats`,
+  :func:`bpe_merge_sequence`, :func:`bpe_encode_stats`,
+  :func:`doc_bpe_token_budget`). After one pass over the corpus (the
+  word-count aggregation), every merge round operates on the
+  VOCABULARY (|unique words|), not the corpus, so the expensive input
+  is touched once however many merges a tokenizer build runs. The
+  trained tokenizer is one session artifact (:func:`_bpe_learn`), also
+  persisted with the text index.
+- The n-gram LM ladder, CCNet-style quality scoring: each document's
+  total and mean log-probability under a model trained on the corpus
+  itself — Jelinek-Mercer rungs of order 1, 2, 3 and 5
+  (:func:`doc_unigram_logprob` .. :func:`doc_5gram_logprob`, all one
+  :func:`_jm_logprob`), the Kneser-Ney bigram
+  (:func:`doc_kn_bigram_logprob`) and the head/middle/tail perplexity
+  buckets (:func:`ccnet_perplexity_buckets`). Every rung reads one
+  session-cached count table per order (:func:`_doc_ngram_counts` per
+  document, :func:`_corpus_ngram_counts` per corpus) and ends in one
+  per-document sum (:func:`_per_doc_score`); corpus totals join as
+  broadcast one-row aggregates, so building a rung's plan runs no job.
+  Low-probability documents are gibberish/noise; high-probability ones
+  are repetitive boilerplate — both tails are what perplexity filters
+  cut.
+- The unigram-LM (SentencePiece-model) tokenizer
+  (:func:`unigram_tokenizer_encode`): Viterbi segmentation as pure SQL.
 
 Determinism contract (repo-wide style): every cross-row reduction is an
 exact integer sum — pair counts are integer weights, and per-token
@@ -30,13 +40,17 @@ libm on this data; the sums of quantized values are exact either way).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imdbmapreduce_spark.cache import register_release_hook, shared_cache
 from imdbmapreduce_spark.catalog import table
 from imdbmapreduce_spark.functions import tokens, top_k
-from imdbmapreduce_spark.operators.text import _DUCK_TOKS
+from imdbmapreduce_spark.operators.text import _DUCK_TOKS, _doc_token_counts
 from imdbmapreduce_spark.registry import query, unrolled_cte
 
 _BPE_TOP = 100
@@ -249,8 +263,6 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with the cache's release hooks so release_shared_caches() clears it
 # like every other session artifact.
 _LEARN_MEMO: dict[tuple, tuple[DataFrame, list]] = {}
-
-from imdbmapreduce_spark.cache import register_release_hook  # noqa: E402
 
 register_release_hook(_LEARN_MEMO.clear)
 
@@ -566,6 +578,193 @@ def doc_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- the n-gram LM ladder ----------------------------------------------------
+
+
+def _keys(n: int) -> list[str]:
+    return [f"w{i}" for i in range(1, n + 1)]
+
+
+def _doc_ngram_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """Per-(doc, adjacent n-token window) counts, columns (doc_id,
+    w1..wn, k): the one session-cached per-document table of each order,
+    built in one corpus pass whose map-side combine folds a hot n-gram
+    to one row per document. n = 1 is
+    :func:`~imdbmapreduce_spark.operators.text._doc_token_counts` (the
+    table TF-IDF, BM25 and the BPE budget share) with ``tok`` named
+    ``w1``."""
+    if n == 1:
+        return _doc_token_counts(spark, sf_dir).withColumnRenamed("tok", "w1")
+
+    def build() -> DataFrame:
+        zipped = F.arrays_zip(
+            F.slice("toks", 1, F.size("toks") - (n - 1)),
+            *[
+                F.expr(f"slice(toks, {i}, size(toks) - {n - 1})")
+                for i in range(2, n + 1)
+            ],
+        )
+        return (
+            table(spark, sf_dir, "documents")
+            .select("doc_id", tokens("text").alias("toks"))
+            .filter(F.size("toks") >= n)
+            .select("doc_id", F.explode(zipped).alias("p"))
+            .select("doc_id", *[F.col(f"p.{i}").alias(f"w{i + 1}") for i in range(n)])
+            .groupBy("doc_id", *_keys(n))
+            .agg(F.count(F.lit(1)).alias("k"))
+        )
+
+    return shared_cache(spark, ("doc_ngram_counts", sf_dir, n), build)
+
+
+def _corpus_ngram_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """Corpus count table of order n, (w1..wn, c): the trained counts
+    every rung reads. Session-cached, and aggregated from the cached
+    per-document table, so building it never re-reads the corpus."""
+    return shared_cache(
+        spark,
+        ("corpus_ngram_counts", sf_dir, n),
+        lambda: _doc_ngram_counts(spark, sf_dir, n)
+        .groupBy(*_keys(n))
+        .agg(F.sum("k").alias("c")),
+    )
+
+
+def _conditional(spark: SparkSession, sf_dir: str, j: int, n: int) -> DataFrame:
+    """The order-j MLE P(wj | w1..w(j-1)) keyed on the LAST j words of
+    an order-n gram: columns w(n-j+1)..wn and ``p{j}``. The denominator
+    is the prefix count summed over the order-j table itself, so each
+    conditional distribution sums to 1. For j = 1 the prefix is empty
+    and the denominator is the corpus total, a one-row aggregate
+    broadcast into the plan (no driver round-trip)."""
+    c = _corpus_ngram_counts(spark, sf_dir, j)
+    if j == 1:
+        c = c.crossJoin(F.broadcast(c.agg(F.sum("c").cast("double").alias("n"))))
+    else:
+        c = c.withColumn("n", F.sum("c").over(Window.partitionBy(*_keys(j - 1))))
+    return c.select(
+        *[F.col(f"w{i}").alias(f"w{i + n - j}") for i in range(1, j + 1)],
+        (F.col("c").cast("double") / F.col("n")).alias(f"p{j}"),
+    )
+
+
+def _lp_q(prob: Column) -> Column:
+    """A probability's log, quantized to 1e-6 (one rounding per model
+    entry, so every later sum is exact)."""
+    return F.round(F.log(prob) * _LP_SCALE).cast("long").alias("lp_q")
+
+
+def _per_doc_score(scored: DataFrame, n_col: str) -> DataFrame:
+    """The one per-document tail of every rung: (doc_id, k, lp_q) rows →
+    ``n_col`` = Σk, ``logprob_q`` = Σ k·lp_q (exact integer sums) and
+    ``avg_logprob``, one fixed int → double division sequence."""
+    lp = F.sum(F.col("k") * F.col("lp_q"))
+    return scored.groupBy("doc_id").agg(
+        F.sum("k").alias(n_col),
+        lp.alias("logprob_q"),
+        (lp.cast("double") / F.sum("k") / F.lit(_LP_SCALE)).alias("avg_logprob"),
+    )
+
+
+def _jm_logprob(
+    spark: SparkSession, sf_dir: str, weights: tuple[float, ...], n_col: str
+) -> DataFrame:
+    """One Jelinek-Mercer rung of order n = ``len(weights)``: per
+    document, the total and mean log-probability of its n-grams under
+    Σ_j weights[n-j] · P(wn | w(n-j+1)..w(n-1)), j = n..1, every
+    conditional an MLE over the corpus itself (see :func:`_conditional`).
+    Interpolation keeps every probability defined without a backoff
+    path: each lower-order suffix of a corpus n-gram occurs in the
+    corpus too. The terms add top order first, left to right, the order
+    the oracles spell.
+
+    Determinism: the score reads only corpus-level counts, so every row
+    of one n-gram computes the same double and rounds it once
+    (:func:`_lp_q`); the per-document sums are exact integers both
+    engines replay bit-for-bit.
+
+    Plan: the unigram rung joins its per-document table to the cached
+    unigram table (with the broadcast corpus total) on the token. For
+    n ≥ 2 the top order's count and its (n-1)-prefix count are window
+    sums over the cached per-document table: one hash exchange on
+    w1..w(n-1) serves both windows, and the 5-gram rung measured
+    2.9–5.8 s → 1.4–1.9 s at sf0.1 against the earlier build-a-model-
+    table-then-join shape (plans/r12/doc_5gram_logprob_{before,after}.txt).
+    Each lower order j joins as a conditional table on the last j words,
+    so the order-n rung is n-1 joins and no per-order prefix
+    groupBy→join pair. Joining the cached top-order corpus table on all
+    n keys instead measured faster for the bigram and trigram rungs but
+    slower for the 5-gram, whose corpus table is nearly as large as the
+    per-document one; the window shape is kept for every n ≥ 2.
+
+    Scale: window sums have no map-side partial combine, so one window
+    partition holds every (doc, n-gram) row under one (n-1)-word
+    prefix: at most the prefix's corpus count, and at most |docs| × its
+    distinct continuations. The bigram rung's hottest prefix is the
+    corpus's most frequent word (a stop word, a few percent of all
+    tokens under Zipf's law); each higher order's hottest prefix is
+    rarer, so its bound is tighter. On the sf0.1 corpus the hottest
+    prefix holds 3.4% of the per-document rows at order 2 (8,753 of
+    256,477), 0.13% at order 3 and 6 rows at order 5. A prefix that
+    outgrows one task needs the join shape back for that rung; AQE's
+    skew split applies to joins, not windows. The lower-order tables and
+    the unigram join are vocabulary-sized or smaller, and AQE picks
+    broadcast or shuffle from their size. No UDFs and no driver
+    round-trips.
+    """
+    n = len(weights)
+    keys = _keys(n)
+    scored = _doc_ngram_counts(spark, sf_dir, n)
+    if n == 1:
+        scored = scored.join(_conditional(spark, sf_dir, 1, 1), "w1")
+    else:
+        scored = (
+            scored.withColumn("c", F.sum("k").over(Window.partitionBy(*keys)))
+            .withColumn("n", F.sum("k").over(Window.partitionBy(*keys[:-1])))
+            .withColumn(f"p{n}", F.col("c").cast("double") / F.col("n"))
+        )
+    for j in range(n - 1, 0, -1):
+        scored = scored.join(_conditional(spark, sf_dir, j, n), keys[n - j :])
+    prob = reduce(
+        operator.add, [F.lit(w) * F.col(f"p{n - i}") for i, w in enumerate(weights)]
+    )
+    return _per_doc_score(scored.select("doc_id", "k", _lp_q(prob)), n_col)
+
+
+@query(
+    "doc_unigram_logprob",
+    oracle=f"""
+    WITH ex AS (
+      SELECT doc_id, unnest(toks) AS tok
+      FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents)
+    ), dt AS (
+      SELECT doc_id, tok, COUNT(*) AS k FROM ex GROUP BY doc_id, tok
+    ), vocab AS (
+      SELECT tok, SUM(k) AS cnt FROM dt GROUP BY tok
+    ), n AS (
+      SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM vocab
+    ), lp AS (
+      SELECT tok,
+             CAST(round(ln(CAST(cnt AS DOUBLE) / (SELECT total FROM n))
+                        * {_LP_SCALE}) AS BIGINT) AS lp_q
+      FROM vocab
+    )
+    SELECT d.doc_id,
+           CAST(SUM(d.k) AS BIGINT) AS n_tokens,
+           CAST(SUM(d.k * l.lp_q) AS BIGINT) AS logprob_q,
+           CAST(SUM(d.k * l.lp_q) AS DOUBLE) / SUM(d.k) / {_LP_SCALE}
+             AS avg_logprob
+    FROM dt d JOIN lp l ON d.tok = l.tok
+    GROUP BY d.doc_id
+    """,
+)
+def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perplexity-style quality scoring: per document, the total and
+    mean per-token log-probability under the corpus's own unigram
+    distribution (CCNet's filter, with the KenLM swapped for the unigram
+    model the same plan shape supports). The ladder's first rung, weight
+    1.0: :func:`_jm_logprob`."""
+    return _jm_logprob(spark, sf_dir, (1.0,), "n_tokens")
 
 
 _MIX2 = 0.7  # interpolation weight on the bigram MLE (0.3 on unigram)
@@ -613,218 +812,17 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM quality scoring: per document, the total and mean
     per-bigram log-probability under an INTERPOLATED bigram model
     (0.7·P(w2|w1) + 0.3·P(w2)) trained on the corpus itself — one rung
-    up the n-gram ladder from :func:`doc_unigram_logprob`, and the exact
-    plan shape of a KenLM-scored CCNet filter: build the model table
-    once, join each document's n-gram counts against it, aggregate per
-    doc. Interpolation (not backoff) keeps every probability defined
-    without a conditional path, the standard Jelinek-Mercer smoothing.
-
-    Determinism: P(w2|w1) uses the PREFIX count (Σ_w c(w1,w)) so the
-    conditional distribution sums to 1; the interpolated log-prob is
-    quantized to 1e-6 at the MODEL level (one rounding per distinct
-    corpus bigram), making every cross-row reduction an exact integer
-    sum both engines replay bit-for-bit.
-
-    Plan: one corpus pass builds per-(doc, bigram) counts (map-side
-    combine bounds hot bigrams at |docs| rows, same Zipf argument as
-    the unigram op); corpus bigram/prefix/unigram tables all derive
-    from those counts — no second scan. Two model-build joins key on
-    w1/w2 (vocab-sized); the scoring join keys on the bigram pair and
-    the final agg on doc_id.
-
-    Scale: the model table is |distinct bigrams| slim rows (~1e9-1e10
-    at 100 TB — a shuffle join, which AQE picks over broadcast
-    automatically); per-doc pre-combine caps skew; everything else is
-    vocab-sized. No UDFs, no driver state.
-    """
-    from imdbmapreduce_spark.cache import shared_cache
-
-    dg = shared_cache(
-        spark,
-        ("bigram_doc_counts", sf_dir),
-        lambda: _doc_bigram_counts(spark, sf_dir),
-    )
-    big = _corpus_ngram_counts(spark, sf_dir, 2).withColumnRenamed("c", "c12")
-    pre = big.groupBy("w1").agg(F.sum("c12").alias("n1"))
-    uni = _corpus_ngram_counts(spark, sf_dir, 1).withColumnRenamed("c", "c1")
-    total_row = uni.agg(F.sum("c1")).first()[0]
-    if total_row is None:
-        return spark.createDataFrame(
-            [], "doc_id long, n_bigrams long, logprob_q long, avg_logprob double"
-        )
-    total = float(total_row)
-    model = (
-        big.join(pre, "w1")
-        .join(uni.withColumnRenamed("tok", "w2"), "w2")
-        .select(
-            "w1",
-            "w2",
-            F.round(
-                F.log(
-                    F.lit(_MIX2) * (F.col("c12").cast("double") / F.col("n1"))
-                    + F.lit(1.0 - _MIX2)
-                    * (F.col("c1").cast("double") / F.lit(total))
-                )
-                * _LP_SCALE
-            )
-            .cast("long")
-            .alias("lp_q"),
-        )
-    )
-    return (
-        dg.join(model, ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").alias("n_bigrams"),
-            F.sum(F.col("k") * F.col("lp_q")).alias("logprob_q"),
-            (
-                F.sum(F.col("k") * F.col("lp_q")).cast("double")
-                / F.sum("k")
-                / F.lit(_LP_SCALE)
-            ).alias("avg_logprob"),
-        )
-    )
-
-
-def _doc_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(doc, adjacent-token-pair) counts — the single corpus pass
-    the bigram scorer builds everything from."""
-    docs = table(spark, sf_dir, "documents")
-    c = tokens("text")
-    return (
-        docs.select("doc_id", c.alias("toks"))
-        .filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("toks", 1, F.size("toks") - 1),
-                    F.expr("slice(toks, 2, size(toks) - 1)"),
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", F.col("p.0").alias("w1"), F.col("p.1").alias("w2"))
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-
-
-@query(
-    "doc_unigram_logprob",
-    oracle=f"""
-    WITH ex AS (
-      SELECT doc_id, unnest(toks) AS tok
-      FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents)
-    ), dt AS (
-      SELECT doc_id, tok, COUNT(*) AS k FROM ex GROUP BY doc_id, tok
-    ), vocab AS (
-      SELECT tok, SUM(k) AS cnt FROM dt GROUP BY tok
-    ), n AS (
-      SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM vocab
-    ), lp AS (
-      SELECT tok,
-             CAST(round(ln(CAST(cnt AS DOUBLE) / (SELECT total FROM n))
-                        * {_LP_SCALE}) AS BIGINT) AS lp_q
-      FROM vocab
-    )
-    SELECT d.doc_id,
-           CAST(SUM(d.k) AS BIGINT) AS n_tokens,
-           CAST(SUM(d.k * l.lp_q) AS BIGINT) AS logprob_q,
-           CAST(SUM(d.k * l.lp_q) AS DOUBLE) / SUM(d.k) / {_LP_SCALE}
-             AS avg_logprob
-    FROM dt d JOIN lp l ON d.tok = l.tok
-    GROUP BY d.doc_id
-    """,
-)
-def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perplexity-style quality scoring: per document, the total and
-    mean per-token log-probability under the corpus's own unigram
-    distribution (CCNet's filter, with the KenLM swapped for the unigram
-    model the same plan shape supports).
-
-    Per-token log-probs quantize to 1e-6 units at the VOCABULARY level
-    (one rounding per distinct token, not per occurrence), so every
-    cross-row sum is an exact integer reduction; the mean is a fixed
-    int → double division sequence both engines replay bit-for-bit.
-
-    Plan: per-(doc, token) counts first (map-side combine shrinks "the"
-    from one row per occurrence to one row per document BEFORE any
-    join), vocabulary totals from those counts (no second corpus scan),
-    then a token-keyed join back and one per-doc agg.
-
-    Scale: the join keys on token — skewed by Zipf's law, but the
-    per-doc pre-combine bounds the hot key at |docs| rows and AQE's
-    skew split applies (the downstream agg keys on doc_id, not token).
-    At 100 TB the model side is |vocab| slim rows; a trained n-gram
-    model would instead be a broadcast/bucketed model table — same
-    join, different build.
-    """
-    from imdbmapreduce_spark.operators.text import _doc_token_counts
-
-    # the per-(doc, token) counts feed the vocabulary build, the eager
-    # total, and the scoring join — the shared tokenize-once artifact
-    dt = _doc_token_counts(spark, sf_dir)
-    vocab = dt.groupBy("tok").agg(F.sum("k").alias("cnt"))
-    total_row = vocab.agg(F.sum("cnt")).first()[0]
-    if total_row is None:  # every document tokenized empty
-        return spark.createDataFrame(
-            [], "doc_id long, n_tokens long, logprob_q long, avg_logprob double"
-        )
-    total = float(total_row)
-    lp = vocab.select(
-        "tok",
-        F.round(F.log(F.col("cnt").cast("double") / F.lit(total)) * _LP_SCALE)
-        .cast("long")
-        .alias("lp_q"),
-    )
-    return (
-        dt.join(lp, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").alias("n_tokens"),
-            F.sum(F.col("k") * F.col("lp_q")).alias("logprob_q"),
-            (
-                F.sum(F.col("k") * F.col("lp_q")).cast("double")
-                / F.sum("k")
-                / F.lit(_LP_SCALE)
-            ).alias("avg_logprob"),
-        )
-    )
+    up the n-gram ladder from :func:`doc_unigram_logprob`, and the plan
+    shape of a KenLM-scored CCNet filter. The 0.3 weight is spelled
+    ``1.0 - _MIX2`` (0.30000000000000004), as in the oracle, so both
+    engines multiply by the same double. :func:`_jm_logprob`."""
+    return _jm_logprob(spark, sf_dir, (_MIX2, 1.0 - _MIX2), "n_bigrams")
 
 
 # Trigram interpolation weights (Jelinek-Mercer): trigram/bigram/unigram
 # MLEs. Every term is defined for every corpus trigram: its (w2,w3)
 # bigram and w3 unigram necessarily occur.
 _MIX3_TRI, _MIX3_BI, _MIX3_UNI = 0.6, 0.3, 0.1
-
-
-def _doc_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(doc, adjacent-token-triple) counts — the single corpus pass
-    the trigram scorer builds everything from."""
-    docs = table(spark, sf_dir, "documents")
-    c = tokens("text")
-    return (
-        docs.select("doc_id", c.alias("toks"))
-        .filter(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("toks", 1, F.size("toks") - 2),
-                    F.expr("slice(toks, 2, size(toks) - 2)"),
-                    F.expr("slice(toks, 3, size(toks) - 2)"),
-                )
-            ).alias("p"),
-        )
-        .select(
-            "doc_id",
-            F.col("p.0").alias("w1"),
-            F.col("p.1").alias("w2"),
-            F.col("p.2").alias("w3"),
-        )
-        .groupBy("doc_id", "w1", "w2", "w3")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
 
 
 @query(
@@ -881,174 +879,15 @@ def doc_trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram-LM quality scoring: per document, the total and mean
     per-trigram log-probability under a 3-way Jelinek-Mercer
     interpolated model (0.6·P(w3|w1w2) + 0.3·P(w3|w2) + 0.1·P(w3))
-    trained on the corpus itself — the next rung of the n-gram ladder
-    above :func:`doc_bigram_logprob`, and structurally the KenLM shape
-    CCNet actually deploys (they use 5-grams; every additional order is
-    this same pattern: one more count table, one more prefix table, one
-    more model join).
-
-    Determinism: each conditional uses its PREFIX count (Σ over the
-    next word) so the distribution sums to 1; the interpolated log-prob
-    quantizes to 1e-6 at the MODEL level — one rounding per distinct
-    corpus trigram — making every per-doc reduction an exact integer
-    sum both engines replay bit-for-bit.
-
-    Plan (r13, the doc_5gram_logprob r12 window shape one rung down):
-    ONE corpus pass builds per-(doc, trigram) counts; the trigram count
-    and its 2-prefix marginal are window sums over that table (one
-    (w1, w2) exchange serves both partitions), the bigram table (the
-    SAME session artifact the bigram scorer uses) joins in carrying its
-    own prefix marginal as a window column, and the unigram join stays.
-    vs the r12 shape this removes the separate model-table build — the
-    trigram-keyed scoring shuffle join and both prefix groupBy→join
-    pairs (plans/r13/doc_trigram_logprob_{before,after}.txt).
-
-    Scale: the model table is |distinct trigrams| slim rows — a shuffle
-    join at 100 TB (AQE decides); per-doc pre-combine caps hot-trigram
-    skew exactly as in the bigram op; everything else is vocab-sized.
-    No UDFs, no driver state beyond one scalar total.
-    """
-    from imdbmapreduce_spark.cache import shared_cache
-
-    tg = shared_cache(
-        spark,
-        ("trigram_doc_counts", sf_dir),
-        lambda: _doc_trigram_counts(spark, sf_dir),
-    )
-    big = _corpus_ngram_counts(spark, sf_dir, 2).withColumnRenamed("c", "c12")
-    uni = _corpus_ngram_counts(spark, sf_dir, 1).withColumnRenamed("c", "c1")
-    total_row = uni.agg(F.sum("c1")).first()[0]
-    if total_row is None:
-        return spark.createDataFrame(
-            [], "doc_id long, n_trigrams long, logprob_q long, avg_logprob double"
-        )
-    total = float(total_row)
-    # r13, the doc_5gram_logprob r12 shape one rung down (guide §2.4):
-    # the top-order marginals c123 (corpus count of this trigram) and
-    # n12 (its 2-prefix count) are WINDOW sums over the per-doc count
-    # table itself — one (w1, w2) hash exchange serves both window
-    # partitions — and the bigram table carries its own prefix marginal
-    # (n1) as a window column, replacing the separate trigram-table
-    # build + two prefix groupBy→join pairs. The score expression reads
-    # only corpus-level counts, so every row of the same trigram
-    # computes the identical double and rounds identically — the
-    # model-level 1e-6 quantization contract is unchanged
-    # (plans/r13/doc_trigram_logprob_{before,after}.txt).
-    bigw = big.withColumn("n1s", F.sum("c12").over(Window.partitionBy("w1")))
-    return (
-        tg.withColumn(
-            "c123", F.sum("k").over(Window.partitionBy("w1", "w2", "w3"))
-        )
-        .withColumn("n12", F.sum("k").over(Window.partitionBy("w1", "w2")))
-        .join(
-            bigw.select(
-                F.col("w1").alias("w2"),
-                F.col("w2").alias("w3"),
-                F.col("c12").alias("c23"),
-                F.col("n1s").alias("n2s"),
-            ),
-            ["w2", "w3"],
-        )
-        .join(uni.select(F.col("tok").alias("w3"), F.col("c1").alias("c3")), "w3")
-        .select(
-            "doc_id",
-            "k",
-            F.round(
-                F.log(
-                    F.lit(_MIX3_TRI) * (F.col("c123").cast("double") / F.col("n12"))
-                    + F.lit(_MIX3_BI) * (F.col("c23").cast("double") / F.col("n2s"))
-                    + F.lit(_MIX3_UNI) * (F.col("c3").cast("double") / F.lit(total))
-                )
-                * _LP_SCALE
-            )
-            .cast("long")
-            .alias("lp_q"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").alias("n_trigrams"),
-            F.sum(F.col("k") * F.col("lp_q")).alias("logprob_q"),
-            (
-                F.sum(F.col("k") * F.col("lp_q")).cast("double")
-                / F.sum("k")
-                / F.lit(_LP_SCALE)
-            ).alias("avg_logprob"),
-        )
+    trained on the corpus itself. :func:`_jm_logprob`."""
+    return _jm_logprob(
+        spark, sf_dir, (_MIX3_TRI, _MIX3_BI, _MIX3_UNI), "n_trigrams"
     )
 
 
 # 5-way Jelinek-Mercer weights (5-gram .. unigram), the order CCNet's
 # KenLM filter actually deploys; fixed weights like the lower rungs.
 _MIX5 = (0.4, 0.25, 0.2, 0.1, 0.05)
-
-
-def _doc_ngram_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    """Per-(doc, adjacent n-token window) counts for any order — the
-    generic form of :func:`_doc_bigram_counts` / :func:`_doc_trigram_counts`
-    (kept as-is: their session-cache keys and oracle pairings predate
-    this). Columns (doc_id, w1..wn, k)."""
-    docs = table(spark, sf_dir, "documents")
-    c = tokens("text")
-    zipped = F.arrays_zip(
-        F.slice("toks", 1, F.size("toks") - (n - 1)),
-        *[F.expr(f"slice(toks, {i}, size(toks) - {n - 1})") for i in range(2, n + 1)],
-    )
-    return (
-        docs.select("doc_id", c.alias("toks"))
-        .filter(F.size("toks") >= n)
-        .select("doc_id", F.explode(zipped).alias("p"))
-        .select(
-            "doc_id", *[F.col(f"p.{i}").alias(f"w{i + 1}") for i in range(n)]
-        )
-        .groupBy("doc_id", *[f"w{i}" for i in range(1, n + 1)])
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-
-
-def _corpus_ngram_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    """Corpus-level n-gram count table — (w1..wn, c) for n >= 2,
-    (tok, c) for n = 1 — the "trained counts" artifact every ladder rung
-    consumes. Session-cached: the bigram table alone is re-derived by
-    three scorers otherwise, and the 4/5-gram tables are the dominant
-    per-run cost of the 5-gram model build. Derives from the (already
-    cached) per-doc count artifacts, so the build is ONE aggregation,
-    never a fresh corpus pass."""
-    from imdbmapreduce_spark.cache import shared_cache
-    from imdbmapreduce_spark.operators.text import _doc_token_counts
-
-    def build() -> DataFrame:
-        if n == 1:
-            return (
-                _doc_token_counts(spark, sf_dir)
-                .groupBy("tok")
-                .agg(F.sum("k").alias("c"))
-            )
-        doc_counts = {
-            2: lambda: shared_cache(
-                spark,
-                ("bigram_doc_counts", sf_dir),
-                lambda: _doc_bigram_counts(spark, sf_dir),
-            ),
-            3: lambda: shared_cache(
-                spark,
-                ("trigram_doc_counts", sf_dir),
-                lambda: _doc_trigram_counts(spark, sf_dir),
-            ),
-            4: lambda: shared_cache(
-                spark,
-                ("quadgram_doc_counts", sf_dir),
-                lambda: _doc_ngram_counts(spark, sf_dir, 4),
-            ),
-            5: lambda: shared_cache(
-                spark,
-                ("fivegram_doc_counts", sf_dir),
-                lambda: _doc_ngram_counts(spark, sf_dir, 5),
-            ),
-        }[n]()
-        keys = [f"w{i}" for i in range(1, n + 1)]
-        return doc_counts.groupBy(*keys).agg(F.sum("k").alias("c"))
-
-    return shared_cache(spark, ("corpus_ngram_counts", sf_dir, n), build)
 
 
 def _5gram_oracle() -> str:
@@ -1138,123 +977,8 @@ def doc_5gram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-5-gram log-probability under a 5-way Jelinek-Mercer interpolated
     model (0.4·P(w5|w1..w4) + 0.25·P(w5|w2..w4) + 0.2·P(w5|w3w4) +
     0.1·P(w5|w4) + 0.05·P(w5)) trained on the corpus itself — the order
-    CCNet's KenLM filter actually deploys, proving the trigram
-    docstring's claim that "every additional order is this same
-    pattern": one more count table, one more prefix table, one more
-    model join per rung.
-
-    Determinism: each conditional uses its PREFIX count so the
-    distribution sums to 1; the interpolated log-prob quantizes to 1e-6
-    per distinct corpus 5-gram — the score expression reads only the
-    5-gram's corpus-level counts, so every row of the same 5-gram
-    computes the identical double and rounds identically — and every
-    per-doc reduction is an exact integer sum both engines replay
-    bit-for-bit.
-
-    Plan (r12 optimization, guide §2.4 "remove shuffles outright"): the
-    top-order marginals c5g (count of this 5-gram) and n1234 (count of
-    its 4-prefix) are WINDOW sums over the per-doc count table itself —
-    one hash exchange on (w1..w4) serves both window partitions
-    ((w1..w5) and (w1..w4): subset-key satisfaction) and one sort by
-    (w1..w5) serves both sort requirements. The lower-order
-    conditionals join in as window-augmented count tables (each
-    carrying its own prefix sum as a window column, so no separate
-    prefix groupBy→join pair per order). vs the previous
-    build-model-table-then-shuffle-join shape this removes the 5-string-
-    key scoring shuffle join and 4 prefix-aggregation exchanges +
-    broadcast builds: measured at sf0.1/local[32] warm, 2.9–5.8 s →
-    1.4–1.9 s median with the same row-identical output, and the plan
-    drops from 8 broadcast joins + 12 exchanges to 4 joins + 5
-    exchanges (plans/r12/doc_5gram_logprob_{before,after}.txt).
-
-    Scale: the per-doc 5-gram table is the big side at 100 TB and now
-    crosses the wire ONCE (the window exchange) instead of twice
-    (model-join shuffle); the lower-order tables join exactly as
-    before (AQE picks broadcast vs shuffle from size). Per-doc
-    pre-combine caps hot-window skew exactly as in the lower rungs. No
-    UDFs, one scalar total to the driver.
-    """
-    from imdbmapreduce_spark.cache import shared_cache
-
-    l5, l4, l3, l2, l1 = _MIX5
-    pg = shared_cache(
-        spark,
-        ("fivegram_doc_counts", sf_dir),
-        lambda: _doc_ngram_counts(spark, sf_dir, 5),
-    )
-    # corpus count tables are the session-cached trained-counts
-    # artifacts (shared across the whole ladder)
-    quad = _corpus_ngram_counts(spark, sf_dir, 4).withColumnRenamed("c", "c4")
-    tri = _corpus_ngram_counts(spark, sf_dir, 3).withColumnRenamed("c", "c3")
-    big = _corpus_ngram_counts(spark, sf_dir, 2).withColumnRenamed("c", "c2")
-    uni = _corpus_ngram_counts(spark, sf_dir, 1).withColumnRenamed("c", "c1")
-    total_row = uni.agg(F.sum("c1")).first()[0]
-    if total_row is None:
-        return spark.createDataFrame(
-            [], "doc_id long, n_5grams long, logprob_q long, avg_logprob double"
-        )
-    total = float(total_row)
-
-    # each lower-order table carries its own prefix marginal as a window
-    # sum (e.g. n234 = sum of 4-gram counts sharing the first 3 words),
-    # replacing the groupBy→join prefix-table pair per order
-    quadw = quad.withColumn(
-        "n234s", F.sum("c4").over(Window.partitionBy("w1", "w2", "w3"))
-    )
-    triw = tri.withColumn("n34s", F.sum("c3").over(Window.partitionBy("w1", "w2")))
-    bigw = big.withColumn("n4s", F.sum("c2").over(Window.partitionBy("w1")))
-
-    def shift(df: DataFrame, by: int, keep: dict) -> DataFrame:
-        """Re-key a lower-order table's w1..wi onto the 5-gram's last
-        columns: w_j -> w_{j+by}, value columns renamed per ``keep``."""
-        cols = [
-            F.col(c).alias(f"w{int(c[1:]) + by}")
-            for c in df.columns
-            if c.startswith("w")
-        ] + [F.col(src).alias(dst) for src, dst in keep.items()]
-        return df.select(*cols)
-
-    return (
-        pg.withColumn(
-            "c5g", F.sum("k").over(Window.partitionBy("w1", "w2", "w3", "w4", "w5"))
-        )
-        .withColumn(
-            "n1234", F.sum("k").over(Window.partitionBy("w1", "w2", "w3", "w4"))
-        )
-        .join(
-            shift(quadw, 1, {"c4": "c2345", "n234s": "n234s"}),
-            ["w2", "w3", "w4", "w5"],
-        )
-        .join(shift(triw, 2, {"c3": "c345", "n34s": "n34s"}), ["w3", "w4", "w5"])
-        .join(shift(bigw, 3, {"c2": "c45", "n4s": "n4s"}), ["w4", "w5"])
-        .join(uni.select(F.col("tok").alias("w5"), F.col("c1").alias("c5")), "w5")
-        .select(
-            "doc_id",
-            "k",
-            F.round(
-                F.log(
-                    F.lit(l5) * (F.col("c5g").cast("double") / F.col("n1234"))
-                    + F.lit(l4) * (F.col("c2345").cast("double") / F.col("n234s"))
-                    + F.lit(l3) * (F.col("c345").cast("double") / F.col("n34s"))
-                    + F.lit(l2) * (F.col("c45").cast("double") / F.col("n4s"))
-                    + F.lit(l1) * (F.col("c5").cast("double") / F.lit(total))
-                )
-                * _LP_SCALE
-            )
-            .cast("long")
-            .alias("lp_q"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").alias("n_5grams"),
-            F.sum(F.col("k") * F.col("lp_q")).alias("logprob_q"),
-            (
-                F.sum(F.col("k") * F.col("lp_q")).cast("double")
-                / F.sum("k")
-                / F.lit(_LP_SCALE)
-            ).alias("avg_logprob"),
-        )
-    )
+    CCNet's KenLM filter actually deploys. :func:`_jm_logprob`."""
+    return _jm_logprob(spark, sf_dir, _MIX5, "n_5grams")
 
 
 # Kneser-Ney absolute-discount parameter (the standard fixed setting;
@@ -1322,66 +1046,38 @@ def doc_kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c12 >= 1 > D, all counts >= 1); quantized to 1e-6 at the model
     level, so per-doc reductions are exact integer sums.
 
-    Plan: the SAME session-cached per-(doc, bigram) counts the JM
-    scorers share; the type table and its three marginals are
-    vocab-sized aggregations; one scalar (type count) enters via a
-    driver round-trip. Scoring join on the pair, final agg on doc_id —
-    the KenLM deployment shape: model table built once, joined
-    everywhere.
-
-    Scale: identical to :func:`doc_bigram_logprob` — the model table is
-    |distinct bigrams| slim rows, marginals vocab-sized, per-doc
-    pre-combine caps skew. No UDFs.
+    Plan: the ladder's cached bigram tables (:func:`_doc_ngram_counts`,
+    :func:`_corpus_ngram_counts`); the three marginals are
+    vocabulary-sized aggregations of the type table, and the type count
+    joins as a broadcast one-row aggregate. The model table (|distinct
+    bigrams| slim rows) joins each document's bigram counts on the pair,
+    and :func:`_per_doc_score` sums per document. Distinct counts have
+    no window form, so this rung keeps the model-table join the JM rungs
+    replace with windows. No UDFs.
     """
-    from imdbmapreduce_spark.cache import shared_cache
-
-    dg = shared_cache(
-        spark,
-        ("bigram_doc_counts", sf_dir),
-        lambda: _doc_bigram_counts(spark, sf_dir),
+    big = _corpus_ngram_counts(spark, sf_dir, 2)
+    pre = big.groupBy("w1").agg(F.sum("c").alias("n1"), F.count(F.lit(1)).alias("r1"))
+    types = big.agg(F.count(F.lit(1)).cast("double").alias("n_types"))
+    cont = (
+        big.groupBy("w2")
+        .agg(F.count(F.lit(1)).alias("l2"))
+        .crossJoin(F.broadcast(types))
+        .select("w2", (F.col("l2").cast("double") / F.col("n_types")).alias("p_cont"))
     )
-    big = dg.groupBy("w1", "w2").agg(F.sum("k").alias("c12"))
-    pre = big.groupBy("w1").agg(
-        F.sum("c12").alias("n1"), F.count(F.lit(1)).alias("r1")
-    )
-    cont = big.groupBy("w2").agg(F.count(F.lit(1)).alias("l2"))
-    types_row = big.agg(F.count(F.lit(1))).first()[0]
-    if not types_row:
-        return spark.createDataFrame(
-            [], "doc_id long, n_bigrams long, logprob_q long, avg_logprob double"
-        )
-    n_types = float(types_row)
     model = (
         big.join(pre, "w1")
         .join(cont, "w2")
         .select(
             "w1",
             "w2",
-            F.round(
-                F.log(
-                    (F.col("c12").cast("double") - F.lit(_KN_D)) / F.col("n1")
-                    + (F.lit(_KN_D) * F.col("r1") / F.col("n1"))
-                    * (F.col("l2").cast("double") / F.lit(n_types))
-                )
-                * _LP_SCALE
-            )
-            .cast("long")
-            .alias("lp_q"),
+            _lp_q(
+                (F.col("c").cast("double") - F.lit(_KN_D)) / F.col("n1")
+                + (F.lit(_KN_D) * F.col("r1") / F.col("n1")) * F.col("p_cont")
+            ),
         )
     )
-    return (
-        dg.join(model, ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").alias("n_bigrams"),
-            F.sum(F.col("k") * F.col("lp_q")).alias("logprob_q"),
-            (
-                F.sum(F.col("k") * F.col("lp_q")).cast("double")
-                / F.sum("k")
-                / F.lit(_LP_SCALE)
-            ).alias("avg_logprob"),
-        )
-    )
+    scored = _doc_ngram_counts(spark, sf_dir, 2).join(model, ["w1", "w2"])
+    return _per_doc_score(scored, "n_bigrams")
 
 
 # CCNet-style perplexity bucketing: tertile cutoffs over the integer
@@ -1435,17 +1131,14 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (labels compare values, not ranks). Higher avg log-prob = lower
     perplexity = 'head'.
 
-    Scale: scoring is the ladder's model join; the cutoffs are TWO order
+    Scale: scoring is the ladder's bigram rung; the cutoffs are TWO order
     statistics (percentile_disc — at 100 TB swap for approx_percentile
     trained on a sample shard, the labeling map-pass is unchanged; CCNet
-    itself fits cutoffs on a sample). Labeling is map-only against two
-    broadcast scalars.
+    itself fits cutoffs on a sample), one aggregate row broadcast into
+    the labeling map-pass, so building the plan runs no job.
     """
-    from imdbmapreduce_spark.cache import shared_cache
-
-    # (doc_id, avg_q) is consumed by TWO actions (the cutoff aggregate
-    # and the labeling pass) — session-cache it so the bigram model join
-    # runs once, not per action.
+    # (doc_id, avg_q) feeds both the cutoff aggregate and the labeling
+    # pass — session-cache it so the bigram rung runs once per session
     s = shared_cache(
         spark,
         ("bigram_avg_q", sf_dir),
@@ -1457,21 +1150,14 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     cuts = s.agg(
-        F.expr(
-            f"percentile_disc({_PPL_Q1}) WITHIN GROUP (ORDER BY avg_q)"
-        ).alias("c1"),
-        F.expr(
-            f"percentile_disc({_PPL_Q2}) WITHIN GROUP (ORDER BY avg_q)"
-        ).alias("c2"),
-    ).first()
-    if cuts is None or cuts["c1"] is None:
-        return spark.createDataFrame([], "doc_id long, avg_q long, ppl_bucket string")
-    c1, c2 = int(cuts["c1"]), int(cuts["c2"])
-    return s.select(
+        F.expr(f"percentile_disc({_PPL_Q1}) WITHIN GROUP (ORDER BY avg_q)").alias("c1"),
+        F.expr(f"percentile_disc({_PPL_Q2}) WITHIN GROUP (ORDER BY avg_q)").alias("c2"),
+    )
+    return s.crossJoin(F.broadcast(cuts)).select(
         "doc_id",
         "avg_q",
-        F.when(F.col("avg_q") <= c1, "tail")
-        .when(F.col("avg_q") <= c2, "middle")
+        F.when(F.col("avg_q") <= F.col("c1"), "tail")
+        .when(F.col("avg_q") <= F.col("c2"), "middle")
         .otherwise("head")
         .alias("ppl_bucket"),
     )

@@ -1032,25 +1032,20 @@ _DSIR_FEATS_SQL = f"""
 
 def _dsir_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(doc, hashed-feature-bucket) counts — unigrams + bigrams
-    md5-hashed into _DSIR_B buckets. Derives from the session-cached
-    per-doc n-gram artifacts (no fresh corpus pass); session-cached
-    itself because the raw/target models and the scoring join all
-    consume it."""
-    from imdbmapreduce_spark.operators.lm import _doc_bigram_counts
-    from imdbmapreduce_spark.operators.text import _doc_token_counts
+    md5-hashed into _DSIR_B buckets. Derives from the LM ladder's
+    session-cached per-doc n-gram tables (no fresh corpus pass);
+    session-cached itself because the raw/target models and the scoring
+    join all consume it."""
+    from imdbmapreduce_spark.operators.lm import _doc_ngram_counts
 
     def bucket(g):
         return (F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long") % _DSIR_B)
 
     def build() -> DataFrame:
-        uni = _doc_token_counts(spark, sf_dir).select(
-            "doc_id", bucket(F.col("tok")).alias("b"), "k"
+        uni = _doc_ngram_counts(spark, sf_dir, 1).select(
+            "doc_id", bucket(F.col("w1")).alias("b"), "k"
         )
-        bi = shared_cache(
-            spark,
-            ("bigram_doc_counts", sf_dir),
-            lambda: _doc_bigram_counts(spark, sf_dir),
-        ).select(
+        bi = _doc_ngram_counts(spark, sf_dir, 2).select(
             "doc_id",
             bucket(F.concat_ws(" ", "w1", "w2")).alias("b"),
             "k",

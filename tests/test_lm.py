@@ -488,6 +488,67 @@ def test_ccnet_perplexity_buckets_matches_python_replay(spark, sf_dir):
     assert min(by_bucket["head"]) > max(by_bucket["tail"])
 
 
+_LM_LADDER = {
+    "doc_unigram_logprob": "n_tokens",
+    "doc_bigram_logprob": "n_bigrams",
+    "doc_trigram_logprob": "n_trigrams",
+    "doc_5gram_logprob": "n_5grams",
+    "doc_kn_bigram_logprob": "n_bigrams",
+    "ccnet_perplexity_buckets": None,
+}
+
+
+def _ladder_dtypes(name: str) -> list[tuple[str, str]]:
+    n_col = _LM_LADDER[name]
+    if n_col is None:
+        return [("doc_id", "bigint"), ("avg_q", "bigint"), ("ppl_bucket", "string")]
+    return [
+        ("doc_id", "bigint"),
+        (n_col, "bigint"),
+        ("logprob_q", "bigint"),
+        ("avg_logprob", "double"),
+    ]
+
+
+def test_lm_ladder_plans_build_without_jobs(spark, sf_dir):
+    """Once its session caches exist, building an LM query's plan runs
+    no Spark job: the corpus totals, Kneser-Ney's type count and the
+    CCNet cutoffs are broadcast one-row aggregates inside the plan, not
+    scalars fetched to the driver."""
+    sc = spark.sparkContext
+    fired = {}
+    for name in _LM_LADDER:
+        fn = registry.get(name).fn
+        fn(spark, sf_dir).collect()  # warm: builds the shared count tables
+        group = f"lm-plan-build:{name}"
+        sc.setJobGroup(group, "LM plan build")
+        try:
+            df = fn(spark, sf_dir)
+        finally:
+            fired[name] = list(sc.statusTracker().getJobIdsForGroup(group))
+            sc.setJobGroup(None, None)
+        assert df.dtypes == _ladder_dtypes(name), name
+    assert fired == {name: [] for name in _LM_LADDER}
+
+
+def test_lm_ladder_on_an_all_empty_corpus(spark, tmp_path):
+    """Documents that all tokenize empty give every LM query zero rows
+    with its usual columns and types (no early return needed: the empty
+    per-document count tables carry the empty result through)."""
+    from imdbmapreduce_spark.cache import release_shared_caches
+
+    spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "")], "doc_id long, text string"
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    try:
+        for name in _LM_LADDER:
+            df = registry.get(name).fn(spark, str(tmp_path))
+            assert df.dtypes == _ladder_dtypes(name), name
+            assert df.collect() == [], name
+    finally:
+        release_shared_caches()
+
+
 def test_unigram_tokenizer_encode_matches_python_viterbi(spark, sf_dir):
     """Full pure-Python replay of the unigram tokenizer: substring-count
     vocabulary seeding, 1e-6-quantized piece log-probs, and per-word

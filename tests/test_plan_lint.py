@@ -67,6 +67,16 @@ _BNLJ_ALLOWED = {
     # 1-row n_orders build side (r13 — the tfidf pattern: the previous
     # driver-blocking distinct().count() now enters the plan lazily)
     "order_basket_lift",
+    # the LM ladder's 1-row builds: the corpus token total (every
+    # Jelinek-Mercer rung, and ccnet's bigram scores), Kneser-Ney's
+    # bigram-type count and ccnet's two tertile cutoffs (the
+    # order_basket_lift pattern: scalars that entered by .first())
+    "doc_unigram_logprob",
+    "doc_bigram_logprob",
+    "doc_trigram_logprob",
+    "doc_5gram_logprob",
+    "doc_kn_bigram_logprob",
+    "ccnet_perplexity_buckets",
 }
 
 

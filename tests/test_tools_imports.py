@@ -45,3 +45,29 @@ def test_every_engine_import_in_tools_resolves():
                     missing.append(f"{fname}:{node.lineno} {module} {name}")
     assert seen > 10, "premise: the tools import engine helpers"
     assert not missing
+
+
+def test_no_tool_puts_a_literal_path_on_sys_path():
+    """A tool that puts a fixed checkout on ``sys.path`` imports that
+    checkout's engine even when it runs from another copy, so an A/B run
+    from a second checkout would time the wrong code. Every tool derives
+    its root from ``__file__`` instead."""
+    literal, seen = [], 0
+    for fname in sorted(f for f in os.listdir(TOOLS) if f.endswith(".py")):
+        path = os.path.join(TOOLS, fname)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            func = getattr(node, "func", None)
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(func, ast.Attribute)
+                and func.attr in ("insert", "append")
+                and ast.unparse(func.value) == "sys.path"
+            ):
+                continue
+            seen += 1
+            if any(isinstance(a, ast.Constant) and isinstance(a.value, str) for a in node.args):
+                literal.append(f"{fname}:{node.lineno}")
+    assert seen > 5, "premise: the tools put their checkout on sys.path"
+    assert not literal, f"literal sys.path entries: {literal}"

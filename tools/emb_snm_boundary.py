@@ -26,12 +26,14 @@ Usage: python tools/emb_snm_boundary.py [n ...]  (default sweep below)
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import numpy as np
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from imdbmapreduce_spark.operators.similarity import (  # noqa: E402
     _NEARDUP_THETA,

@@ -27,7 +27,7 @@ generation time:
   per supplier at both scales) while scaling nodes and edges 10x, which
   is the quantity LPA/k-core rounds are linear in.
 
-Output: /root/repo/fixtures/sf1/{documents,embeddings,supplier,
+Output: fixtures/sf1/{documents,embeddings,supplier,
 lineitem}.parquet. Deterministic (fixed seeds). Run once:
     python tools/gen_scale_corpus.py
 """
@@ -41,7 +41,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-OUT = "/root/repo/fixtures/sf1"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT = os.path.join(ROOT, "fixtures", "sf1")
 SRC = "/root/testdata/sf0.1"
 N_DOCS = 50_000
 N_VECS = 20_000
@@ -190,7 +191,7 @@ def gen_customer() -> None:
 # Zipf — most 3-gram shingles are then globally rare while a boilerplate
 # head stays hot, and tools/recall_cost_matrix.py measures both corpus
 # shapes side by side.
-OUT_ZIPF = "/root/repo/fixtures/sf1_zipf"
+OUT_ZIPF = os.path.join(ROOT, "fixtures", "sf1_zipf")
 ZIPF_VOCAB = 50_000
 ZIPF_S = 1.05
 

@@ -7,7 +7,7 @@ prints `name<TAB>pass1<TAB>pass2`. Also reports the containment joins'
 candidate-pair volumes (the quantity the df-ceiling bounds) and the
 bounded variant's recall vs the exact form at this SF.
 
-    SPARK_GRAFT_SF_DIR=/root/repo/fixtures/sf1 python tools/measure_scaling.py
+    SPARK_GRAFT_SF_DIR=fixtures/sf1 python tools/measure_scaling.py
 """
 from __future__ import annotations
 
@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 only = sys.argv[1:]

@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -135,8 +136,7 @@ def main() -> None:
     from imdbmapreduce_spark.session import get_spark
 
     dirs = sys.argv[1:] or [
-        "/root/repo/fixtures/sf1",
-        "/root/repo/fixtures/sf1_zipf",
+        os.path.join(ROOT, "fixtures", d) for d in ("sf1", "sf1_zipf")
     ]
     spark = get_spark(app_name="profile-rare-tail")
     for d in dirs:

@@ -19,9 +19,9 @@ Arms (pass names as argv to run a subset):
   snm          SNM candidate window vs the exact-jaccard truth
   minhash      MinHash LSH pairs vs the exact-jaccard truth
 
-    SPARK_GRAFT_SF_DIR=/root/repo/fixtures/sf1_zipf \
+    SPARK_GRAFT_SF_DIR=fixtures/sf1_zipf \
         python tools/recall_cost_matrix.py
-    SPARK_GRAFT_SF_DIR=/root/repo/fixtures/sf1 \
+    SPARK_GRAFT_SF_DIR=fixtures/sf1 \
         python tools/recall_cost_matrix.py jaccard ingest
 """
 from __future__ import annotations
@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from imdbmapreduce_spark import registry  # noqa: E402
 from imdbmapreduce_spark.cache import stable_checkpoint  # noqa: E402

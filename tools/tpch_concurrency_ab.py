@@ -20,7 +20,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def measure(mode: str, sf_dir: str) -> dict:

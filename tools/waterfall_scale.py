@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -151,7 +152,9 @@ def main() -> None:
     from imdbmapreduce_spark.cache import release_shared_caches
     from imdbmapreduce_spark.session import get_spark
 
-    dirs = sys.argv[1:] or ["/root/repo/fixtures/sf1", "/root/repo/fixtures/sf1_zipf"]
+    dirs = sys.argv[1:] or [
+        os.path.join(ROOT, "fixtures", d) for d in ("sf1", "sf1_zipf")
+    ]
     spark = get_spark(app_name="waterfall-scale")
     for d in dirs:
         print(json.dumps(dict(run(spark, d), load_1m=round(os.getloadavg()[0], 2))), flush=True)
